@@ -70,6 +70,13 @@ _FUNCTION_REGISTRY = (
 ).split()
 
 
+#: SparkSession -> {temp-view name: frame it is bound to}.  Temp views are
+#: session-global, so every Engine on a session shares this record and
+#: re-binds a name another Engine re-pointed.  Entries live as long as
+#: the process, like the sessions themselves.
+_BOUND: dict[SparkSession, dict[str, DataFrame]] = {}
+
+
 def _split_name(name: str, current_db: str) -> tuple[str, str]:
     if "." in name:
         db, t = name.split(".", 1)
@@ -205,10 +212,20 @@ class Engine:
         self.current_db = "default"
         os.makedirs(os.path.join(warehouse, "default"), exist_ok=True)
         self._dir_views = 0
-        #: catalog/temp-view registrations are stale after any DDL/DML (new
-        #: segments don't appear in an already-registered scan plan); pure
-        #: SELECT sequences skip the O(catalog) re-registration entirely
+        #: set by every DDL/DML statement: registered temp views may then
+        #: be stale (a registered scan plan never sees new segments), so
+        #: the next SELECT runs _register_all, which re-registers only the
+        #: relations whose on-disk identity moved.  Pure SELECT sequences
+        #: skip even that identity check.
         self._catalog_dirty = True
+        #: (kind, db, name) -> (identity, registered frame, or for the
+        #: system tables a name -> frame dict); see _register_all for the
+        #: identity of each kind
+        self._rels: dict[tuple[str, str, str], tuple[object, object]] = {}
+        #: temp-view name -> frame this engine last bound it to
+        self._mine: dict[str, DataFrame] = {}
+        #: (current db, view definitions) the SQL views were last built for
+        self._views_key: tuple | None = None
         self._in_mutation = False
         #: group id -> kill flags of that session's live streamed results;
         #: Engine.cancel sets them so a stream blocked on the client
@@ -370,35 +387,120 @@ class Engine:
         return out
 
     # ---- registration (the resolve_tables phase) ---------------------------
+    def _bind(self, vname: str, df: DataFrame) -> bool:
+        """Point temp view ``vname`` at ``df``; False (and no Spark call)
+        when it already is."""
+        bound = _BOUND.setdefault(self.spark, {})
+        self._mine[vname] = df
+        if bound.get(vname) is df:
+            return False
+        df.createOrReplaceTempView(vname)
+        bound[vname] = df
+        return True
+
+    def _cached(self, key: tuple, ident, build: Callable[[], object]):
+        """``build()`` for relation ``key``, re-run only when its identity
+        ``ident`` moved (None: re-run every time)."""
+        hit = self._rels.get(key)
+        if ident is None or hit is None or hit[0] != ident:
+            hit = (ident, build())
+            self._rels[key] = hit
+        return hit[1]
+
     def _register_all(self) -> None:
-        """Register every table and view as temp views (both bare and
-        db__qualified names).  Views are built from their stored SQL in
-        their own db context — the reference's inline semantics."""
-        self._register_system_tables()
-        for db in self.databases():
-            if db in self._SYSTEM_DBS:
-                continue
+        """Register every table, materialized view and view as temp views
+        (bare names for the current database, ``db__name`` for all).
+        Views are built from their stored SQL in their own db context —
+        the reference's inline semantics.
+
+        Only what changed is rebuilt.  ``_rels`` caches, per relation, a
+        frame under an identity; an entry is rebuilt when its identity
+        differs from the cached one:
+
+        - table scan: the declared columns and live segment dirs
+          (``FreqTable.snapshot_key``) — INSERT, DELETE and COMPACT add
+          or replace segments, DROP + CREATE resets both;
+        - MV read: the select items plus the state manifest's version and
+          bucket dirs, or the state's segments for a linear MV
+          (``MaterializedView.snapshot_key``) — REFRESH publishes a new
+          manifest or segment; an MV with no state rows has no identity
+          and is rebuilt every time, because its ``read()`` refreshes;
+        - system tables: the catalog layout (table names and columns,
+          view and MV definitions) — their rows never depend on data.
+
+        A temp view is re-pointed only when its frame changed.  SQL views
+        are rebuilt all together, in creation order, when any name was
+        re-pointed or the view definitions or current database changed: a
+        built view holds the plans of the temp views it read at build
+        time, and rebuilding all of them avoids tracking which views read
+        what through SQL text.
+        Names this engine bound whose relation is gone are dropped."""
+        dbs = [d for d in self.databases() if d not in self._SYSTEM_DBS]
+        names: dict[str, DataFrame] = {}
+
+        def offer(db: str, name: str, df: DataFrame) -> None:
+            names[f"{db}__{name}"] = df
+            if db == self.current_db:
+                names[name] = df
+
+        live = {("system", "incresql", "")}
+        columns = []
+        for db in dbs:
             for name, kind in self.tables(db):
                 if kind != "table":
                     continue
-                df = self._table(db, name).scan()
-                if db == self.current_db:
-                    df.createOrReplaceTempView(name)
-                df.createOrReplaceTempView(f"{db}__{name}")
-        for db in self.databases():
-            for mvname in self._mvs(db):
-                df = self._mv(db, mvname).read()
-                if db == self.current_db:
-                    df.createOrReplaceTempView(mvname)
-                df.createOrReplaceTempView(f"{db}__{mvname}")
-        seen: set[tuple[str, str]] = set()
-        for db in self.databases():
-            for vname in self._views(db):
-                self._register_view(db, vname, seen)
+                tbl = self._table(db, name)
+                ident = tbl.snapshot_key()
+                columns.append((db, name, ident[0]))
+                key = ("table", db, name)
+                live.add(key)
+                offer(db, name, self._cached(key, ident, tbl.scan))
+        # stored (creation) order: a view can only read views created
+        # before it, so building in this order builds dependencies first
+        views = [(db, list(self._views(db).items())) for db in dbs]
+        mvdefs = [(db, self._mvs(db)) for db in dbs]
+        for db, mdefs in mvdefs:
+            for mvname in mdefs:
+                key = ("mv", db, mvname)
+                live.add(key)
+                mv = self._mv(db, mvname)
+                offer(db, mvname,
+                      self._cached(key, mv.snapshot_key(), mv.read))
+        layout = repr((columns, views, json.dumps(mvdefs, sort_keys=True)))
+        frames = self._cached(("system", "incresql", ""), layout,
+                              self._system_frames)
+        for name, df in frames.items():
+            offer("incresql", name, df)
+        for key in set(self._rels) - live:
+            del self._rels[key]
+        view_names = {
+            n for db, vdefs in views for v, _ in vdefs
+            for n in ((f"{db}__{v}", v) if db == self.current_db
+                      else (f"{db}__{v}",))
+        }
+        rebound = False
+        for vname, df in names.items():
+            if vname not in view_names:  # a view shadows its namesake
+                rebound |= self._bind(vname, df)
+        views_key = (self.current_db, repr(views))
+        if rebound or views_key != self._views_key:
+            seen: set[tuple[str, str]] = set()
+            for db, vdefs in views:
+                for vname, _ in vdefs:
+                    self._register_view(db, vname, seen)
+            self._views_key = views_key
+        else:
+            for vname in view_names:
+                self._bind(vname, self._mine[vname])
+        bound = _BOUND.setdefault(self.spark, {})
+        for vname in set(self._mine) - names.keys() - view_names:
+            if bound.get(vname) is self._mine.pop(vname):
+                del bound[vname]
+                self.spark.catalog.dropTempView(vname)
 
-    def _register_system_tables(self) -> None:
+    def _system_frames(self) -> dict[str, DataFrame]:
         """The reference's bootstrap catalog (catalog/src/bootstrap.rs:22-66)
-        as queryable views: ``incresql.databases(name)``,
+        as queryable frames: ``incresql.databases(name)``,
         ``incresql.tables(database_name, name, type, sql, sql_context,
         table_id, columns, system)``, ``incresql.prefix_tables``.  Driver-side
         metadata only — row counts are O(catalog), never O(data)."""
@@ -425,45 +527,40 @@ class Engine:
                     )
                     trows.append((db, name, "table", None, None, None, cols, False))
         prows = [(tid, None, None) for _, tid in sorted(self._SYSTEM_TABLES.items())]
-        for df, name in (
-            (spark.createDataFrame(dbs, "name string"), "databases"),
-            (
-                spark.createDataFrame(
-                    trows,
-                    "database_name string, name string, type string, sql string,"
-                    " sql_context string, table_id bigint, columns string,"
-                    " system boolean",
-                ),
-                "tables",
+        return {
+            "databases": spark.createDataFrame(dbs, "name string"),
+            "tables": spark.createDataFrame(
+                trows,
+                "database_name string, name string, type string, sql string,"
+                " sql_context string, table_id bigint, columns string,"
+                " system boolean",
             ),
-            (
-                spark.createDataFrame(
-                    prows, "table_id bigint, column_len int, pk_sort string"
-                ),
-                "prefix_tables",
+            "prefix_tables": spark.createDataFrame(
+                prows, "table_id bigint, column_len int, pk_sort string"
             ),
-        ):
-            if self.current_db == "incresql":
-                df.createOrReplaceTempView(name)
-            df.createOrReplaceTempView(f"incresql__{name}")
+        }
 
     def _register_bare(self, db: str) -> None:
-        """Point bare (unqualified) temp-view names at ``db``'s tables —
+        """Point bare (unqualified) temp-view names at ``db``'s relations —
         the reference resolves a view's bare names in the view's own
-        context database (resolve_tables.rs:34-61)."""
+        context database (resolve_tables.rs:34-61).  Reuses the frames of
+        the current ``_register_all`` pass."""
         if db in self._SYSTEM_DBS:
-            self._register_system_tables()
+            if db == "incresql":
+                system = self._rels[("system", "incresql", "")][1]
+                for name, df in system.items():
+                    self._bind(name, df)
             return
         for name, kind in self.tables(db):
             if kind == "table":
-                self._table(db, name).scan().createOrReplaceTempView(name)
+                self._bind(name, self._rels[("table", db, name)][1])
             else:
                 try:
-                    self.spark.table(f"{db}__{name}").createOrReplaceTempView(name)
+                    self._bind(name, self.spark.table(f"{db}__{name}"))
                 except Exception:
                     pass  # dependent view not registered yet
         for mvname in self._mvs(db):
-            self._mv(db, mvname).read().createOrReplaceTempView(mvname)
+            self._bind(mvname, self._rels[("mv", db, mvname)][1])
 
     def _register_view(self, db: str, name: str, seen: set) -> None:
         if (db, name) in seen:
@@ -489,8 +586,8 @@ class Engine:
                 self.current_db = saved
                 self._register_bare(saved)
         if db == self.current_db:
-            df.createOrReplaceTempView(name)
-        df.createOrReplaceTempView(f"{db}__{name}")
+            self._bind(name, df)
+        self._bind(f"{db}__{name}", df)
 
     #: tokens after ``FROM db.tbl`` that are clauses, not aliases
     _NON_ALIAS = frozenset(

@@ -30,12 +30,14 @@ directory lives on object storage and the same code runs unchanged.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,8 +91,18 @@ def _observed_metric(obs: Observation, key: str, default):
         raise
 
 
+@functools.lru_cache(maxsize=None)
+def _ddl_json(s: str) -> str:
+    """Spark's JSON form of a DDL type string.  The JVM parse is a pure
+    function of the string, so one py4j round trip per distinct type
+    serves every later ``schema()`` call."""
+    return SparkContext._active_spark_context._jvm.PythonSQLUtils.ddlToJson(s)
+
+
 def _type_from_str(s: str) -> T.DataType:
-    return T._parse_datatype_string(s)
+    # rebuilt in Python on every call: callers get their own object and
+    # never share a mutable StructType
+    return T._parse_datatype_json_string(_ddl_json(s))
 
 
 class FreqTable:
@@ -774,3 +786,11 @@ class FreqTable:
         """Latest segment sequence number (-1 when the table is empty)."""
         segs = self._segments()
         return max((s["seq"] for s in segs), default=-1)
+
+    def snapshot_key(self) -> tuple:
+        """``(declared columns, live segment dirs)`` — what a latest
+        ``scan()`` reads.  Segment dirs are immutable and uniquely named,
+        so an equal key means an equal scan; metadata only, no Spark."""
+        with open(self._schema_path) as fh:
+            columns = tuple(tuple(c) for c in json.load(fh)["columns"])
+        return columns, tuple(s["dir"] for s in self._segments())

@@ -372,10 +372,18 @@ class AggState:
                     shutil.rmtree(p, ignore_errors=True)
         tag = uuid.uuid4().hex[:8]
         stage = os.path.join(self.path, f"stage-{nxt}-{tag}")
+        # One shuffle over O(touched-bucket) rows.  Hash-partitioning on
+        # __bkt sends every row of a bucket to the same task, so
+        # partitionBy still writes exactly one file per bucket; capping
+        # the task count at the core count keeps a wide refresh from
+        # paying one task launch and one tiny output commit per bucket
+        # (local[4] on a 4-core Xeon, 64 buckets, 300 rows: median
+        # 1.2-1.5 s with 64 tasks, 0.5-0.7 s with 4).
+        parts = min(len(touched),
+                    self.spark.sparkContext.defaultParallelism)
         (
             merged.withColumn("__bkt", self.bucket_expr(keys, merged))
-            # one shuffle over O(touched-bucket) rows → one file per bucket
-            .repartition(max(len(touched), 1), F.col("__bkt"))
+            .repartition(max(parts, 1), F.col("__bkt"))
             .write.partitionBy("__bkt")
             .mode("overwrite")
             .parquet(stage)
@@ -940,10 +948,14 @@ class MaterializedView:
                             # unstarted, else retrieve its exception and
                             # chain it so a concurrent changelog failure
                             # is surfaced instead of discarded by the
-                            # pool exit (r19 advice)
+                            # pool exit.  When pre_publish
+                            # itself re-raised the changelog failure,
+                            # staging_exc IS that error: chaining it
+                            # would make it its own cause.
                             if not fut.cancel():
                                 log_exc = fut.exception()
-                                if log_exc is not None:
+                                if (log_exc is not None
+                                        and log_exc is not staging_exc):
                                     raise staging_exc from log_exc
                             raise
                 else:
@@ -1016,6 +1028,22 @@ class MaterializedView:
                              for f in schema.fields)
             self._read_schema_cache = schema if stable else None
         return self._read_schema_cache
+
+    def snapshot_key(self) -> tuple | None:
+        """What ``read()`` returns right now, as metadata: the select
+        items plus the state manifest's version and bucket dirs
+        (aggregate; bucket version dirs are writer-unique) or the state
+        table's segments (linear).  None while the state holds nothing,
+        because ``read()`` then refreshes and may see new base rows."""
+        if self.is_aggregate:
+            m = self.state._load_manifest()
+            if m is None or not m["buckets"]:
+                return None
+            return (repr(self.items), m["version"],
+                    tuple(sorted(m["buckets"].items())))
+        if not self.state.exists():
+            return None
+        return repr(self.items), self.state.snapshot_key()
 
     def read(self) -> DataFrame:
         """The materialized result (finalizing avg = sum/count)."""

@@ -75,6 +75,18 @@ def get_spark(app_name: str = "incresql_spark", cpus: int | None = None) -> Spar
             # per-task overhead against object-store request counts.
             .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
             .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+            # Local-mode file listing: a read of more than 32 paths (the
+            # default threshold) lists them in a Spark job, and a full
+            # read of an aggregate MV's 64-bucket state is 64 paths.
+            # Measured at local[4] on a 4-core Xeon: building that read
+            # takes a median 0.33-0.49 s with the listing job, 0.04-0.06 s
+            # listing on the driver.  Raised above the bucket layout (and
+            # typical segment counts) so state and table reads list on the
+            # driver.  Deliberately NOT set on the cluster path: there
+            # paths live on object storage, where a parallel listing job
+            # is the fast way to list many of them.
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                    "1024")
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

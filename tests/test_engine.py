@@ -223,3 +223,194 @@ def test_embedded_collect_fence(engine, spark):
         assert [v for (v,) in res.rows] == list(range(10))
     finally:
         spark.conf.unset(EMBEDDED_MAX_COLLECT_CONF)
+
+
+# ---- registration cache: only relations whose on-disk identity moved are
+# re-registered, and every kind of change still reaches the next SELECT
+def rows(e: Engine, sql: str) -> list[tuple]:
+    return sorted(e.execute_statement(sql).rows)
+
+
+def test_registration_sees_table_dml(engine):
+    e = engine
+    e.execute_statement("CREATE TABLE rc (k INT, v INT)")
+    e.execute_statement("INSERT INTO rc VALUES (1, 10), (2, 20)")
+    assert rows(e, "SELECT * FROM rc") == [(1, 10), (2, 20)]
+    e.execute_statement("INSERT INTO rc VALUES (3, 30), (3, 30)")
+    assert rows(e, "SELECT * FROM rc") == [(1, 10), (2, 20), (3, 30), (3, 30)]
+    e.execute_statement("DELETE FROM rc WHERE k = 2")
+    assert rows(e, "SELECT * FROM rc") == [(1, 10), (3, 30), (3, 30)]
+    e.execute_statement("DELETE FROM rc LIMIT 2")
+    assert rows(e, "SELECT * FROM rc") == [(3, 30)]
+    e.execute_statement("INSERT INTO rc VALUES (4, 40)")
+    e.execute_statement("COMPACT TABLE rc")
+    assert len(e._table("default", "rc")._segments()) == 1
+    assert rows(e, "SELECT * FROM rc") == [(3, 30), (4, 40)]
+    # same name, different schema: the old scan must not survive
+    e.execute_statement("DROP TABLE rc")
+    e.execute_statement("CREATE TABLE rc (s TEXT)")
+    r = e.execute_statement("SELECT * FROM rc")
+    assert r.columns == ["s"] and r.rows == []
+    e.execute_statement("INSERT INTO rc VALUES ('x')")
+    assert rows(e, "SELECT * FROM rc") == [("x",)]
+    assert rows(e, "SELECT name FROM incresql.tables WHERE name = 'rc'") == [
+        ("rc",)
+    ]
+    cols = e.execute_statement(
+        "SELECT columns FROM incresql.tables WHERE name = 'rc'").rows
+    assert cols == [('[["s", "string"]]',)]
+
+
+def test_registration_sees_views_and_mvs(engine):
+    e = engine
+    e.execute_statement("CREATE TABLE rb (k INT, v INT)")
+    e.execute_statement("INSERT INTO rb VALUES (1, 1), (1, 2), (2, 5)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW rm AS SELECT k, count(*) AS n, sum(v) AS s"
+        " FROM rb GROUP BY k")
+    e.execute_statement("CREATE VIEW rv AS SELECT k, v FROM rb WHERE k > 1")
+    assert rows(e, "SELECT * FROM rm") == [(1, 2, 3), (2, 1, 5)]
+    assert rows(e, "SELECT * FROM rv") == [(2, 5)]
+    e.execute_statement("INSERT INTO rb VALUES (2, 7), (3, 1)")
+    # the view re-inlines the new base rows; the MV waits for REFRESH
+    assert rows(e, "SELECT * FROM rv") == [(2, 5), (2, 7), (3, 1)]
+    assert rows(e, "SELECT * FROM rm") == [(1, 2, 3), (2, 1, 5)]
+    e.execute_statement("REFRESH MATERIALIZED VIEW rm")
+    assert rows(e, "SELECT * FROM rm") == [(1, 2, 3), (2, 2, 12), (3, 1, 1)]
+    e.execute_statement("DROP VIEW rv")
+    with pytest.raises(Exception):
+        e.execute_statement("SELECT * FROM rv")
+    e.execute_statement("DROP MATERIALIZED VIEW rm")
+    with pytest.raises(Exception):
+        e.execute_statement("SELECT * FROM rm")
+    # recreated under the same names with other definitions
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW rm AS SELECT count(*) AS n FROM rb")
+    e.execute_statement("CREATE VIEW rv AS SELECT v FROM rb WHERE k = 1")
+    assert rows(e, "SELECT * FROM rm") == [(5,)]
+    assert rows(e, "SELECT * FROM rv") == [(1,), (2,)]
+
+
+def test_registration_use_switches_bare_names(engine):
+    e = engine
+    e.execute_statement("CREATE TABLE ru (a INT)")
+    e.execute_statement("INSERT INTO ru VALUES (1)")
+    e.execute_statement("CREATE TABLE only_default (a INT)")
+    e.execute_statement("CREATE DATABASE other")
+    e.execute_statement("CREATE TABLE other.ru (a INT)")
+    e.execute_statement("INSERT INTO other.ru VALUES (2)")
+    assert rows(e, "SELECT * FROM ru") == [(1,)]
+    e.execute_statement("USE other")
+    assert rows(e, "SELECT * FROM ru") == [(2,)]
+    assert rows(e, "SELECT * FROM default.ru") == [(1,)]
+    with pytest.raises(Exception):  # bare names of default are gone
+        e.execute_statement("SELECT * FROM only_default")
+    e.execute_statement("USE default")
+    assert rows(e, "SELECT * FROM ru") == [(1,)]
+
+
+def _spy_registration(monkeypatch):
+    """Record which tables ``FreqTable.scan`` and which views
+    ``MaterializedView.read`` are called for.  Scans a view's ``read``
+    makes of its base tables (to derive its schema) are part of that
+    read, not registrations of their own."""
+    import os
+
+    from incresql_spark.frequency import FreqTable
+    from incresql_spark.materialize import MaterializedView
+
+    calls: list[tuple[str, str]] = []
+    in_read = [0]
+    scan, read = FreqTable.scan, MaterializedView.read
+
+    def spy_scan(self, *a, **k):
+        if not in_read[0]:
+            calls.append(("scan", os.path.basename(self.path)))
+        return scan(self, *a, **k)
+
+    def spy_read(self, *a, **k):
+        calls.append(("read", self.name))
+        in_read[0] += 1
+        try:
+            return read(self, *a, **k)
+        finally:
+            in_read[0] -= 1
+
+    monkeypatch.setattr(FreqTable, "scan", spy_scan)
+    monkeypatch.setattr(MaterializedView, "read", spy_read)
+    return calls
+
+
+def test_registration_rebuilds_only_the_changed_relation(engine, monkeypatch):
+    e = engine
+    for t in ("ra", "rz"):
+        e.execute_statement(f"CREATE TABLE {t} (k INT, v INT)")
+        e.execute_statement(f"INSERT INTO {t} VALUES (1, 1), (2, 2)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW rzm AS SELECT k, count(*) AS n FROM rz"
+        " GROUP BY k")
+    assert rows(e, "SELECT * FROM ra") == [(1, 1), (2, 2)]
+    calls = _spy_registration(monkeypatch)
+    e.execute_statement("INSERT INTO ra VALUES (3, 3)")
+    # INSERT … VALUES registers before its write: nothing had moved yet
+    assert calls == []
+    assert rows(e, "SELECT * FROM ra") == [(1, 1), (2, 2), (3, 3)]
+    assert calls == [("scan", "ra")]
+    del calls[:]
+    e.execute_statement("INSERT INTO rz VALUES (3, 3)")
+    e.execute_statement("REFRESH MATERIALIZED VIEW rzm")
+    del calls[:]
+    assert rows(e, "SELECT * FROM rzm") == [(1, 1), (2, 1), (3, 1)]
+    assert sorted(calls) == [("read", "rzm"), ("scan", "rz")]
+
+
+def test_reregistering_64_bucket_mv_runs_no_spark_job(engine, spark,
+                                                      monkeypatch):
+    """A full read of an aggregate MV lists its 64 bucket dirs; in local
+    mode that listing must run on the driver, not as a Spark job."""
+    e = engine
+    e.execute_statement("CREATE TABLE rj (k INT, v INT)")
+    e.execute_statement(
+        "INSERT INTO rj SELECT CAST(id AS INT), 1 FROM range(400)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW rjm AS SELECT k, count(*) AS n FROM rj"
+        " GROUP BY k")
+    e.execute_statement("SELECT * FROM rjm")
+    e.execute_statement("INSERT INTO rj VALUES (7, 1)")
+    e.execute_statement("REFRESH MATERIALIZED VIEW rjm")
+    manifest = e._mv("default", "rjm").state._load_manifest()
+    assert len(manifest["buckets"]) == 64
+    calls = _spy_registration(monkeypatch)
+    sc = spark.sparkContext
+    group = "test-reregister-64-buckets"
+    sc.setJobGroup(group, "re-register a 64-bucket MV")
+    try:
+        e._register_all()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert ("read", "rjm") in calls
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows(e, "SELECT n FROM rjm WHERE k = 7") == [(2,)]
+
+
+def test_registration_view_over_view(engine, spark):
+    """Views are rebuilt in creation order, so a view reads the rebuilt
+    view beneath it — also when its name sorts first."""
+    e = engine
+    e.execute_statement("CREATE TABLE rt (k INT)")
+    e.execute_statement("INSERT INTO rt VALUES (1)")
+    e.execute_statement("CREATE VIEW zv AS SELECT k FROM rt")
+    e.execute_statement("CREATE VIEW av AS SELECT k FROM zv")
+    assert rows(e, "SELECT * FROM av") == [(1,)]
+    e.execute_statement("INSERT INTO rt VALUES (2)")
+    assert rows(e, "SELECT * FROM av") == [(1,), (2,)]
+    assert rows(e, "SELECT * FROM zv") == [(1,), (2,)]
+    # a new engine on the same warehouse (a restarted server) starts with
+    # none of the views registered
+    for name in ("zv", "av", "default__zv", "default__av"):
+        spark.catalog.dropTempView(name)
+    e2 = Engine(spark, e.warehouse)
+    assert rows(e2, "SELECT * FROM av") == [(1,), (2,)]
+    e2.execute_statement("INSERT INTO rt VALUES (3)")
+    assert rows(e2, "SELECT * FROM av") == [(1,), (2,), (3,)]

@@ -390,3 +390,17 @@ def test_observed_metric_message_fallback_when_probe_unavailable():
         assert "connection reset" in str(got)
     else:
         raise AssertionError("expected re-raise")
+
+
+def test_type_from_str_is_memoized_and_unshared(spark):
+    """schema() parses every column type on every call: after the first
+    parse of a type string no py4j call is made, and each call still
+    returns its own DataType object."""
+    from incresql_spark import frequency
+
+    for s in ("decimal(12,2)", "array<string>", "struct<a:int,b:string>"):
+        first = frequency._type_from_str(s)
+        hits = frequency._ddl_json.cache_info().hits
+        again = frequency._type_from_str(s)
+        assert frequency._ddl_json.cache_info().hits == hits + 1
+        assert again == first and again is not first

@@ -1536,3 +1536,94 @@ def test_pipelined_prepare_commit_equals_serial_refresh(spark, tmp_path):
         fut.result()
     got = sorted(tuple(r) for r in mv2.read().collect())
     assert got == want and len(got) == 3
+
+
+def test_changelog_failure_in_cascade_source_is_not_its_own_cause(
+    engine, monkeypatch
+):
+    """A failed changelog write of a cascade source reaches the caller
+    through write_buckets' pre_publish barrier, so the staging handler
+    sees that same exception again.  It must re-raise it as is, not
+    chained to itself; neither the state manifest nor any cursor
+    advances, and the next refresh matches a from-scratch recompute."""
+    e = engine
+    e.execute_statement("CREATE TABLE cs (g TEXT, v INT)")
+    e.execute_statement("INSERT INTO cs VALUES ('a', 1), ('b', 2)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW cs_src AS "
+        "SELECT g, count(*) AS n, sum(v) AS s FROM cs GROUP BY g")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW cs_top AS "
+        "SELECT count(*) AS groups, sum(s) AS total FROM cs_src")
+    e.execute_statement("INSERT INTO cs VALUES ('a', 10), ('c', 3)")
+    e.execute_statement("DELETE FROM cs WHERE g = 'b'")
+    src = e._mv("default", "cs_src")
+    before = src.state._load_manifest()
+    meta_before = src._load_meta()
+    log_before = src._changelog_cursor()
+    real = FreqTable._write_segment
+
+    def failing(self, *a, **k):
+        if self.path == src.changelog.path:
+            raise RuntimeError("simulated changelog write failure")
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(FreqTable, "_write_segment", failing)
+    with pytest.raises(RuntimeError, match="changelog write failure") as info:
+        e.execute_statement("REFRESH MATERIALIZED VIEW cs_src")
+    assert info.value.__cause__ is not info.value
+    after = src.state._load_manifest()
+    assert after["version"] == before["version"]
+    assert after["cursor"] == before["cursor"]
+    assert src._load_meta() == meta_before
+    assert src._changelog_cursor() == log_before
+
+    monkeypatch.setattr(FreqTable, "_write_segment", real)
+    e.execute_statement("REFRESH MATERIALIZED VIEW cs_top")  # cascades
+    assert rows(e, "SELECT * FROM cs_src") == rows(
+        e, "SELECT g, count(*), sum(v) FROM cs GROUP BY g")
+    assert rows(e, "SELECT * FROM cs_top") == rows(
+        e, "SELECT count(*), sum(s) FROM "
+           "(SELECT g, sum(v) AS s FROM cs GROUP BY g) AS x")
+
+
+def test_write_buckets_one_file_per_bucket_with_fewer_tasks(
+    spark, tmp_path, monkeypatch
+):
+    """write_buckets runs at most defaultParallelism tasks.  With more
+    touched buckets than that it still publishes exactly one parquet
+    file per touched bucket, still refuses a frame holding rows of an
+    untouched bucket, and leaves the same rows as one task per bucket."""
+    import glob
+    import os
+
+    from pyspark import SparkContext
+
+    from incresql_spark.materialize import AggState
+
+    df = spark.range(300).selectExpr("CAST(id AS INT) AS k",
+                                     "CAST(1 AS BIGINT) AS __cnt")
+
+    def write(path):
+        st = AggState(spark, path, num_buckets=64)
+        touched = sorted(r[0] for r in df.select(
+            st.bucket_expr(["k"])).distinct().collect())
+        st.write_buckets(df, ["k"], touched)
+        return st, touched
+
+    st, touched = write(str(tmp_path / "capped"))
+    assert len(touched) > spark.sparkContext.defaultParallelism
+    m = st._load_manifest()
+    assert sorted(int(b) for b in m["buckets"]) == touched
+    for path in st._bucket_paths(m):
+        assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1, path
+    with pytest.raises(AssertionError, match="outside touched buckets"):
+        st.write_buckets(df, ["k"], touched[:3])
+
+    # uncapped: one task per touched bucket
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 10_000))
+    per_bucket, _ = write(str(tmp_path / "per_bucket"))
+    monkeypatch.undo()
+    assert sorted(st.read().collect()) == sorted(per_bucket.read().collect())
+    assert st._load_manifest()["version"] == m["version"]  # guard published nothing
