@@ -39,9 +39,11 @@ import os
 import re
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, StructType
 
 from . import commit
 from .frequency import FREQ, FreqTable
@@ -50,6 +52,30 @@ _AGG_RE = re.compile(
     r"^\s*(count|sum|avg)\s*\(\s*(\*|.+?)\s*\)\s+AS\s+(\w+)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+
+
+def _worker_pools(spark: SparkSession, n: int) -> list[ThreadPoolExecutor]:
+    """``n`` single-worker pools whose threads run like the calling thread
+    on the JVM side: under its local properties (job group, description),
+    so an engine KILL of the statement cancels the workers' jobs too and
+    session accounting sees them tagged, and with its active session, so
+    pyspark calls on a worker do not fall back to ``getOrCreate`` round
+    trips.  Each thread gets its own copy of the properties, cloned here
+    on the caller (Spark sets per-query keys on a thread's properties
+    object), and sets both once when it starts: a handful of py4j calls
+    per pool, where ``pyspark.inheritable_thread_target``'s per-call
+    pinned-connection churn measured ~0.9s per cascade cycle."""
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties()
+    jvm_session = spark.sparkContext._jvm.SparkSession
+
+    def start(own_props) -> None:
+        jsc.setLocalProperties(own_props)
+        jvm_session.setActiveSession(spark._jsparkSession)
+
+    return [ThreadPoolExecutor(max_workers=1, initializer=start,
+                               initargs=(props.clone(),))
+            for _ in range(n)]
 
 
 def _parse_select_items(select_list: str) -> list[tuple[str, str, str]]:
@@ -519,6 +545,8 @@ class MaterializedView:
         # lazily-derived stable read schema (False = not derived yet; None
         # = decimal state, keep inferred reads) — see _state_read_schema
         self._read_schema_cache: object = False
+        # end of the last prepared window (None: the committed cursor)
+        self._prepared = None
 
     # -- metadata ------------------------------------------------------------
     def _load_meta(self) -> dict:
@@ -576,7 +604,10 @@ class MaterializedView:
         return grouped.agg(*aggs)
 
     # -- refresh -------------------------------------------------------------
-    def _state_cursor(self) -> int:
+    #: meta-file key of the committed refresh cursor
+    _META_CURSOR = "last_refresh_seq"
+
+    def _state_cursor(self):
         """The refresh cursor the STATE itself carries — committed
         atomically with each state mutation, so a crash between the state
         commit and ``_save_meta`` cannot make the next refresh re-apply
@@ -589,9 +620,66 @@ class MaterializedView:
             default=-1,
         )
 
-    def refresh(self, until: int | None = None) -> int:
+    def _fresh_cursor(self):
+        """The cursor of a view that never refreshed (seqs start at 0)."""
+        return -1
+
+    def _bound(self, until=None):
+        """A window's upper cursor: ``until``, else the base's latest seq."""
+        return self.base.last_seq() if until is None else until
+
+    def _delta(self, since, now) -> tuple[DataFrame | None, list[DataFrame]]:
+        """The signed delta of window (since, now] — None when it is
+        structurally empty — plus the persisted subplans to unpersist
+        once it is evaluated."""
+        return self.base.delta(since, now), []
+
+    def _committed_cursor(self):
+        """Where the last committed refresh ended.  The cursor is the base
+        table's monotonic segment seq (NOT wall clock — same-ms segments
+        must not be skipped); old metas carrying only last_refresh_ms are
+        treated as never-refreshed.  The state's own atomically-committed
+        cursor wins over a stale meta file (the crash-between-commit-and-
+        meta window)."""
+        meta = self._load_meta().get(self._META_CURSOR, self._fresh_cursor())
+        return self._cursor_max(meta, self._state_cursor())
+
+    def _since(self):
+        """The prepared-through cursor: the committed cursor until the
+        first ``prepare``, then the end of the last prepared window."""
+        if self._prepared is None:
+            self._prepared = self._committed_cursor()
+        return self._prepared
+
+    def windows(self, until=None) -> list:
+        """The window ends a refresh through ``until`` consumes, in order,
+        from the prepared-through cursor.
+
+        Torn transition: the changelog committed a segment for a window
+        whose state commit never landed.  New base ingest may have
+        arrived since, so replaying straight to ``until`` would log a
+        SECOND, overlapping old→newer transition on top of the recorded
+        old→mid one (double-counting every downstream cascade).  The
+        EXACT logged window therefore comes first — same old state + same
+        delta window ⇒ the same deterministic merge, and the cursor guard
+        in _emit_changelog skips the duplicate append — and the remainder
+        follows as a normal window that logs mid→new."""
+        since, ends = self._since(), []
+        if self.changelog is not None:
+            logged = self._changelog_cursor()
+            if not self._cursor_ge(since, logged):
+                since = self._cursor_max(since, logged)
+                ends.append(since)
+        now = self._bound(until)
+        if not self._cursor_ge(since, now):
+            ends.append(now)
+        return ends
+
+    def refresh(self, until=None) -> int:
         """Incremental refresh: pull base-table deltas since the last
-        refresh, propagate, merge.  Returns the number of delta rows
+        refresh, propagate, merge — ``commit(prepare(w))`` over
+        ``windows(until)``, from the committed cursor (the crash-
+        recovering entry point).  Returns the number of delta rows
         consumed — for AGGREGATE views this is the post-WHERE count (the
         fused delta job counts what it aggregates; a delta whose rows all
         miss the view's filter reports 0), for linear views the raw
@@ -605,47 +693,137 @@ class MaterializedView:
         refresh had to process", not a cross-shape invariant (also
         flagged in COVERAGE.md round-17).
 
-        ``until`` (r18) pins the window's upper seq bound instead of
-        ``base.last_seq()``.  Pipelined cycle drivers (guide §2.6) use it
-        to run a refresh CONCURRENTLY with the next wave's ingest while
-        keeping consumption deterministic: the refresh consumes exactly
-        the segments committed when the bound was snapshotted, never a
-        racily-committed newer one.  Window composition makes the final
-        state identical either way (the batched-refresh contract); the
-        bound just keeps per-wave consumption reproducible."""
+        ``until`` pins the window's upper bound instead of the base's
+        latest seq, so a refresh running concurrently with the next
+        ingest consumes exactly the segments committed when the bound
+        was taken.  Window composition makes the final state identical
+        either way (the batched-refresh contract); the bound just keeps
+        per-wave consumption reproducible."""
+        self._prepared = None
+        return sum(self.commit(self.prepare(w)) for w in self.windows(until))
+
+    def prepare(self, until=None) -> dict:
+        """The READ half of refreshing the window (prepared-through,
+        ``until``]: returns a handle for ``commit`` and advances the
+        prepared-through cursor to ``until``.
+
+        For aggregate views this is the fused delta job (r15 verdict task
+        7 + r18): the delta scan/join and the per-group aggregation run in
+        one job with the row count riding along as ``__nrows``; the bucket
+        id is computed on the SAME cached frame so one ``groupBy(__bkt)``
+        collect yields both the total and the touched buckets — one
+        driver action, ≤ num_buckets rows collected.  It reads base
+        segments pinned at explicit seqs and never this view's state, so
+        it may run concurrently with the PREVIOUS window's ``commit``.
+        Linear views have nothing to prepare: their commit is the one
+        observed segment write."""
+        since, now = self._since(), self._bound(until)
+        handle = {"since": since, "cursor": now, "delta_state": None,
+                  "per_bkt": [], "pinned": []}
+        if self._cursor_ge(since, now):
+            handle["cursor"] = None  # empty window: nothing to commit
+            return handle
+        if self.is_aggregate:
+            try:
+                delta, handle["pinned"] = self._delta(since, now)
+                if delta is not None:
+                    self._prepare_agg(handle, delta)
+            except BaseException:
+                self.release(handle)
+                self._prepared = None
+                raise
+        self._prepared = now
+        return handle
+
+    def _prepare_agg(self, handle: dict, delta: DataFrame) -> None:
+        st = self.state
+        # pin the bucket count from the manifest BEFORE bucketing the
+        # delta — a session whose conf differs from an existing state's
+        # layout must hash the delta with the layout's count, not its
+        # own (the count is fixed at state creation, so a still-running
+        # previous commit cannot change what this reads)
+        st._load_manifest()
+        delta_state = self._delta_agg(delta, with_rows=True)
+        keys = [c for c in delta_state.columns if not c.startswith("__")]
+        # the state's schema: the delta's, less the refresh-local row count
+        handle["schema"] = StructType([f for f in delta_state.schema.fields
+                                       if f.name != "__nrows"])
+        handle["delta_state"] = delta_state = delta_state.withColumn(
+            "__bkt", st.bucket_expr(keys, delta_state)
+        ).persist()
+        handle["per_bkt"] = (
+            delta_state.groupBy("__bkt")
+            .agg(F.sum("__nrows").alias("__n"))
+            .collect()
+        )
+
+    def commit(self, handle: dict) -> int:
+        """The WRITE half: merge a ``prepare`` handle into the state (and
+        emit the changelog), then advance the committed cursor.  Must run
+        after the previous window's commit — each merge reads the state
+        the previous one committed.  Returns the window's delta row count,
+        as ``refresh`` does."""
+        now = handle["cursor"]
+        if now is None:
+            return 0
+        try:
+            if self.is_aggregate:
+                n = int(sum(r["__n"] for r in handle["per_bkt"]))
+                if n:
+                    self._merge_agg(
+                        handle["delta_state"].drop("__nrows", "__bkt"),
+                        handle["schema"], cursor={"cursor": now},
+                        touched=sorted(r["__bkt"] for r in handle["per_bkt"]),
+                    )
+            else:
+                n = self._append_linear(handle["since"], now)
+        except BaseException:
+            self._prepared = None
+            raise
+        finally:
+            self.release(handle)
         meta = self._load_meta()
-        # the cursor is the base table's monotonic segment seq (NOT wall
-        # clock — same-ms segments must not be skipped); old metas carrying
-        # only last_refresh_ms are treated as never-refreshed.  The state's
-        # own atomically-committed cursor wins over a stale meta file (the
-        # crash-between-commit-and-meta window).
-        since = max(meta.get("last_refresh_seq", -1), self._state_cursor())
-        now = self.base.last_seq() if until is None else until
-        total = 0
-        if self.changelog is not None:
-            logged = self._changelog_cursor()
-            if logged > since:
-                # Torn transition: the changelog committed a segment for a
-                # window whose state commit never landed.  New base ingest
-                # may have arrived since, so replaying straight to ``now``
-                # would log a SECOND, overlapping old→newer transition on
-                # top of the recorded old→mid one (double-counting every
-                # downstream cascade).  Complete the EXACT logged window
-                # first — same old state + same delta window ⇒ the same
-                # deterministic merge, and the ``applied >= now`` guard in
-                # _emit_changelog skips the duplicate append — then consume
-                # the remainder as a normal refresh that logs mid→new.
-                total += self._refresh_window(since, logged, meta)
-                since = logged
-        if now > since:
-            total += self._refresh_window(since, now, meta)
-        return total
+        meta[self._META_CURSOR] = now
+        self._save_meta(meta)
+        return n
+
+    def release(self, handle: dict) -> None:
+        """Unpersist what ``prepare`` pinned: ``commit`` does this itself;
+        a handle that will never be committed needs it explicitly."""
+        for df in [handle["delta_state"], *handle["pinned"]]:
+            if df is not None:
+                df.unpersist()
+        handle["delta_state"], handle["pinned"] = None, []
+
+    def _append_linear(self, since: int, now: int) -> int:
+        """Linear-view commit: append the filtered, projected window to the
+        state FreqTable.  A cheap limit-1 job decides emptiness (an empty
+        refresh creates neither state nor segment), the FULL count rides
+        the segment write as an Observation metric, and for insert-only
+        windows the sign is derived statically from segment metadata
+        (window_all_nonnegative), so no probe job runs."""
+        delta = self.base.delta(since, now)
+        if delta.limit(1).count() == 0:
+            return 0
+        if not self.state.exists():
+            self.state.create(self._apply_linear(delta).drop(FREQ).schema)
+        obs = Observation()
+        return int(self.state._write_segment(
+            self._apply_linear(
+                delta.observe(obs, F.count(F.lit(1)).alias("__n"))
+            ),
+            has_negative=(
+                False if self.base.window_all_nonnegative(since, now) else None
+            ),
+            extra_meta={"mv_cursor": now},
+            abort_observation=(obs, "__n"),
+        ))
 
     def _changelog_cursor(self):
         """Highest refresh cursor the changelog has a committed segment
         for (-1 when absent) — compared against the state's own cursor to
         detect a transition whose changelog landed but whose state commit
-        did not (see ``refresh`` / ``_emit_changelog``).  Single-base
+        did not (see ``windows`` / ``_emit_changelog``).  Single-base
         views store an int seq; join views a per-table seq VECTOR (always
         element-wise monotone across refreshes, so lexicographic ``max``
         picks the latest one)."""
@@ -698,274 +876,102 @@ class MaterializedView:
     @staticmethod
     def _cursor_ge(a, b) -> bool:
         """cursor a >= cursor b, for int seqs and per-table seq vectors
-        alike (vectors compare element-wise — ALL tables caught up)."""
-        if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        alike (vectors compare element-wise — ALL tables caught up).  The
+        int -1 is the fresh cursor of either shape: every cursor covers
+        it, and it covers no vector."""
+        va, vb = isinstance(a, (list, tuple)), isinstance(b, (list, tuple))
+        if va and vb:
             return len(a) == len(b) and all(x >= y for x, y in zip(a, b))
-        if isinstance(a, (list, tuple)) or isinstance(b, (list, tuple)):
-            return False  # int default (-1) vs vector: never caught up
+        if va or vb:
+            return b == -1
         return a >= b
 
-    def _refresh_window(self, since: int, now: int, meta: dict) -> int:
-        """Propagate the base delta window (since, now] into the state —
-        the single-window body of ``refresh``."""
-        delta = self.base.delta(since, now)
-        if self.is_aggregate:
-            n = self._agg_refresh(delta, cursor={"cursor": now})
-        else:
-            # r18: the old shape paid a FULL delta pass for the count
-            # before the write (plus, inside _write_segment, a merged-
-            # frame sign probe).  Now a cheap limit-1 job decides
-            # emptiness (preserving the contract that an empty refresh
-            # creates neither state nor segment), the FULL count rides
-            # the segment write as an Observation metric (the
-            # delete_where treatment), and for insert-only delta windows
-            # the sign is derived statically from segment metadata
-            # (window_all_nonnegative) so the probe job disappears too.
-            if delta.limit(1).count() == 0:
-                n = 0
-            else:
-                if not self.state.exists():
-                    self.state.create(
-                        self._apply_linear(delta).drop(FREQ).schema
-                    )
-                obs = Observation()
-                n = int(self.state._write_segment(
-                    self._apply_linear(
-                        delta.observe(obs, F.count(F.lit(1)).alias("__n"))
-                    ),
-                    has_negative=(
-                        False
-                        if self.base.window_all_nonnegative(since, now)
-                        else None
-                    ),
-                    extra_meta={"mv_cursor": now},
-                    abort_observation=(obs, "__n"),
-                ))
-        meta["last_refresh_seq"] = now
-        self._save_meta(meta)
-        return n
+    @classmethod
+    def _cursor_max(cls, a, b):
+        """The later of two cursors (element-wise for vectors)."""
+        if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+            return [max(x, y) for x, y in zip(a, b)]
+        return a if cls._cursor_ge(a, b) else b
 
     def _empty_delta(self) -> DataFrame:
         """A zero-row signed-delta frame with the view's input schema —
         subclasses with a different input shape (joins) override this."""
         return self._delta_agg(self.base.scan(expand=False).limit(0))
 
-    def _agg_refresh(self, delta: DataFrame, cursor: dict) -> int:
-        """Aggregate-view refresh body shared by the single-base and
-        join subclasses: aggregate the signed delta, learn the delta row
-        count AND the touched-bucket list from ONE fused job, and merge.
-        Split into the prepare/commit halves below (r19) so pipelined
-        cycle drivers can overlap a window's merge with the next
-        window's delta job; calling them back to back is this."""
-        return self._commit_agg_window(self._prepare_agg_window(delta, cursor))
-
-    def _prepare_agg_window(self, delta: DataFrame, cursor: dict) -> dict:
-        """The READ half of an aggregate refresh — the fused delta job
-        (r15 verdict task 7 + r18): the delta scan/join and the
-        per-group aggregation run in one job with the row count riding
-        along as ``__nrows``; the bucket id is computed on the SAME
-        cached frame so one ``groupBy(__bkt)`` collect yields both the
-        total (was a separate agg job) and the touched buckets (was a
-        separate distinct job) — one driver action, ≤ num_buckets rows
-        collected.  Reads base segments and never this view's state, so
-        it may run concurrently with the PREVIOUS window's commit."""
+    def _merge_agg(self, delta_state: DataFrame, schema: StructType,
+                   cursor: dict, touched: list[int]) -> None:
+        """Merge per-group state deltas (of state ``schema``) into the
+        bucketed state: read ONLY the ``touched`` buckets the delta's
+        groups hash into (``prepare`` collects them with the row count),
+        re-aggregate those, and commit new versions of only those buckets
+        — O(delta + touched buckets), never O(|state|).  ``cursor`` rides
+        in the manifest commit (see ``_state_cursor``)."""
+        keys = [c for c in schema.names if not c.startswith("__")]
+        state_cols = [c for c in schema.names if c.startswith("__")]
         st = self.state
-        # pin the bucket count from the manifest BEFORE bucketing the
-        # delta — a session whose conf differs from an existing state's
-        # layout must hash the delta with the layout's count, not its
-        # own (the count is fixed at state creation, so a still-running
-        # previous commit cannot change what this reads)
-        st._load_manifest()
-        delta_state = self._delta_agg(delta, with_rows=True)
-        keys = [c for c in delta_state.columns if not c.startswith("__")]
-        delta_state = delta_state.withColumn(
-            "__bkt", st.bucket_expr(keys, delta_state)
-        ).persist()
-        try:
-            per_bkt = (
-                delta_state.groupBy("__bkt")
-                .agg(F.sum("__nrows").alias("__n"))
-                .collect()
+        # The state files are written from this frame shape, so its
+        # schema is the on-disk schema — skip footer inference.
+        # EXCEPT for decimal state columns: Spark widens decimal
+        # precision on every re-aggregation (sum over already-summed
+        # decimals), so after two refreshes the on-disk type is wider
+        # than the delta's and an explicit narrower schema makes the
+        # parquet read throw PARQUET_COLUMN_DATA_TYPE_MISMATCH —
+        # decimal states keep the inferred-schema read.  Every other
+        # state type (bigint counts/sums, double, string keys) is
+        # re-aggregation-stable.
+        stable = not any(isinstance(f.dataType, DecimalType)
+                         for f in schema.fields)
+        old = st.read_buckets(touched, schema=schema if stable else None)
+        merged = delta_state
+        if old is not None:
+            merged = (
+                old.unionByName(delta_state)
+                .groupBy(*keys)
+                .agg(*[F.sum(c).alias(c) for c in state_cols])
             )
-        except BaseException:
-            delta_state.unpersist()
-            raise
-        return {"cursor": cursor, "delta_state": delta_state,
-                "per_bkt": per_bkt}
-
-    def _commit_agg_window(self, handle: dict) -> int:
-        """The WRITE half: merge the prepared delta into the touched
-        buckets and (when enabled) emit the changelog — must run after
-        the previous window's commit."""
-        delta_state = handle["delta_state"]
-        per_bkt = handle["per_bkt"]
+        merged = merged.filter(F.col("__cnt") != 0)
+        if self.changelog is None:
+            st.write_buckets(merged, keys, touched, extra=cursor)
+            return
+        # the changelog frame and write_buckets both evaluate ``merged`` —
+        # cache it so the touched-bucket re-aggregation runs once
+        # (bounded by |touched groups|, like delta_state)
+        merged = merged.persist()
         try:
-            n = int(sum(r["__n"] for r in per_bkt))
-            if n:
-                self._merge_agg(
-                    delta_state.drop("__nrows"), cursor=handle["cursor"],
-                    touched=sorted(r["__bkt"] for r in per_bkt),
-                )
+            # The changelog-segment job OVERLAPS the state staging job
+            # (guide §2.6: both are bounded touched-bucket frames whose
+            # tasks back-fill each other's tails) — the crash-safety
+            # ORDER is kept by the pre_publish barrier, which blocks the
+            # state-manifest publication until the changelog segment has
+            # committed.  A changelog failure therefore still aborts the
+            # state commit (barrier re-raises pre-publish), and a state
+            # failure after a committed changelog recovers exactly as the
+            # old serial shape did: the cursor did not advance, the next
+            # refresh recomputes the transition, and _emit_changelog's
+            # replay guard skips the duplicate append.  Both jobs read
+            # the persisted ``merged``; concurrent first actions may race
+            # the cache fill, bounded by |touched groups|.
+            with _worker_pools(self.spark, 1)[0] as ex:
+                fut = ex.submit(self._emit_changelog, old, merged, cursor)
+                try:
+                    st.write_buckets(merged, keys, touched, extra=cursor,
+                                     pre_publish=fut.result)
+                except BaseException as staging_exc:
+                    # staging failed BEFORE the pre_publish barrier
+                    # consumed the future: wait for the changelog and
+                    # chain its failure, so a concurrent changelog error
+                    # is surfaced instead of discarded by the pool exit.
+                    # (A changelog that did commit is a torn transition
+                    # the next refresh completes.)  When pre_publish
+                    # itself re-raised the changelog failure, staging_exc
+                    # IS that error: chaining it would make it its own
+                    # cause.
+                    log_exc = fut.exception()
+                    if log_exc is not None and log_exc is not staging_exc:
+                        raise staging_exc from log_exc
+                    raise
         finally:
-            delta_state.unpersist()
-        return n
-
-    def prepare_refresh_window(self, since: int, now: int) -> dict:
-        """Public explicit-window read half for AGGREGATE single-base
-        views (the scalar-cursor sibling of the join subclass's
-        ``prepare_refresh``; linear views write one observed segment —
-        there is nothing to split).  Same contract: a cycle driver may
-        run this concurrently with the previous window's
-        ``commit_refresh_window``; commits serialize in window order,
-        and ``refresh`` stays the crash-recovering entry point."""
-        if not self.is_aggregate:
-            raise ValueError("prepare_refresh_window is aggregate-only")
-        handle = {"now": now, "delta_state": None, "per_bkt": []}
-        if now > since:
-            handle.update(self._prepare_agg_window(
-                self.base.delta(since, now), {"cursor": now}
-            ))
-        return handle
-
-    def commit_refresh_window(self, handle: dict) -> int:
-        """Write half for ``prepare_refresh_window`` handles: merge (a
-        no-op for an empty window) and advance the refresh cursor."""
-        n = 0
-        if handle["delta_state"] is not None:
-            n = self._commit_agg_window(handle)
-        meta = self._load_meta()
-        meta["last_refresh_seq"] = handle["now"]
-        self._save_meta(meta)
-        return n
-
-    def _merge_agg(self, delta_state: DataFrame, cursor: dict | None = None,
-                   touched: list[int] | None = None) -> None:
-        """Merge per-group state deltas into the bucketed state: read ONLY
-        the buckets the delta's groups hash into, re-aggregate those, and
-        commit new versions of only those buckets — O(delta + touched
-        buckets), never O(|state|).  The touched-bucket list is a bounded
-        driver collect (≤ num_buckets distinct ints — the same O(1)-scalar
-        class as FreqTable's delete counts); ``_agg_refresh`` passes it
-        precomputed (fused with the row-count job).  ``cursor`` rides in
-        the manifest commit (see ``_state_cursor``)."""
-        keys = [c for c in delta_state.columns
-                if not c.startswith("__")]
-        state_cols = [c for c in delta_state.columns
-                      if c.startswith("__") and c != "__bkt"]
-        st = self.state
-        # pin the bucket count from the manifest BEFORE bucketing the delta —
-        # a session whose conf differs from an existing state's layout must
-        # hash the delta with the layout's count, not its own
-        st._load_manifest()
-        own_pin = touched is None  # caller-persisted frame when provided
-        if own_pin:
-            if "__bkt" not in delta_state.columns:
-                delta_state = delta_state.withColumn(
-                    "__bkt", st.bucket_expr(keys, delta_state)
-                )
-            delta_state = delta_state.persist()
-        try:
-            if touched is None:
-                touched = sorted(
-                    r["__bkt"]
-                    for r in delta_state.select("__bkt").distinct().collect()
-                )
-            merged = delta_state.drop("__bkt")
-            # The state files are written from this frame shape, so its
-            # schema is the on-disk schema — skip footer inference.
-            # EXCEPT for decimal state columns: Spark widens decimal
-            # precision on every re-aggregation (sum over already-summed
-            # decimals), so after two refreshes the on-disk type is wider
-            # than the delta's and an explicit narrower schema makes the
-            # parquet read throw PARQUET_COLUMN_DATA_TYPE_MISMATCH —
-            # decimal states keep the inferred-schema read.  Every other
-            # state type (bigint counts/sums, double, string keys) is
-            # re-aggregation-stable.
-            from pyspark.sql.types import DecimalType
-
-            stable = not any(isinstance(f.dataType, DecimalType)
-                             for f in merged.schema.fields)
-            old = st.read_buckets(
-                touched, schema=merged.schema if stable else None
-            )
-            if old is not None:
-                merged = (
-                    old.select(*merged.columns)
-                    .unionByName(merged)
-                    .groupBy(*keys)
-                    .agg(*[F.sum(c).alias(c) for c in state_cols])
-                )
-            merged = merged.filter(F.col("__cnt") != 0)
-            if self.changelog is not None:
-                # the changelog frame and write_buckets both evaluate
-                # ``merged`` — cache it so the touched-bucket re-aggregation
-                # runs once (bounded by |touched groups|, like delta_state)
-                merged = merged.persist()
-            try:
-                if self.changelog is not None:
-                    # The changelog-segment job OVERLAPS the state staging
-                    # job (guide §2.6: both are bounded touched-bucket
-                    # frames whose tasks back-fill each other's tails) —
-                    # the crash-safety ORDER is kept by the pre_publish
-                    # barrier, which blocks the state-manifest publication
-                    # until the changelog segment has committed.  A
-                    # changelog failure therefore still aborts the state
-                    # commit (barrier re-raises pre-publish), and a state
-                    # failure after a committed changelog recovers exactly
-                    # as the old serial shape did: the cursor did not
-                    # advance, the next refresh recomputes the transition,
-                    # and _emit_changelog's replay guard skips the
-                    # duplicate append.  Both jobs read the persisted
-                    # ``merged``; concurrent first actions may race the
-                    # cache fill, bounded by |touched groups|.
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    # The worker thread inherits this thread's JVM-local
-                    # properties (job group, description), so an engine
-                    # KILL of the refresh cancels the changelog job too
-                    # and session accounting sees it tagged (r19 advice).
-                    # Properties are cloned/set by hand — two py4j calls —
-                    # because pyspark.inheritable_thread_target's per-call
-                    # pinned-connection churn measured ~0.9s per cascade
-                    # cycle.
-                    jsc = self.spark.sparkContext._jsc.sc()
-                    props = jsc.getLocalProperties().clone()
-
-                    def _emit_with_props(old=old, merged=merged,
-                                          cursor=cursor):
-                        jsc.setLocalProperties(props)
-                        return self._emit_changelog(old, merged, cursor)
-
-                    with ThreadPoolExecutor(max_workers=1) as ex:
-                        fut = ex.submit(_emit_with_props)
-                        try:
-                            st.write_buckets(merged, keys, touched,
-                                             extra=cursor,
-                                             pre_publish=fut.result)
-                        except BaseException as staging_exc:
-                            # staging failed BEFORE the pre_publish
-                            # barrier consumed the future: cancel it if
-                            # unstarted, else retrieve its exception and
-                            # chain it so a concurrent changelog failure
-                            # is surfaced instead of discarded by the
-                            # pool exit.  When pre_publish
-                            # itself re-raised the changelog failure,
-                            # staging_exc IS that error: chaining it
-                            # would make it its own cause.
-                            if not fut.cancel():
-                                log_exc = fut.exception()
-                                if (log_exc is not None
-                                        and log_exc is not staging_exc):
-                                    raise staging_exc from log_exc
-                            raise
-                else:
-                    st.write_buckets(merged, keys, touched, extra=cursor)
-            finally:
-                if self.changelog is not None:
-                    merged.unpersist()
-        finally:
-            if own_pin:
-                delta_state.unpersist()
+            merged.unpersist()
 
     def _emit_changelog(self, old: DataFrame | None, new: DataFrame,
                         cursor: dict | None) -> None:
@@ -992,7 +998,7 @@ class MaterializedView:
         delta = self._finalize(new).withColumn(FREQ, F.lit(1).cast("long"))
         if old is not None:
             delta = delta.unionByName(
-                self._finalize(old.select(*new.columns)).withColumn(
+                self._finalize(old).withColumn(
                     FREQ, F.lit(-1).cast("long")
                 )
             )
@@ -1021,8 +1027,6 @@ class MaterializedView:
         ``_merge_agg``).  Derived once per view instance — the
         ``_empty_delta`` plan build is itself a few ms of py4j."""
         if self._read_schema_cache is False:  # unresolved marker
-            from pyspark.sql.types import DecimalType
-
             schema = self._empty_delta().schema
             stable = not any(isinstance(f.dataType, DecimalType)
                              for f in schema.fields)
@@ -1653,98 +1657,144 @@ class AggregateJoinMaterializedView(MaterializedView):
             )
         return delta, pinned
 
-    def refresh(self, until: list[int] | None = None) -> int:
-        """One incremental refresh over ALL tables' outstanding deltas.
-        Returns the number of signed join-delta rows aggregated (post
-        table-filters — the fused delta job counts what it aggregates).
-        ``until`` pins the per-table seq upper bounds (the base class's
-        r18 pipelining knob, vector form): a cycle driver snapshots the
-        bounds, kicks the refresh on a worker thread, and ingests the
-        next wave concurrently without racing the window capture."""
-        meta = self._load_meta()
-        olds = meta.get("seqs", [-1] * len(self.tables))
-        # the manifest's atomically-committed cursor wins over a stale
-        # meta file (crash between state merge and meta save)
-        m = self.state._load_manifest()
-        state_seqs = (m or {}).get("cursor")
-        if state_seqs:
-            olds = [max(o, s) for o, s in zip(olds, state_seqs)]
-        news = ([t.last_seq() for t in self.tables] if until is None
-                else list(until))
-        total = 0
-        if self.changelog is not None:
-            logged = self._changelog_cursor()
-            if isinstance(logged, (list, tuple)) and any(
-                l > o for l, o in zip(logged, olds)
-            ):
-                # torn transition, vector form (see the base class): the
-                # changelog recorded a window the state never committed —
-                # complete EXACTLY that window first (deterministic; the
-                # cursor guard skips the duplicate append), then consume
-                # the remainder as its own logged transition.
-                logged = [max(l, o) for l, o in zip(logged, olds)]
-                total += self._refresh_vector_window(olds, logged)
-                olds = logged
-        if any(n > o for n, o in zip(news, olds)):
-            total += self._refresh_vector_window(olds, news)
-        return total
+    # own ``refresh`` attribute: instrumentation that wraps ``refresh`` on
+    # each view class (wirebench's tracer) then records one span per call,
+    # instead of this class's wrapper nesting around the base class's
+    refresh = MaterializedView.refresh
 
-    def _refresh_vector_window(self, olds: list[int],
-                               news: list[int]) -> int:
-        """Propagate one per-table delta window — the single-window body
-        of ``refresh`` (windowed for the torn-transition replay).  Named
-        apart from the base class's scalar ``_refresh_window(since, now,
-        meta)`` on purpose: the signatures are incompatible, and a
-        silent override would hand an int cursor to vector code."""
-        return self.commit_refresh(self.prepare_refresh(olds, news))
+    # -- vector cursor: one seq per table, in ``tables`` order ---------------
+    _META_CURSOR = "seqs"
 
-    def prepare_refresh(self, olds: list[int], news: list[int]) -> dict:
-        """Evaluate the fused delta job for an EXPLICIT window olds → news
-        and return an opaque handle for ``commit_refresh`` — the read half
-        of a refresh (r19; guide §2.6).
+    def _fresh_cursor(self):
+        return [-1] * len(self.tables)
 
-        The delta plan and its evaluation read TABLE segments only, never
-        this view's own state (``_delta_plan`` probes ``self.tables`` at
-        pinned seqs; the state appears first in the merge), so a cycle
-        driver may run wave i+1's prepare CONCURRENTLY with wave i's
-        ``commit_refresh`` — the delta join back-fills the merge/write
-        job's straggler tail.  Commits must stay serialized in window
-        order (each merge reads the state the previous one committed).
-        ``refresh`` remains the crash-recovering entry point — the
-        torn-transition replay needs its cursor bookkeeping — so explicit
-        windows are for drivers continuing from a known-clean state.
+    def _bound(self, until=None):
+        if until is None:
+            return [t.last_seq() for t in self.tables]
+        return list(until)
 
-        The fused shape is unchanged (r15 task 7 + r18): the N-way join
-        delta, the per-group aggregation, the delta row count AND the
-        touched-bucket list all come out of this ONE job — the count
-        rides as ``__nrows`` and the bucket id is grouped into the same
-        ≤ num_buckets-row collect."""
+    def _delta(self, olds, news):
         delta, pinned = self._delta_plan(olds, news)
-        handle = {"news": news, "pinned": pinned,
-                  "delta_state": None, "per_bkt": []}
-        if delta is None:
-            return handle
-        try:
-            handle.update(self._prepare_agg_window(
-                delta.withColumnRenamed("__f", FREQ), {"cursor": news}
-            ))
-        except BaseException:
-            for p in pinned:
-                p.unpersist()
-            raise
-        return handle
+        if delta is not None:
+            delta = delta.withColumnRenamed("__f", FREQ)
+        return delta, pinned
 
-    def commit_refresh(self, handle: dict) -> int:
-        """Merge a ``prepare_refresh`` handle into the state and advance
-        the cursor — the write half of a refresh.  Must run AFTER the
-        previous window's commit (the caller serializes); returns the
-        signed delta row count, exactly as ``refresh`` does."""
-        n = 0
+
+class RefreshPipeline:
+    """Refresh a cascade of views window by window, overlapping the work
+    the delta algebra lets overlap.  ``chain`` is root-first: level
+    k ≥ 1 is a view whose base is level k-1's changelog.
+
+    ``submit(until)`` records a root window — bounded at ``until``, or at
+    the root's latest base seqs, taken on the caller — and returns at
+    once, so the caller's next ingest overlaps the refresh.  Leaving the
+    ``with`` block (or ``close()``) drains the pipeline.
+
+    What overlaps:
+    - the refresh of window i with the caller's next ingest: a window
+      reads only segments at or below its bound, pinned at plan time;
+    - the root's prepare of window i+1 (the fused delta job: reads base
+      segments only, never the view's state) with its commit of window i
+      (merge, state write, changelog) — the delta join back-fills the
+      merge job's straggler tail;
+    - level k's window i with level k-1's window i+1: level k reads
+      changelog segments up to the seq taken right after level k-1's
+      commit i, and those are immutable.
+
+    What stays serialized, and why:
+    - the commits of one view, in window order: each merge reads the
+      state the previous one committed;
+    - level k's window i after level k-1's commit i, whose changelog
+      segment it consumes.
+
+    So every view ends in exactly the state a serial ``refresh(until)``
+    cadence produces.  Each stage (root prepare, root commit, each lower
+    level) runs on one worker thread that inherits the caller's JVM local
+    properties, so a KILL of the caller's job group cancels every job.
+
+    Failure: the first error stops the pipeline.  Queued work is skipped,
+    every prepared-but-uncommitted handle is released (its persisted
+    frames unpersisted), ``submit`` re-raises the error at once, and
+    draining raises it with any later ones chained.  Committed windows
+    stay committed; ``refresh()`` resumes from the committed cursors,
+    including a torn changelog transition."""
+
+    def __init__(self, chain: list[MaterializedView]):
+        self.chain = list(chain)
+        if any(view.changelog is None for view in self.chain[:-1]):
+            raise ValueError("every level but the last needs a changelog")
+        self._errors: list[BaseException] = []
+        # stage 0: root prepares; stage 1: root commits; k+1: level k
+        self._stages = _worker_pools(self.chain[0].spark,
+                                     len(self.chain) + 1)
+
+    def __enter__(self) -> "RefreshPipeline":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc is not None and exc not in self._errors:
+            self._errors.insert(0, exc)
+        self.close()
+
+    def submit(self, until=None) -> None:
+        """Queue the root window ending at ``until`` (default: the root's
+        latest base seqs, taken now); re-raises a recorded failure."""
+        if self._errors:
+            raise self._errors[0]
+        self._stages[0].submit(self._prepare, self.chain[0]._bound(until))
+
+    def close(self) -> None:
+        """Drain every stage; raise the first failure, later ones chained."""
+        for stage in self._stages:  # in order: each feeds the next
+            stage.shutdown(wait=True)
+        if not self._errors:
+            return
+        for view in self.chain:
+            view._prepared = None  # the next refresh reads the committed cursor
+        for a, b in zip(self._errors, self._errors[1:]):
+            if a.__cause__ is None:
+                a.__cause__ = b
+        raise self._errors[0]
+
+    def _prepare(self, bound) -> None:
+        root, handles = self.chain[0], []
         try:
-            if handle["delta_state"] is not None:
-                n = self._commit_agg_window(handle)
-        finally:
-            for p in handle["pinned"]:
-                p.unpersist()
-        self._save_meta({"seqs": handle["news"]})
-        return n
+            if not self._errors:
+                for w in root.windows(bound):
+                    handles.append(root.prepare(w))
+        except BaseException as exc:
+            self._errors.append(exc)
+        self._stages[1].submit(self._commit, handles)
+
+    def _commit(self, handles: list[dict]) -> None:
+        root = self.chain[0]
+        for h in handles:
+            if self._errors:
+                root.release(h)
+                continue
+            try:
+                root.commit(h)
+            except BaseException as exc:
+                self._errors.append(exc)
+        self._next(0)
+
+    def _refresh(self, k: int, bound) -> None:
+        if self._errors:
+            return
+        try:
+            self.chain[k].refresh(bound)
+        except BaseException as exc:
+            self._errors.append(exc)
+            return
+        self._next(k)
+
+    def _next(self, k: int) -> None:
+        """Queue level k+1's window, bounded at level k's changelog now."""
+        if k + 1 == len(self.chain) or self._errors:
+            return
+        try:
+            bound = self.chain[k].changelog.last_seq()
+        except BaseException as exc:
+            self._errors.append(exc)
+            return
+        self._stages[k + 2].submit(self._refresh, k + 1, bound)

@@ -358,42 +358,24 @@ def _q3_tables_and_view(spark: SparkSession, sf_dir: str, root: str,
     return tables, mv
 
 
-def _q3_drive_waves(tables, after_wave) -> None:
+def _q3_drive_waves(tables, after_wave=lambda: None) -> None:
     """The SHARED three-wave ingest script (even orderkeys, odd
-    orderkeys, DELETE of the 'R' return-flag class); ``after_wave(i,
-    until)`` runs after wave i's ingest so each cycle shape chooses its
-    own refresh cadence, with ``until`` the per-table seq snapshot
-    (customer, orders, lineitem order — the mv.tables order) taken at
-    the wave boundary.  TPC-H rows are tuple-distinct (unique primary
-    keys), so every ingest skips the in-batch merge shuffle — the same
-    fast path the maintainers use.
-
-    Two §2.6 overlaps (guide: concurrent independent driver jobs
-    back-fill each other's stage tails):
-    - a wave's per-table ingests land on DIFFERENT FreqTables
-      (independent directories, independent commits), so they run
-      concurrently — the wave completes at the slowest table's wall
-      instead of the serial sum;
-    - wave i's refresh runs CONCURRENTLY with wave i+1's ingest (r18):
-      the refresh only reads base segments ≤ its ``until`` snapshot
-      (paths pinned at plan time) and writes the MV's own state dir, so
-      the two share no storage; the explicit bound keeps per-wave
-      consumption deterministic instead of racing ``last_seq()``.
-      Refreshes stay serialized among themselves (single-thread pool +
-      result barriers), so each one still sees the previous state
-      commit."""
+    orderkeys, DELETE of the 'R' return-flag class), calling
+    ``after_wave()`` after each wave — a RefreshPipeline's ``submit``, so
+    the refresh overlaps the next wave's ingest.  TPC-H
+    rows are tuple-distinct (unique primary keys), so every ingest skips
+    the in-batch merge shuffle — the same fast path the maintainers use.
+    A wave's per-table ingests land on DIFFERENT FreqTables (independent
+    directories, independent commits), so they run concurrently — the
+    wave completes at the slowest table's wall instead of the serial
+    sum."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _ingest(args) -> None:
         t, df = args
         t.insert(df, assume_distinct=True)
 
-    def _snap() -> list[int]:
-        return [tables[n][0].last_seq()
-                for n in ("customer", "orders", "lineitem")]
-
-    with ThreadPoolExecutor(max_workers=3) as pool, \
-            ThreadPoolExecutor(max_workers=1) as rpool:
+    with ThreadPoolExecutor(max_workers=3) as pool:
         # wave 1: dimension + even orderkeys
         list(pool.map(_ingest, [
             (tables["customer"][0], tables["customer"][1]),
@@ -402,48 +384,20 @@ def _q3_drive_waves(tables, after_wave) -> None:
             (tables["lineitem"][0],
              tables["lineitem"][1].filter("l_orderkey % 2 = 0")),
         ]))
-        fut = rpool.submit(after_wave, 1, _snap())
-        # wave 2: odd orderkeys on BOTH fact-side tables (∥ refresh 1)
+        after_wave()
+        # wave 2: odd orderkeys on BOTH fact-side tables
         list(pool.map(_ingest, [
             (tables["orders"][0],
              tables["orders"][1].filter("o_orderkey % 2 = 1")),
             (tables["lineitem"][0],
              tables["lineitem"][1].filter("l_orderkey % 2 = 1")),
         ]))
-        fut.result()
-        fut = rpool.submit(after_wave, 2, _snap())
-        # wave 3: retraction — DELETE one return-flag class (∥ refresh 2;
-        # the delete derives its negative segment from the table's own
-        # live scan, which is independent of MV state)
-        tables["lineitem"][0].delete_where("l_returnflag = 'R'")
-        fut.result()
-        after_wave(3, _snap())
-
-
-def _drive_waves_pipelined(tables, mv) -> None:
-    """_q3_drive_waves with the refresh itself split (r19; guide §2.6,
-    third overlap): wave i's MERGE COMMIT (touched-bucket read + merge +
-    state write) runs on its own single-worker pool while wave i+1's
-    DELTA JOIN (``prepare_refresh`` — reads table segments only, never
-    the view's state) evaluates concurrently on the refresh thread.
-    Window order is exact: each wave's ``olds`` is the previous wave's
-    ``until`` snapshot, and the single worker serializes commits so
-    every merge reads the state the previous one committed — per-wave
-    results identical to serial ``refresh(until)`` calls (the contract
-    test pins this)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    state = {"olds": [-1] * len(mv.tables), "fut": None}
-    with ThreadPoolExecutor(max_workers=1) as mpool:
-        def _wave(wave, until):
-            handle = mv.prepare_refresh(state["olds"], until)
-            if state["fut"] is not None:
-                state["fut"].result()  # fail fast on a lost commit
-            state["fut"] = mpool.submit(mv.commit_refresh, handle)
-            state["olds"] = until
-
-        _q3_drive_waves(tables, _wave)
-        state["fut"].result()
+        after_wave()
+    # wave 3: retraction — DELETE one return-flag class (the delete
+    # derives its negative segment from the table's own live scan, which
+    # is independent of MV state)
+    tables["lineitem"][0].delete_where("l_returnflag = 'R'")
+    after_wave()
 
 
 def mv_q3_incremental(spark: SparkSession, sf_dir: str,
@@ -493,24 +447,18 @@ def mv_q3_incremental(spark: SparkSession, sf_dir: str,
 
     from pyspark.sql import functions as F  # noqa: F811 — local for clarity
 
+    from ..materialize import RefreshPipeline
+
     root = tempfile.mkdtemp(prefix="incr_mv_q3_")
     try:
         tables, mv = _q3_tables_and_view(spark, sf_dir, root)
-        # Per-wave refresh unless batched; the final wave always
-        # refreshes (in the batched cycle it is the ONLY refresh — all
-        # three delta windows fuse into one delta job + one merge).
         if batch_refresh:
-            _q3_drive_waves(
-                tables,
-                lambda wave, until: mv.refresh(until=until)
-                if wave == 3 else None,
-            )
+            # all three delta windows fuse into one delta job + one merge
+            _q3_drive_waves(tables)
+            mv.refresh()
         else:
-            # r19: wave i's merge commit overlaps wave i+1's delta join
-            # (prepare_refresh reads table segments only; commits stay
-            # serialized on their own single-worker pool) — see
-            # _drive_waves_pipelined.
-            _drive_waves_pipelined(tables, mv)
+            with RefreshPipeline([mv]) as pipe:
+                _q3_drive_waves(tables, pipe.submit)
         out = (
             mv.read()
             # The maintained sum is exact decimal internally; the GATE
@@ -599,7 +547,7 @@ def mv_cascade_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..frequency import FreqTable
-    from ..materialize import MaterializedView
+    from ..materialize import MaterializedView, RefreshPipeline
 
     root = tempfile.mkdtemp(prefix="incr_mv_cascade_")
     try:
@@ -620,58 +568,18 @@ def mv_cascade_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             None, "l_returnflag",
             f"{root}/mv2_state",
         )
-        # Both cascade levels refresh after every wave, pipelined with the
-        # next wave's ingest (§2.6, the _q3_drive_waves treatment), and
-        # the TWO LEVELS pipeline with each other (r18): level 2's wave-i
-        # refresh only needs the changelog through wave i — its window is
-        # pinned with an explicit ``until`` bound at the seq captured
-        # right after level 1's wave-i commit — so it runs on its own
-        # single-thread pool CONCURRENTLY with level 1's wave-i+1 refresh
-        # (which appends strictly newer, immutable changelog segments and
-        # rewrites only mv1's own state dir).  Per-wave consumption stays
-        # deterministic; each pool serializes its own level's refreshes.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as rpool, \
-                ThreadPoolExecutor(max_workers=1) as mpool, \
-                ThreadPoolExecutor(max_workers=1) as l2pool:
-            l2futs = []
-            pipe = {"since": -1, "fut": None}
-
-            def _l1_then_kick_l2(until: int) -> None:
-                # r19: level 1's delta job (prepare — reads base
-                # segments only) overlaps the PREVIOUS wave's merge
-                # commit on mpool; the level-2 kick stays chained after
-                # the commit, whose changelog segment it consumes
-                handle = mv1.prepare_refresh_window(pipe["since"], until)
-                if pipe["fut"] is not None:
-                    pipe["fut"].result()
-
-                def _commit_then_l2(handle=handle):
-                    mv1.commit_refresh_window(handle)
-                    l2futs.append(
-                        l2pool.submit(mv2.refresh, mv1.changelog.last_seq())
-                    )
-
-                pipe["fut"] = mpool.submit(_commit_then_l2)
-                pipe["since"] = until
-
-            # wave 1: even orderkeys; refresh level 1 then kick level 2
+        with RefreshPipeline([mv1, mv2]) as pipe:
+            # wave 1: even orderkeys
             base.insert(src.filter("l_orderkey % 2 = 0"),
                         assume_distinct=True)
-            fut = rpool.submit(_l1_then_kick_l2, base.last_seq())
+            pipe.submit()
             # wave 2: odd orderkeys (new groups at level 1 → nsupp moves)
             base.insert(src.filter("l_orderkey % 2 = 1"),
                         assume_distinct=True)
-            fut.result()
-            fut = rpool.submit(_l1_then_kick_l2, base.last_seq())
+            pipe.submit()
             # wave 3: retraction — shrinks most groups, may empty some
             base.delete_where("l_linenumber >= 5")
-            fut.result()
-            _l1_then_kick_l2(base.last_seq())
-            pipe["fut"].result()
-            for f in l2futs:
-                f.result()
+            pipe.submit()
         out = (
             mv2.read()
             .select("l_returnflag", "nsupp", "total_items", "total_qty")
@@ -729,7 +637,7 @@ def mv_cascade_q3_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..materialize import MaterializedView
+    from ..materialize import MaterializedView, RefreshPipeline
 
     root = tempfile.mkdtemp(prefix="incr_mv_casq3_")
     try:
@@ -743,39 +651,8 @@ def mv_cascade_q3_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             None, "o_orderpriority",
             f"{root}/mv2_state",
         )
-        # two-level pipelining (r18, the mv_cascade_incremental shape):
-        # level 2's wave-i refresh is bounded to the changelog seq
-        # captured right after level 1's wave-i commit, so it overlaps
-        # level 1's wave-i+1 refresh on its own serialized pool; r19
-        # additionally overlaps level 1's wave-i+1 DELTA JOIN with its
-        # wave-i merge commit (prepare_refresh reads table segments
-        # only) — the level-2 kick stays chained after the commit whose
-        # changelog segment it consumes
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as mpool, \
-                ThreadPoolExecutor(max_workers=1) as l2pool:
-            l2futs = []
-            pipe = {"olds": [-1] * len(mv1.tables), "fut": None}
-
-            def _cascade_wave(wave: int, until: list[int]) -> None:
-                handle = mv1.prepare_refresh(pipe["olds"], until)
-                if pipe["fut"] is not None:
-                    pipe["fut"].result()
-
-                def _commit_then_l2(handle=handle):
-                    mv1.commit_refresh(handle)
-                    l2futs.append(
-                        l2pool.submit(mv2.refresh, mv1.changelog.last_seq())
-                    )
-
-                pipe["fut"] = mpool.submit(_commit_then_l2)
-                pipe["olds"] = until
-
-            _q3_drive_waves(tables, _cascade_wave)
-            pipe["fut"].result()
-            for f in l2futs:
-                f.result()
+        with RefreshPipeline([mv1, mv2]) as pipe:
+            _q3_drive_waves(tables, pipe.submit)
         out = (
             mv2.read()
             .select("o_orderpriority", "n_groups", "revenue_e4_total",
@@ -844,7 +721,7 @@ def mv_q13_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..frequency import FreqTable
-    from ..materialize import AggregateJoinMaterializedView
+    from ..materialize import AggregateJoinMaterializedView, RefreshPipeline
 
     root = tempfile.mkdtemp(prefix="incr_mv_q13_")
     try:
@@ -880,38 +757,17 @@ def mv_q13_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                              assume_distinct=True)
             fa.result(); fb.result()
 
-        def _snap() -> list[int]:
-            return [cust.last_seq(), ords.last_seq()]
-
-        # refreshes pipeline with the next wave's ingest (§2.6, the
-        # _q3_drive_waves treatment) AND (r19) each wave's merge commit
-        # overlaps the next wave's delta join: prepare_refresh reads
-        # table segments only, commits serialize on their own
-        # single-worker pool (the _drive_waves_pipelined shape)
-        pipe = {"olds": [-1, -1], "fut": None}
-
-        def _refresh_wave(until: list[int]) -> None:
-            handle = mv.prepare_refresh(pipe["olds"], until)
-            if pipe["fut"] is not None:
-                pipe["fut"].result()
-            pipe["fut"] = mpool.submit(mv.commit_refresh, handle)
-            pipe["olds"] = until
-
-        with ThreadPoolExecutor(max_workers=1) as rpool, \
-                ThreadPoolExecutor(max_workers=1) as mpool:
-            # refresh 1: many customers still NULL-padded (∥ wave-2 ingest)
-            fut = rpool.submit(_refresh_wave, _snap())
+        with RefreshPipeline([mv]) as pipe:
+            # refresh 1: many customers still NULL-padded
+            pipe.submit()
             ords.insert(ord_src.filter("o_orderkey % 2 = 1"),
                         assume_distinct=True)
-            fut.result()
-            # refresh 2: most pads retract as matches arrive (∥ the
+            # refresh 2: most pads retract as matches arrive; then the
             # retraction wave: one customer class loses ALL its orders —
-            # their rows must flip BACK to pads (c_count 0), not vanish)
-            fut = rpool.submit(_refresh_wave, _snap())
+            # their rows must flip BACK to pads (c_count 0), not vanish
+            pipe.submit()
             ords.delete_where("o_custkey % 10 = 3")
-            fut.result()
-            _refresh_wave(_snap())  # refresh 3
-            pipe["fut"].result()
+            pipe.submit()  # refresh 3
         out = (
             mv.read()
             .groupBy("c_count")
@@ -991,29 +847,33 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..plans.layout import materialize
 
         futs = []
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            prep = dd.prepare_batch(docs.filter("doc_id % 3 = 0"))
-            for w in range(3):
-                nxt = (
-                    pool.submit(dd.prepare_batch,
-                                docs.filter(f"doc_id % 3 = {w + 1}"))
-                    if w < 2 else None
-                )
-                lazy = dd.add_batch(None, prepared=prep, defer=True)
-                futs.append(pool.submit(materialize, lazy))
-                if nxt is not None:
-                    prep = nxt.result()
+        try:
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                prep = dd.prepare_batch(docs.filter("doc_id % 3 = 0"))
+                for w in range(3):
+                    nxt = (
+                        pool.submit(dd.prepare_batch,
+                                    docs.filter(f"doc_id % 3 = {w + 1}"))
+                        if w < 2 else None
+                    )
+                    lazy = dd.add_batch(None, prepared=prep, defer=True)
+                    futs.append(pool.submit(materialize, lazy))
+                    if nxt is not None:
+                        prep = nxt.result()
             waves = [f.result() for f in futs]
-        dd.release_deferred()  # every deferred plan is materialized above
-        out = waves[0]
-        for w in waves[1:]:
-            out = out.unionByName(w)
-        out = out.orderBy("doc_a", "doc_b").localCheckpoint()
-        # the per-wave pins are folded into the final pin — reclaim them
-        # (the driver runs 50 gate queries in one session)
-        for w in waves:
-            layout.release(w)
-        return out
+            out = waves[0]
+            for w in waves[1:]:
+                out = out.unionByName(w)
+            return out.orderBy("doc_a", "doc_b").localCheckpoint()
+        finally:
+            # every deferred plan is materialized (or failed) by now; the
+            # per-wave pins are folded into the final pin — reclaim them,
+            # on the error path too (a gate run executes 50 queries in one
+            # Spark session)
+            dd.release_deferred()
+            for f in futs:
+                if f.exception() is None:
+                    layout.release(f.result())
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

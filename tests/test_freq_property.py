@@ -392,6 +392,24 @@ def test_observed_metric_message_fallback_when_probe_unavailable():
         raise AssertionError("expected re-raise")
 
 
+def test_observed_metric_reraises_dropped_py4j_connection():
+    from py4j.protocol import Py4JNetworkError
+
+    from incresql_spark.frequency import _observed_metric
+
+    # a dropped driver↔JVM connection while the metrics row is absent
+    # must never pass as "zero rows flowed" — even though the structural
+    # probe would classify the row as empty
+    exc = Py4JNetworkError("Answer from Java side is empty")
+    obs = _FakeObs(exc, _FakeJo(_FakeOpt(empty=True)))
+    try:
+        _observed_metric(obs, "n", default=0)
+    except Py4JNetworkError as got:
+        assert got is exc
+    else:
+        raise AssertionError("expected re-raise")
+
+
 def test_type_from_str_is_memoized_and_unshared(spark):
     """schema() parses every column type on every call: after the first
     parse of a type string no py4j call is made, and each call still

@@ -1479,16 +1479,14 @@ def test_join_mv_zero_task_observed_write_aborts(spark, tmp_path):
 
 
 def test_pipelined_prepare_commit_equals_serial_refresh(spark, tmp_path):
-    """r19 contract: driving an agg-join MV with prepare_refresh /
-    commit_refresh — wave i+1's prepare evaluated while wave i's commit
-    is outstanding — must land the exact state the serial refresh(until)
-    cadence produces, including the left-outer pad flips of a retraction
-    wave."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    """r19 contract: driving an agg-join MV through RefreshPipeline —
+    wave i+1's prepare evaluated while wave i's commit is outstanding —
+    must land the exact state the serial refresh(until) cadence
+    produces, including the left-outer pad flips of a retraction wave."""
     from pyspark.sql import types as T
 
-    from incresql_spark.materialize import AggregateJoinMaterializedView
+    from incresql_spark.materialize import (AggregateJoinMaterializedView,
+                                            RefreshPipeline)
 
     def build(tag):
         a = FreqTable(spark, str(tmp_path / f"{tag}_a"))
@@ -1523,17 +1521,9 @@ def test_pipelined_prepare_commit_equals_serial_refresh(spark, tmp_path):
 
     # pipelined drive
     a2, b2, mv2 = build("pipe")
-    olds = [-1, -1]
-    fut = None
-    with ThreadPoolExecutor(max_workers=1) as mpool:
+    with RefreshPipeline([mv2]) as pipe:
         for _ in waves(a2, b2):
-            news = [a2.last_seq(), b2.last_seq()]
-            h = mv2.prepare_refresh(olds, news)  # ∥ outstanding commit
-            if fut is not None:
-                fut.result()
-            fut = mpool.submit(mv2.commit_refresh, h)
-            olds = news
-        fut.result()
+            pipe.submit()  # ∥ outstanding commit
     got = sorted(tuple(r) for r in mv2.read().collect())
     assert got == want and len(got) == 3
 
