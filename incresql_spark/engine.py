@@ -355,12 +355,30 @@ class Engine:
         )
 
     def _mv_bases(self, meta: dict) -> list[str]:
-        """Qualified base-table names a MV meta depends on."""
+        """Qualified names of what a MV meta reads: its base tables, or
+        the source view of a cascade."""
         if meta.get("type") == "agg_join":
             return list(meta["tables"])
-        if "base_mv" in meta:
-            return []  # depends on a view, not a table (see DROP guard)
-        return [meta["base"]]
+        return [meta.get("base_mv") or meta["base"]]
+
+    def _views_reading(self, bases) -> list[tuple[str, str]]:
+        """(db, name) of every materialized view that reads a qualified
+        table or view for which ``bases`` returns True."""
+        return [
+            (d, n)
+            for d in self.databases() if d not in self._SYSTEM_DBS
+            for n, meta in self._mvs(d).items()
+            if any(bases(b) for b in self._mv_bases(meta))
+        ]
+
+    @staticmethod
+    def _refuse_drop(what: str, views: list[tuple[str, str]],
+                     kind: str = "materialized view(s)") -> None:
+        """Refuse to drop ``what`` while the ``views`` depend on it."""
+        if views:
+            names = ", ".join(sorted(f"{d}.{n}" for d, n in views))
+            raise ValueError(
+                f"{what} has dependent {kind} {names} — drop those first")
 
     #: bootstrap system tables (catalog/src/bootstrap.rs:22-66): ids 0/2/4
     _SYSTEM_TABLES = {"prefix_tables": 0, "databases": 2, "tables": 4}
@@ -784,7 +802,12 @@ class Engine:
             os.makedirs(self._db_path(name), exist_ok=True)
             return EngineResult()
         if u.startswith("DROP DATABASE"):
-            shutil.rmtree(self._db_path(s.split()[2]), ignore_errors=True)
+            db = s.split()[2]
+            # views inside db go with it; views elsewhere would go stale
+            deps = [(d, n) for d, n in self._views_reading(
+                lambda b: b.split(".")[0] == db) if d != db]
+            self._refuse_drop(f"database {db}", deps)
+            shutil.rmtree(self._db_path(db), ignore_errors=True)
             return EngineResult()
         if u.startswith("USE "):
             db = s.split()[1]
@@ -956,17 +979,9 @@ class Engine:
         if m:
             db, name = _split_name(m.group(1), self.current_db)
             qn = f"{db}.{name}"
-            deps = [
-                f"{d}.{n2}"
-                for d in self.databases()
-                for n2, m2 in self._mvs(d).items()
-                if m2.get("base_mv") == qn
-            ]
-            if deps:
-                raise ValueError(
-                    f"materialized view {qn} has dependent cascaded "
-                    f"view(s) {', '.join(sorted(deps))} — drop those first"
-                )
+            self._refuse_drop(f"materialized view {qn}",
+                              self._views_reading(lambda b: b == qn),
+                              "cascaded view(s)")
             self._mv(db, name).drop()
             mvs = self._mvs(db)
             mvs.pop(name, None)
@@ -985,6 +1000,11 @@ class Engine:
         m = re.match(rf"DROP TABLE ({_QNAME})\s*$", s, re.IGNORECASE)
         if m:
             db, name = _split_name(m.group(1), self.current_db)
+            qn = f"{db}.{name}"
+            # a view's cursor holds the dropped table's seqs: a table
+            # re-created under the name would be skipped, not refreshed
+            self._refuse_drop(f"table {qn}",
+                              self._views_reading(lambda b: b == qn))
             self._table(db, name).drop()
             return EngineResult()
 
@@ -1003,12 +1023,9 @@ class Engine:
             # compaction collapses the seq range, and a mid-range cursor
             # would otherwise re-consume merged rows (delta() now refuses
             # that loudly; refreshing makes COMPACT safe instead of fatal)
-            for mv_db in self.databases():
-                if mv_db in self._SYSTEM_DBS:
-                    continue
-                for mv_name, meta in self._mvs(mv_db).items():
-                    if f"{db}.{name}" in self._mv_bases(meta):
-                        self._mv(mv_db, mv_name).refresh()
+            qn = f"{db}.{name}"
+            for mv_db, mv_name in self._views_reading(lambda b: b == qn):
+                self._mv(mv_db, mv_name).refresh()
             self._table(db, name).compact()
             return EngineResult()
 

@@ -783,10 +783,6 @@ class FreqTable:
             if s["seq"] > since_seq
         )
 
-    def last_ts(self) -> int:
-        segs = self._segments()
-        return max((s["ts_ms"] for s in segs), default=0)
-
     def last_seq(self) -> int:
         """Latest segment sequence number (-1 when the table is empty)."""
         segs = self._segments()

@@ -20,9 +20,14 @@ delta propagation:
   reference's zero-freq compaction).  avg is finalized as sum/count at read
   time, exactly the reference's (sum, count) state pair (avg.rs:8-190).
   O(|delta| + |touched groups|).
-- **Join views** (A ⋈ B equi-join): Δ(A⋈B) = ΔA ⋈ B_old ∪ A_new ⋈ ΔB with
-  output freq = freq_a × freq_b (hash_join.rs:85,137); both sides come from
-  point-in-time scans at the old/new timestamps (MVCC, table.rs:128-171).
+- **Join views** (GROUP BY + aggregates over an N-way chain of inner and
+  left-outer equi-joins, ``AggregateJoinMaterializedView``): the bilinear
+  rule Δ(A⋈B) = ΔA ⋈ B_old ∪ A_new ⋈ ΔB with output freq = freq_a × freq_b
+  (hash_join.rs:85,137), telescoped over the chain, plus signed NULL-pad
+  flips for left-outer steps; every side comes from a point-in-time scan
+  at the old/new seq (MVCC, table.rs:128-171).  A join whose rows should
+  be kept as they are is the aggregate view grouped by all its columns
+  with ``count(*)`` — the same multiset.
 
 Scale: every refresh touches O(delta) base rows plus O(touched groups)
 state — never a full recompute and never a full-state rewrite.  Aggregate
@@ -204,9 +209,6 @@ class AggState:
                 continue  # raced a straggler's final commit; bump past it
 
     # -- manifest -------------------------------------------------------------
-    def _manifest_versions(self) -> list[int]:
-        return self.backend.manifest_versions(self.path)
-
     def _load_manifest(self) -> dict | None:
         m = self.backend.load_manifest(self.path)
         if m is None:
@@ -499,6 +501,18 @@ class AggState:
                     if (d.startswith("v-") and d not in keep
                             and self._vdir_version(d) <= nxt):
                         shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+
+    def merge_all(self, delta: DataFrame, keys: list[str], merge) -> None:
+        """Fold ``delta`` into the whole state and rewrite every bucket:
+        ``merge(delta)`` on an empty state, else ``merge(old ∪ delta)``.
+        ``merge`` is the state's merge operator (the reference's
+        storage.rs:115-150 idea) — max, sum, distinct, bottom-k — and
+        must return an already-merged frame unchanged.  The state was
+        written from ``delta``'s frame shape, so the read skips parquet
+        footer inference (the ``read_buckets`` treatment)."""
+        old = self.read(schema=delta.schema)
+        merged = merge(delta if old is None else old.unionByName(delta))
+        self.write_buckets(merged, keys, list(range(self.num_buckets)))
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
@@ -1096,230 +1110,6 @@ class MaterializedView:
         shutil.rmtree(self.state_dir, ignore_errors=True)
 
 
-class JoinMaterializedView:
-    """MV over an equi-join A ⋈ B with the bilinear delta rule
-    Δ(A⋈B) = ΔA ⋈ B_old ∪ A_new ⋈ ΔB; output freq = freq_a × freq_b
-    (reference hash_join.rs:85,137).
-
-    ``how="left_outer"`` maintains A ⟕ B — the reference's LeftOuter join
-    (ast/src/rel/logical.rs:55-59, NULL-pad executor
-    hash_join.rs:147-160) given an incremental form.  Writing the pad part
-    as  pad(A, B) = A·(1 − I_B(key))  with I_B the key-match indicator,
-    the signed pad delta is
-
-        Δpad = ΔA·(1 − I_new)  +  A_old·(I_old − I_new)
-             = [ΔA anti B_new] + [A_flip anti B_new] − [A_flip anti B_old]
-
-    where ``A_flip = A_old ⋉ ΔB`` (only left rows whose key appears in the
-    right delta can change matchedness — anything else cancels exactly).
-    A key whose last match retracts (I 1→0) re-emits its pad rows; a key
-    gaining its first match (0→1) retracts them — the 0↔≠0 flip rule.
-
-    Scale: no per-key match-count state table to maintain — matchedness is
-    an anti-join against the right side's point-in-time KEY projection
-    (column-pruned parquet scan), and every anti/semi probe has a
-    delta-sized build side (broadcast under AQE).  A count-valued state
-    table would itself need a merged (shuffled) scan per refresh; the
-    snapshot anti-join reads strictly less."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        name: str,
-        left: FreqTable,
-        right: FreqTable,
-        on: list[str],
-        columns: list[str],
-        state_dir: str,
-        how: str = "inner",
-    ):
-        if how not in ("inner", "left_outer"):
-            raise ValueError(f"unsupported join type {how!r}")
-        self.spark = spark
-        self.name = name
-        self.left = left
-        self.right = right
-        self.on = on
-        self.columns = columns
-        self.how = how
-        self.state_dir = state_dir
-        self.state = FreqTable(spark, os.path.join(state_dir, "rows"))
-        self.meta_path = os.path.join(state_dir, "_mvmeta.json")
-
-    def _meta(self) -> dict:
-        meta = {"left_seq": -1, "right_seq": -1}
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                meta = json.load(fh)
-        # the state's own atomically-committed cursors win over a stale
-        # meta file (crash between segment write and meta save — without
-        # this the same delta would be re-applied and double-counted)
-        for s in self.state._segments() if self.state.exists() else []:
-            meta["left_seq"] = max(meta["left_seq"], s.get("mv_cursor_left", -1))
-            meta["right_seq"] = max(meta["right_seq"], s.get("mv_cursor_right", -1))
-        return meta
-
-    def _save(self, meta: dict) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
-        commit.write_json_atomic(self.meta_path, meta)
-
-    def _join(self, a: DataFrame, b: DataFrame) -> DataFrame:
-        fa = a.withColumnRenamed(FREQ, "__fa")
-        fb = b.withColumnRenamed(FREQ, "__fb")
-        joined = fa.join(fb, self.on)
-        return joined.select(
-            *self.columns, (F.col("__fa") * F.col("__fb")).alias(FREQ)
-        )
-
-    def _snap_live_keyed(self, seq: int, keys_df: DataFrame) -> DataFrame:
-        """Merged LIVE right-side rows at ``seq`` restricted to the join
-        keys in ``keys_df`` — for pad anti-join probes, whose matchedness
-        only the restricted key set can decide.
-
-        The restriction lands BELOW the tuple merge (r18, the aggregate
-        sibling's ``_snap_live_keys``): signed unmerged scan → broadcast
-        semi-join on the delta keys → per-tuple freq merge → freq > 0.
-        Sound because key membership is a deterministic per-tuple
-        predicate, so it commutes with the full-tuple groupBy — and every
-        key ``a`` can carry appears in ``keys_df`` (``a`` is the delta
-        itself or a flip set built by ⋉ that delta).  NULL-keyed rows
-        drop, which an equi anti-join could never match anyway.  The
-        merge Exchange then carries only delta-key matches instead of the
-        whole right table (guide §3.2: prefilter before the shuffle)."""
-        raw = self.right.signed_scan(as_of_seq=seq).join(
-            F.broadcast(keys_df.select(*self.on)), self.on, "left_semi"
-        )
-        tuple_cols = [c for c in raw.columns if c != FREQ]
-        return (
-            raw.groupBy(*tuple_cols)
-            .agg(F.sum(FREQ).alias(FREQ))
-            .filter(F.col(FREQ) > 0)
-        )
-
-    def _pad(
-        self,
-        a: DataFrame,
-        b_snapshot: DataFrame,
-        sign: int,
-    ) -> DataFrame:
-        """Signed NULL-pad rows: left rows of ``a`` with no key match in
-        ``b_snapshot`` (reference NULL-pad, hash_join.rs:147-160).  The
-        caller restricts the snapshot to the keys ``a`` can carry
-        (``_snap_live_keyed``), so the anti-join's build side is
-        delta-sized (broadcast) instead of O(|B| keys)."""
-        keys = b_snapshot.select(*self.on)
-        rschema = {f.name: f.dataType for f in self.right.schema().fields}
-        unmatched = a.join(keys, self.on, "left_anti")
-        out = [
-            F.lit(None).cast(rschema[c]).alias(c)
-            if (c in rschema and c not in self.on)
-            else F.col(c)
-            for c in self.columns
-        ]
-        return unmatched.select(*out, (F.col(FREQ) * F.lit(sign)).alias(FREQ))
-
-    def refresh(self) -> None:
-        meta = self._meta()
-        # bilinear rule Δ(A⋈B) = ΔA⋈B_old ∪ A_new⋈ΔB over exact seq cursors
-        l_old, r_old = meta.get("left_seq", -1), meta.get("right_seq", -1)
-        l_new, r_new = self.left.last_seq(), self.right.last_seq()
-        da = self.left.delta(l_old, l_new)
-        db = self.right.delta(r_old, r_new)
-        # join-term snapshots are signed unmerged scans (r18): the
-        # bilinear delta rule multiplies frequencies, so ±rows of a net-0
-        # tuple cancel downstream — no merge Exchange needed.  Bootstrap
-        # cursors (-1: segment seqs start at 0, so the old snapshot is
-        # structurally empty) prune their terms at construction time —
-        # Catalyst would fold them, but only after paying analysis for
-        # every branch on the first refresh of every view.
-        terms = []
-        if r_old >= 0:
-            terms.append(self._join(da, self.right.signed_scan(r_old)))
-        terms.append(self._join(self.left.signed_scan(l_new), db))
-        if self.how == "left_outer":
-            # pad probes decide matchedness by row PRESENCE — their
-            # snapshots are merged live rows, with the delta-key
-            # restriction applied BELOW the tuple merge (r18, the
-            # aggregate sibling's _snap_live_keys treatment): the merge
-            # Exchange then carries only delta-key matches instead of the
-            # whole right table.  New left rows currently unmatched get
-            # pads (snapshot restricted to ΔA's own keys) …
-            terms.append(self._pad(da, self._snap_live_keyed(r_new, da), 1))
-            # … and matchedness flips re-emit/retract pads of OLD left
-            # rows; a_flip carries only ΔB keys by construction, so both
-            # snapshot probes restrict to ΔB's keys (the flip side itself
-            # is linear in the chain frequency — signed unmerged scan).
-            # Pruned at bootstrap: there are no old left rows to flip.
-            if l_old >= 0:
-                a_flip = self.left.signed_scan(l_old).join(
-                    db.select(*self.on), self.on, "left_semi"
-                )
-                terms.append(
-                    self._pad(a_flip, self._snap_live_keyed(r_new, db), 1)
-                )
-                # NOT gated on r_old: at a right-side bootstrap the old
-                # snapshot is empty, so the anti-join passes EVERY flip
-                # row — exactly the retraction of the pads those rows
-                # carried while the right table was empty
-                terms.append(self._pad(
-                    a_flip, self._snap_live_keyed(r_old, db), -1
-                ))
-        delta_view = terms[0]
-        for t in terms[1:]:
-            delta_view = delta_view.unionByName(t)
-        if not self.state.exists():
-            self.state.create(delta_view.drop(FREQ).schema)
-        # ONE action (r18): the expensive join/anti-join terms run exactly
-        # once, inside the segment write itself — the row count rides as
-        # an Observation metric whose zero value ABORTS the commit (no
-        # segment, no sequence slot: the old probe-then-skip contract),
-        # and the freq sign rides the same write (sign_obs inside
-        # _write_segment).  The r17 shape persisted the frame across an
-        # emptiness probe, a sign probe and the write — three actions and
-        # a cache of a potentially large delta.  The cursors ride IN the
-        # segment meta (atomic with the state), as before.  A delta whose
-        # rows all cancel in the merge still seals an (empty) segment,
-        # exactly like the probed shape: the metric counts pre-merge rows.
-        #
-        # IDLE refreshes (both windows structurally empty — also what
-        # crash recovery hits once the state cursors already advanced
-        # past a stale meta file) must skip the write: Catalyst folds the
-        # whole observed plan to an empty local relation, no job runs,
-        # and the never-fired CollectMetrics would make the metric read
-        # throw.  last_seq()==old ⟺ empty window (seqs are monotonic),
-        # so the check is metadata-only.
-        if not (l_new == l_old and r_new == r_old):
-            obs = Observation()
-            self.state._write_segment(
-                delta_view.observe(obs, F.count(F.lit(1)).alias("__n")),
-                extra_meta={
-                    "mv_cursor_left": l_new,
-                    "mv_cursor_right": r_new,
-                },
-                abort_observation=(obs, "__n"),
-            )
-        # Bound state growth: every non-empty refresh appends one segment
-        # and read() merges across all of them, so an unbounded refresh
-        # history would make reads pay an ever-growing merge.  Compact once
-        # the live count exceeds the threshold — the refresh cursors ride
-        # through (compact preserves the max of each mv_cursor* key), so
-        # the next refresh resumes from the same position.
-        max_segs = int(
-            self.spark.conf.get("incresql.mv.join_state.max_segments", "8")
-        )
-        if len(self.state._segments()) > max_segs:
-            self.state.compact()
-        self._save({"left_seq": l_new, "right_seq": r_new})
-
-    def read(self) -> DataFrame:
-        if not self.state.exists():
-            self.refresh()
-        return self.state.scan()
-
-    def drop(self) -> None:
-        shutil.rmtree(self.state_dir, ignore_errors=True)
-
-
 class AggregateJoinMaterializedView(MaterializedView):
     """Aggregate over an N-way chain join, maintained O(delta) — the
     reference's unrealized differential goal (storage/src/storage.rs:26-65)
@@ -1327,7 +1117,8 @@ class AggregateJoinMaterializedView(MaterializedView):
     multi-table join) refreshed from signed deltas, never recomputed.
 
     Delta rule: the N-way generalization of the bilinear join delta
-    (JoinMaterializedView; reference hash_join.rs:85,137) telescopes as
+    Δ(A⋈B) = ΔA ⋈ B_old ∪ A_new ⋈ ΔB (reference hash_join.rs:85,137)
+    telescopes as
 
         Δ(T1 ⋈ … ⋈ TN) = Σ_i  T1_new ⋈ … ⋈ T(i-1)_new ⋈ ΔTi
                                 ⋈ T(i+1)_old ⋈ … ⋈ TN_old
@@ -1393,7 +1184,10 @@ class AggregateJoinMaterializedView(MaterializedView):
             changelog=changelog,
         )
         if not self.is_aggregate:
-            raise ValueError("use JoinMaterializedView for non-aggregate joins")
+            raise ValueError(
+                "materialized views over non-aggregate joins are not "
+                "supported: GROUP BY every selected column and add "
+                "count(*) to keep the join's rows")
         self.tables = tables
         self.join_conds = join_conds
         self.table_filters = table_filters or [None] * len(tables)

@@ -880,26 +880,23 @@ def _bloom_idx_duck() -> str:
     return f"({h} % {BLOOM_M})"
 
 
-def bloom_bits(ev: DataFrame, dedup: bool = True) -> DataFrame:
+def bloom_bits(ev: DataFrame) -> DataFrame:
     """Eval-shingle frame (column ``shingle``, need not be distinct) ->
-    the m={BLOOM_M}-bit set as a distinct ``idx`` frame (<= m rows).
+    the m={BLOOM_M}-bit set as an ``idx`` frame of set positions, one row
+    per (shingle, probe): duplicates are left in, <= m distinct values.
     Shared by the batch screen and the incremental maintainer
     (streaming/bloom_incremental.py) so maintained bits come from the
     exact code path the batch operator uses; bit sets OR-merge, which on
-    this representation is just union + distinct.
-
-    ``dedup=False`` (r19) skips the trailing distinct for consumers that
-    fold the frame through an idempotent aggregate anyway (the
-    ``_bloom_test`` BIT_OR packing): identical bit set, one less
-    exchange.  State-bound consumers (the maintainer, whose stored
-    representation IS the distinct idx set) keep the default."""
+    this representation is just union + distinct.  No distinct here:
+    both consumers fold the frame through an idempotent step anyway —
+    the ``_bloom_test`` BIT_OR packing, the maintainer's merge distinct
+    — so a trailing one would be a pure extra exchange."""
     seeds = ", ".join(str(j) for j in range(BLOOM_K))
-    out = (
+    return (
         ev.select("shingle",
                   F.explode(F.expr(f"array({seeds})")).alias("j"))
         .select(F.expr(_bloom_idx_spark()).alias("idx"))
     )
-    return out.distinct() if dedup else out
 
 
 def _bloom_test(bits: DataFrame):
@@ -994,16 +991,14 @@ def dedup_contamination_bloom(
         # (countDistinct semantics need the set, and the small distinct
         # frame is what gets broadcast)
         ev = ev.distinct()
-    # Production mode feeds bloom_bits the RAW exploded shingles: its
-    # trailing distinct already bounds the bit set at <= m rows, so a
+    # Production mode feeds bloom_bits the RAW exploded shingles: the
+    # BIT_OR packing bounds the bit set at <= m/64 words, so a
     # pre-distinct only saves md5 work on the tiny eval side while
     # costing a full exchange in the serial bits-collect job (measured
     # at sf0.1, interleaved min-of-3: 3.31s -> 3.07s without it,
     # rows byte-identical).
     if bits is None:
-        # dedup=False: these bits only feed _bloom_test's idempotent
-        # BIT_OR packing — the distinct exchange would be pure overhead
-        bits = bloom_bits(ev, dedup=False)
+        bits = bloom_bits(ev)
     tr = docsh.filter(F.col("doc_id") >= EVAL_SET_MAX_DOC).select(
         F.col("doc_id").alias("train_doc_id"),
         F.explode("shingles").alias("shingle"),

@@ -18,9 +18,9 @@ fence-capable for HA writers) and, per eval delta batch:
 
 1. computes the DELTA's bit positions with ``bloom_bits`` — the exact
    code path of the batch operator, so values are byte-identical;
-2. OR-merges them into the state: read (at most m = 65,536 rows), union,
-   distinct, write new bucket versions — O(m) regardless of how many
-   eval docs ever streamed through;
+2. OR-merges them into the state (``AggState.merge_all``): read (at most
+   m = 65,536 rows), union, distinct, write new bucket versions — O(m)
+   regardless of how many eval docs ever streamed through;
 3. ``screen()`` runs the batch operator's own ``bloom_screen`` over a
    training frame with the maintained bits.
 
@@ -67,15 +67,8 @@ class IncrementalBloom:
     def add_eval_batch(self, ev: DataFrame) -> None:
         """OR-merge an eval batch's bits into the state.  ``ev`` is any
         frame with a ``shingle`` column (need not be distinct)."""
-        delta = bloom_bits(ev)
-        # the state was written from this very frame shape — skip footer
-        # schema inference on the read-back (read_buckets treatment)
-        old = self.state.read(schema=delta.schema)
-        merged = delta if old is None else (
-            old.unionByName(delta).distinct()
-        )
-        self.state.write_buckets(merged, ["idx"],
-                                 list(range(self.NUM_BUCKETS)))
+        # the merge's distinct dedups the delta's bits as well
+        self.state.merge_all(bloom_bits(ev), ["idx"], DataFrame.distinct)
 
     def bits(self) -> DataFrame | None:
         return self.state.read()

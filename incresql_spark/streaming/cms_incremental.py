@@ -13,9 +13,9 @@ writers) and, per delta batch:
 
 1. computes the DELTA's counters with ``cms_sketch`` — the exact code
    path of the batch operator, so values are byte-identical;
-2. sum-merges them into the state: read (at most d x min(w, |vocab|)
-   occupied counters), union, groupBy sum, write new bucket versions —
-   O(d*w) regardless of how much data ever streamed through;
+2. sum-merges them into the state (``AggState.merge_all``): read (at
+   most d x min(w, |vocab|) counters), union, groupBy sum, write new
+   bucket versions — O(d*w) regardless of the data ever streamed;
 3. ``estimate(cands)`` probes the maintained counters through the batch
    operator's own ``cms_probe`` arithmetic.
 
@@ -134,25 +134,19 @@ class IncrementalCms:
         whose counter reaches 0 are PURGED so the maintained frame stays
         identical to the from-scratch sketch of the net corpus."""
         key_cols = self.keys + ["i", "b"]
-        # the state was written from this very frame shape — skip footer
-        # schema inference on the read-back (read_buckets treatment)
-        old = self.state.read(schema=delta.schema)
-        # The bootstrap write goes through the SAME merge+purge shape as
-        # every later one: a caller-supplied counter frame may carry
-        # duplicate (*keys, i, b) rows or c<=0 rows (e.g. a first
-        # operation that is itself a retraction/correction), and
-        # persisting those verbatim would seed a state that is not
-        # row-identical to the from-scratch sketch — a later candidate
-        # hashing to a lingering c=0 row would read MIN(c)=0, violating
-        # the CMS no-underestimate guarantee the purge exists to protect.
-        merged = (
-            (delta if old is None else old.unionByName(delta))
-            .groupBy(*key_cols)
+        # merge_all applies the merge+purge on the bootstrap write too: a
+        # caller-supplied counter frame may carry duplicate (*keys, i, b)
+        # rows or c<=0 rows (e.g. a first operation that is itself a
+        # retraction/correction), and persisting those verbatim would
+        # seed a state that is not row-identical to the from-scratch
+        # sketch — a later candidate hashing to a lingering c=0 row would
+        # read MIN(c)=0, violating the CMS no-underestimate guarantee the
+        # purge exists to protect.
+        self.state.merge_all(
+            delta, key_cols,
+            lambda df: df.groupBy(*key_cols)
             .agg(F.sum("c").cast("bigint").alias("c"))
-            .filter(F.col("c") != 0)
-        )
-        self.state.write_buckets(
-            merged, key_cols, list(range(self.NUM_BUCKETS))
+            .filter(F.col("c") != 0),
         )
 
     def sketch(self) -> DataFrame | None:

@@ -13,9 +13,9 @@ MV family uses, fence-capable for HA writers) and, per delta batch:
 
 1. computes the DELTA's registers with ``hll_registers`` — the exact code
    path of the batch operator, so values are byte-identical;
-2. max-merges them into the state: read (at most |columns| x m = 12k
-   rows), union, groupBy max, write new bucket versions — O(m) regardless
-   of how much data ever streamed through;
+2. max-merges them into the state (``AggState.merge_all``): read (at
+   most |columns| x m = 12k rows), union, groupBy max, write new bucket
+   versions — O(m) regardless of how much data ever streamed through;
 3. ``estimate()`` finalizes the maintained registers through the batch
    operator's own ``hll_finalize`` arithmetic.
 
@@ -73,17 +73,10 @@ class IncrementalHll:
 
     def add_batch_values(self, vals: DataFrame) -> None:
         """Max-merge the registers of any (*keys, val) frame."""
-        delta = hll_registers(vals, self.p, tuple(self.keys))
-        # the state was written from this very frame shape — skip footer
-        # schema inference on the read-back (read_buckets treatment)
-        old = self.state.read(schema=delta.schema)
-        merged = delta if old is None else (
-            old.unionByName(delta)
-            .groupBy(*self.keys, "j")
-            .agg(F.max("mj").alias("mj"))
-        )
-        self.state.write_buckets(
-            merged, self.keys + ["j"], list(range(self.NUM_BUCKETS))
+        self.state.merge_all(
+            hll_registers(vals, self.p, tuple(self.keys)), self.keys + ["j"],
+            lambda df: df.groupBy(*self.keys, "j")
+            .agg(F.max("mj").alias("mj")),
         )
 
     def registers(self) -> DataFrame | None:

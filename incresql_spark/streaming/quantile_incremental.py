@@ -15,9 +15,8 @@ delta batch:
 1. computes the DELTA's bottom-k with the batch operator's own ordering
    (ORDER BY h, v LIMIT k — TakeOrderedAndProject, exchange bounded at
    k x tasks rows);
-2. min-k-merges it into the state: read (at most k rows), union, re-apply
-   bottom-k, write new bucket versions — O(k) regardless of how much data
-   ever streamed through;
+2. min-k-merges it into the state (``AggState.merge_all``): read, union,
+   re-apply bottom-k, write — O(k) regardless of the data streamed;
 3. ``estimate(base)`` finalizes the maintained sample through the batch
    operator's own ``quantile_finalize`` arithmetic.
 
@@ -60,26 +59,19 @@ class IncrementalQuantile:
 
     def add_batch(self, base: DataFrame) -> None:
         """Min-k-merge the batch's bottom-k into the maintained state."""
-        # dropDuplicates on BOTH paths keeps the sample's multiset/set
-        # semantics uniform (round-15 advice: the batch operator keeps
-        # (h, v) multiset duplicates, so a 60-bit hash collision with
-        # equal values — probability ~2^-60 — could otherwise make the
-        # first-batch sample diverge from a later merge of the same
-        # rows), and makes replayed deltas true no-ops (the idempotence
-        # claim above): without it a replayed row would occupy two sample
-        # slots and evict a legitimate one.  The frames are <= 2k rows.
-        delta = (base.orderBy("h", "v").limit(self.k)
-                 .dropDuplicates(["h", "v"]))
-        # the state was written from this very frame shape — skip footer
-        # schema inference on the read-back (read_buckets treatment)
-        old = self.state.read(schema=delta.schema)
-        merged = delta if old is None else (
-            old.unionByName(delta)
-            .dropDuplicates(["h", "v"])
-            .orderBy("h", "v").limit(self.k)
-        )
-        self.state.write_buckets(
-            merged, ["h"], list(range(self.NUM_BUCKETS))
+        # the merge dedups before its bottom-k on every write, the first
+        # included: the sample keeps set semantics (round-15 advice: the
+        # batch operator keeps (h, v) multiset duplicates, so a 60-bit
+        # hash collision with equal values — probability ~2^-60 — could
+        # otherwise make the first-batch sample diverge from a later
+        # merge of the same rows), and replayed deltas are true no-ops
+        # (the idempotence claim above): without it a replayed row would
+        # occupy two sample slots and evict a legitimate one.  The frames
+        # are <= 2k rows.
+        self.state.merge_all(
+            base.orderBy("h", "v").limit(self.k), ["h"],
+            lambda df: df.dropDuplicates(["h", "v"])
+            .orderBy("h", "v").limit(self.k),
         )
 
     def sample(self) -> DataFrame | None:
@@ -119,18 +111,12 @@ class IncrementalQuantileGrouped:
         """Min-k-merge the batch's per-group bottom-k into the state."""
         from ..operators.relational import quantile_grouped_sample
 
-        # dedup on both paths for uniform set semantics under 60-bit
-        # hash collisions, as in the global maintainer
-        delta = quantile_grouped_sample(base, self.k) \
-            .dropDuplicates(["g", "h", "v"])
-        # the state was written from this very frame shape — skip footer
-        # schema inference on the read-back (read_buckets treatment)
-        old = self.state.read(schema=delta.schema)
-        merged = delta if old is None else quantile_grouped_sample(
-            old.unionByName(delta).dropDuplicates(["g", "h", "v"]), self.k
-        )
-        self.state.write_buckets(
-            merged, ["g", "h"], list(range(self.NUM_BUCKETS))
+        # the merge dedups before every bottom-k for set semantics under
+        # 60-bit hash collisions, as in the global maintainer
+        self.state.merge_all(
+            quantile_grouped_sample(base, self.k), ["g", "h"],
+            lambda df: quantile_grouped_sample(
+                df.dropDuplicates(["g", "h", "v"]), self.k),
         )
 
     def sample(self) -> DataFrame | None:

@@ -291,6 +291,54 @@ def test_registration_sees_views_and_mvs(engine):
     assert rows(e, "SELECT * FROM rv") == [(1,), (2,)]
 
 
+def test_drop_refuses_a_table_a_view_reads(engine):
+    """DROP TABLE while a materialized view reads the table would leave
+    the view stale: its cursor holds the dropped table's seqs, so a table
+    re-created under the name is skipped, not refreshed.  The drop is
+    refused, naming the view, until the view is dropped.  DROP DATABASE
+    refuses the same way for views in other databases, cascaded views
+    over a view inside it included."""
+    e = engine
+    e.execute_statement("CREATE TABLE t (k INT, v INT)")
+    e.execute_statement("INSERT INTO t VALUES (0, 10), (1, 10), (2, 10)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW mv AS SELECT k, sum(v) AS s FROM t GROUP BY k")
+    with pytest.raises(ValueError, match="default.mv"):
+        e.execute_statement("DROP TABLE t")
+    # the refused drop changed nothing
+    e.execute_statement("INSERT INTO t VALUES (1, 7)")
+    e.execute_statement("REFRESH MATERIALIZED VIEW mv")
+    assert rows(e, "SELECT * FROM mv") == [(0, 10), (1, 17), (2, 10)]
+    e.execute_statement("DROP MATERIALIZED VIEW mv")
+    e.execute_statement("DROP TABLE t")
+    e.execute_statement("CREATE TABLE t (k INT, v INT)")
+    e.execute_statement("INSERT INTO t VALUES (1, 7), (5, 7)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW mv AS SELECT k, sum(v) AS s FROM t GROUP BY k")
+    assert rows(e, "SELECT * FROM mv") == [(1, 7), (5, 7)]
+
+    e.execute_statement("CREATE DATABASE other")
+    e.execute_statement("CREATE TABLE other.u (k INT)")
+    e.execute_statement("INSERT INTO other.u VALUES (1)")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW other.inner_mv AS "
+        "SELECT k, count(*) AS n FROM other.u GROUP BY k")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW outer_mv AS "
+        "SELECT k, count(*) AS n FROM other.u GROUP BY k")
+    e.execute_statement(
+        "CREATE MATERIALIZED VIEW casc AS "
+        "SELECT count(*) AS n_keys FROM other.inner_mv")
+    with pytest.raises(ValueError, match="default.casc, default.outer_mv"):
+        e.execute_statement("DROP DATABASE other")
+    assert rows(e, "SELECT * FROM other.inner_mv") == [(1, 1)]
+    # a view inside the dropped database goes with it
+    e.execute_statement("DROP MATERIALIZED VIEW outer_mv")
+    e.execute_statement("DROP MATERIALIZED VIEW casc")
+    e.execute_statement("DROP DATABASE other")
+    assert "other" not in e.databases()
+
+
 def test_registration_use_switches_bare_names(engine):
     e = engine
     e.execute_statement("CREATE TABLE ru (a INT)")

@@ -8,12 +8,28 @@ import pytest
 
 from incresql_spark.engine import Engine
 from incresql_spark.frequency import FreqTable
-from incresql_spark.materialize import JoinMaterializedView
+from incresql_spark.materialize import AggregateJoinMaterializedView
 
 
 @pytest.fixture()
 def engine(spark, tmp_path):
     return Engine(spark, str(tmp_path / "wh"))
+
+
+def _join_rows_view(spark, a, b, state_dir, how="inner"):
+    """The plain join of a (k, av) and b (bk, bv) as a view: grouped by
+    every output column with count(*), which keeps the join's multiset."""
+    return AggregateJoinMaterializedView(
+        spark, "mv_rows", [a, b], ["k = bk"], "k, av, bv, count(*) AS n",
+        None, "k, av, bv", state_dir, hows=[how],
+    )
+
+
+def _join_rows(mv):
+    """A ``_join_rows_view``'s rows expanded back to the join multiset."""
+    got = mv.read().collect()
+    assert all(r.n > 0 for r in got), got
+    return sorted(tuple(r)[:-1] for r in got for _ in range(r.n))
 
 
 def rows(e, sql):
@@ -96,19 +112,17 @@ def test_join_mv_bilinear_delta(spark, tmp_path):
     from pyspark.sql import types as T
 
     a.create(T.StructType([T.StructField("k", T.IntegerType()), T.StructField("av", T.StringType())]))
-    b.create(T.StructType([T.StructField("k", T.IntegerType()), T.StructField("bv", T.StringType())]))
+    b.create(T.StructType([T.StructField("bk", T.IntegerType()), T.StructField("bv", T.StringType())]))
     a.insert(spark.createDataFrame([(1, "a1"), (2, "a2")], "k int, av string"))
-    b.insert(spark.createDataFrame([(1, "b1")], "k int, bv string"))
-    mv = JoinMaterializedView(
-        spark, "mv_j", a, b, ["k"], ["k", "av", "bv"], str(tmp_path / "mvj")
-    )
+    b.insert(spark.createDataFrame([(1, "b1")], "bk int, bv string"))
+    mv = _join_rows_view(spark, a, b, str(tmp_path / "mvj"))
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [(1, "a1", "b1")]
+    assert _join_rows(mv) == [(1, "a1", "b1")]
     # delta on both sides, including a match for pre-existing a-row 2
     a.insert(spark.createDataFrame([(3, "a3")], "k int, av string"))
-    b.insert(spark.createDataFrame([(2, "b2"), (3, "b3")], "k int, bv string"))
+    b.insert(spark.createDataFrame([(2, "b2"), (3, "b3")], "bk int, bv string"))
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", "b1"),
         (2, "a2", "b2"),
         (3, "a3", "b3"),
@@ -116,7 +130,7 @@ def test_join_mv_bilinear_delta(spark, tmp_path):
     # retraction through the join
     b.delete_where("bv = 'b1'")
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (2, "a2", "b2"),
         (3, "a3", "b3"),
     ]
@@ -604,47 +618,44 @@ def test_left_outer_join_mv_pad_flips(spark, tmp_path):
     a = FreqTable(spark, str(tmp_path / "loa"))
     b = FreqTable(spark, str(tmp_path / "lob"))
     a.create(T.StructType([T.StructField("k", T.IntegerType()), T.StructField("av", T.StringType())]))
-    b.create(T.StructType([T.StructField("k", T.IntegerType()), T.StructField("bv", T.StringType())]))
+    b.create(T.StructType([T.StructField("bk", T.IntegerType()), T.StructField("bv", T.StringType())]))
     a.insert(spark.createDataFrame([(1, "a1"), (2, "a2")], "k int, av string"))
-    mv = JoinMaterializedView(
-        spark, "mv_lo", a, b, ["k"], ["k", "av", "bv"], str(tmp_path / "mvlo"),
-        how="left_outer",
-    )
+    mv = _join_rows_view(spark, a, b, str(tmp_path / "mvlo"), how="left_outer")
     mv.refresh()
     # empty right side: every left row is NULL-padded
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", None), (2, "a2", None),
     ]
     # first match for k=1 retracts its pad and emits the joined row
-    b.insert(spark.createDataFrame([(1, "b1")], "k int, bv string"))
+    b.insert(spark.createDataFrame([(1, "b1")], "bk int, bv string"))
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", "b1"), (2, "a2", None),
     ]
     # second match for k=1 does NOT add a pad (count 1→2, no flip); new
     # unmatched left row gets a pad
-    b.insert(spark.createDataFrame([(1, "b1x")], "k int, bv string"))
+    b.insert(spark.createDataFrame([(1, "b1x")], "bk int, bv string"))
     a.insert(spark.createDataFrame([(3, "a3")], "k int, av string"))
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", "b1"), (1, "a1", "b1x"), (2, "a2", None), (3, "a3", None),
     ]
     # deleting ONE of k=1's matches: joined row retracts, still no pad
     b.delete_where("bv = 'b1x'")
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", "b1"), (2, "a2", None), (3, "a3", None),
     ]
     # deleting the LAST match flips back: pad row re-emerges
     b.delete_where("bv = 'b1'")
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", None), (2, "a2", None), (3, "a3", None),
     ]
     # left-side retraction drops both joined and pad rows
     a.delete_where("k = 2")
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [
+    assert _join_rows(mv) == [
         (1, "a1", None), (3, "a3", None),
     ]
 
@@ -700,8 +711,6 @@ def test_left_outer_join_mv_random_histories_match_recompute(spark, tmp_path):
     must equal a from-scratch recompute of the LEFT JOIN + GROUP BY over
     the live multisets — including pad births/deaths mid-history."""
     import random
-
-    from incresql_spark.materialize import AggregateJoinMaterializedView
 
     rng = random.Random(1234)
     a2 = FreqTable(spark, str(tmp_path / "loa2"))
@@ -910,28 +919,6 @@ def test_refresh_crash_between_state_commit_and_meta_is_exactly_once(spark, tmp_
     lmv.refresh()
     got = sorted(tuple(r) for r in lmv.read().collect())
     assert got.count(("z", 3)) == 1, got  # exactly once, not duplicated
-
-    # -- non-aggregate join MV --------------------------------------------
-    a = FreqTable(spark, str(tmp_path / "ja"))
-    b = FreqTable(spark, str(tmp_path / "jb"))
-    a.create(spark.createDataFrame([], "k int, av string").schema)
-    b.create(spark.createDataFrame([], "k int, bv string").schema)
-    a.insert(spark.createDataFrame([(1, "a1")], "k int, av string"))
-    b.insert(spark.createDataFrame([(1, "b1")], "k int, bv string"))
-    jmv = JoinMaterializedView(
-        spark, "jmv_crash", a, b, ["k"], ["k", "av", "bv"],
-        str(tmp_path / "jstate"),
-    )
-    jmv.refresh()
-    b.insert(spark.createDataFrame([(1, "b2")], "k int, bv string"))
-    orig = jmv._save
-    jmv._save = lambda meta: (_ for _ in ()).throw(RuntimeError("crash"))
-    with pytest.raises(RuntimeError):
-        jmv.refresh()
-    jmv._save = orig
-    jmv.refresh()
-    got = sorted(tuple(r) for r in jmv.read().collect())
-    assert got == [(1, "a1", "b1"), (1, "a1", "b2")], got
 
     # -- aggregate join MV -------------------------------------------------
     aa = FreqTable(spark, str(tmp_path / "aja"))
@@ -1227,47 +1214,6 @@ def test_mv_ddl_failed_constructor_rolls_back(engine):
     engine.execute_statement("DROP MATERIALIZED VIEW mv_rc")
 
 
-def test_join_mv_segment_growth_is_bounded(spark, tmp_path):
-    """Every non-empty refresh appends one row-state segment; without a
-    bound, 1000 refreshes would make each read() merge 1000 segments.  The
-    auto-compact threshold (incresql.mv.join_state.max_segments) must keep
-    the live count bounded across many refreshes while preserving read
-    equivalence AND the refresh cursors (a lost cursor would re-apply old
-    deltas and double-count)."""
-    from pyspark.sql import types as T
-
-    from incresql_spark.materialize import JoinMaterializedView
-
-    a = FreqTable(spark, str(tmp_path / "ga"))
-    b = FreqTable(spark, str(tmp_path / "gb"))
-    a.create(T.StructType([T.StructField("k", T.IntegerType()),
-                           T.StructField("av", T.StringType())]))
-    b.create(T.StructType([T.StructField("k", T.IntegerType()),
-                           T.StructField("bv", T.StringType())]))
-    mv = JoinMaterializedView(
-        spark, "mv_g", a, b, ["k"], ["k", "av", "bv"],
-        str(tmp_path / "mvg"), how="left_outer",
-    )
-    live: dict[int, tuple] = {}
-    for i in range(20):
-        a.insert(spark.createDataFrame([(i, f"a{i}")], "k int, av string"))
-        if i % 2 == 0:
-            b.insert(spark.createDataFrame([(i, f"b{i}")], "k int, bv string"))
-        if i == 15:  # a retraction wave flips row 14 back to a pad
-            b.delete_where("k = 14")
-        mv.refresh()
-        n_segs = len(mv.state._segments())
-        assert n_segs <= 9, f"refresh {i}: {n_segs} live segments"
-    expect = sorted(
-        (i, f"a{i}", f"b{i}" if (i % 2 == 0 and i != 14) else None)
-        for i in range(20)
-    )
-    assert sorted(tuple(r) for r in mv.read().collect()) == expect
-    # cursors survived compaction: an idle refresh applies nothing
-    mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == expect
-
-
 def test_agg_state_range_key_declared_and_non_numeric_raises(spark, tmp_path):
     """Round-10 range-layout generalization: (a) the range key may be any
     DECLARED group key (incresql.mv.state.range_key), not just the leading
@@ -1329,75 +1275,72 @@ def test_agg_state_range_key_declared_and_non_numeric_raises(spark, tmp_path):
 
 
 def test_join_mv_left_outer_randomized_differential_with_compaction(spark, tmp_path):
-    """Randomized insert/delete histories through the 2-way LEFT OUTER
-    JoinMaterializedView — the round-10 surface (delta-key-restricted pad
-    probes, persisted delta_view, auto-compact) — must match a Python
-    multiset left-join model after EVERY refresh, with the compaction
-    threshold forced low so segments merge mid-history (cursors must ride
-    through; duplicates exercise freq > 1)."""
+    """Randomized insert/delete histories through a 2-way LEFT OUTER join
+    view that keeps the join's rows (grouped by every column with
+    count(*)) must match a Python multiset left-join model after EVERY
+    refresh; duplicates exercise freq > 1.  The bucketed state compacts
+    as it goes: at most 2 manifests, at most 2 versions per bucket and no
+    stage dirs after any refresh."""
+    import os
     import random
+    from collections import Counter
 
     from pyspark.sql import types as T
 
-    from incresql_spark.materialize import JoinMaterializedView
-
-    prev = spark.conf.get("incresql.mv.join_state.max_segments", None)
-    spark.conf.set("incresql.mv.join_state.max_segments", "3")
-    try:
-        for seed in (0, 1):
-            rng = random.Random(seed)
-            a = FreqTable(spark, str(tmp_path / f"ra{seed}"))
-            b = FreqTable(spark, str(tmp_path / f"rb{seed}"))
-            a.create(T.StructType([T.StructField("k", T.IntegerType()),
-                                   T.StructField("av", T.StringType())]))
-            b.create(T.StructType([T.StructField("k", T.IntegerType()),
-                                   T.StructField("bv", T.StringType())]))
-            mv = JoinMaterializedView(
-                spark, f"rmv{seed}", a, b, ["k"], ["k", "av", "bv"],
-                str(tmp_path / f"rmv{seed}"), how="left_outer",
+    for seed in (0, 1):
+        rng = random.Random(seed)
+        a = FreqTable(spark, str(tmp_path / f"ra{seed}"))
+        b = FreqTable(spark, str(tmp_path / f"rb{seed}"))
+        a.create(T.StructType([T.StructField("k", T.IntegerType()),
+                               T.StructField("av", T.StringType())]))
+        b.create(T.StructType([T.StructField("bk", T.IntegerType()),
+                               T.StructField("bv", T.StringType())]))
+        state_dir = str(tmp_path / f"rmv{seed}")
+        mv = _join_rows_view(spark, a, b, state_dir, how="left_outer")
+        agg_path = os.path.join(state_dir, "agg")
+        la: list[tuple] = []  # live multiset of (k, av)
+        lb: list[tuple] = []  # live multiset of (bk, bv)
+        for step in range(10):
+            op = rng.choice(["ins_a", "ins_b", "ins_b", "del_a", "del_b"])
+            if op == "ins_a":
+                rows_ = [(rng.randrange(5), f"a{rng.randrange(3)}")
+                         for _ in range(rng.randrange(1, 4))]
+                la += rows_
+                a.insert(spark.createDataFrame(rows_, "k int, av string"))
+            elif op == "ins_b":
+                rows_ = [(rng.randrange(5), f"b{rng.randrange(3)}")
+                         for _ in range(rng.randrange(1, 4))]
+                lb += rows_
+                b.insert(spark.createDataFrame(rows_, "bk int, bv string"))
+            elif op == "del_a" and la:
+                key = rng.randrange(5)
+                la = [r for r in la if r[0] != key]
+                a.delete_where(f"k = {key}")
+            elif op == "del_b" and lb:
+                key = rng.randrange(5)
+                lb = [r for r in lb if r[0] != key]
+                b.delete_where(f"bk = {key}")
+            mv.refresh()
+            expected: Counter = Counter()
+            for k, av in la:
+                matches = [bv for kb, bv in lb if kb == k]
+                if matches:
+                    expected.update((k, av, bv) for bv in matches)
+                else:
+                    expected[(k, av, None)] += 1
+            got = mv.read().collect()
+            assert all(r.n > 0 for r in got), (seed, step, got)
+            assert {(r.k, r.av, r.bv): r.n for r in got} == dict(expected), (
+                f"seed={seed} step={step} op={op}"
             )
-            la: list[tuple] = []  # live multiset of (k, av)
-            lb: list[tuple] = []  # live multiset of (k, bv)
-            for step in range(10):
-                op = rng.choice(["ins_a", "ins_b", "ins_b", "del_a", "del_b"])
-                if op == "ins_a":
-                    rows = [(rng.randrange(5), f"a{rng.randrange(3)}")
-                            for _ in range(rng.randrange(1, 4))]
-                    la += rows
-                    a.insert(spark.createDataFrame(rows, "k int, av string"))
-                elif op == "ins_b":
-                    rows = [(rng.randrange(5), f"b{rng.randrange(3)}")
-                            for _ in range(rng.randrange(1, 4))]
-                    lb += rows
-                    b.insert(spark.createDataFrame(rows, "k int, bv string"))
-                elif op == "del_a" and la:
-                    key = rng.randrange(5)
-                    la = [r for r in la if r[0] != key]
-                    a.delete_where(f"k = {key}")
-                elif op == "del_b" and lb:
-                    key = rng.randrange(5)
-                    lb = [r for r in lb if r[0] != key]
-                    b.delete_where(f"k = {key}")
-                mv.refresh()
-                expected = []
-                for k, av in la:
-                    matches = [bv for kb, bv in lb if kb == k]
-                    if matches:
-                        expected += [(k, av, bv) for bv in matches]
-                    else:
-                        expected.append((k, av, None))
-                got = sorted(
-                    tuple(r) for r in mv.read().collect()
-                )
-                assert got == sorted(
-                    expected, key=lambda t: (t[0], t[1], t[2] or "")
-                ), f"seed={seed} step={step} op={op}"
-            assert len(mv.state._segments()) <= 4
-    finally:
-        if prev is None:
-            spark.conf.unset("incresql.mv.join_state.max_segments")
-        else:
-            spark.conf.set("incresql.mv.join_state.max_segments", prev)
+            if os.path.isdir(agg_path):
+                names = os.listdir(agg_path)
+                assert len([n for n in names if n.startswith("manifest-")]) <= 2
+                assert not [n for n in names if n.startswith("stage-")]
+                for name in names:
+                    if name.startswith("b-"):
+                        vers = os.listdir(os.path.join(agg_path, name))
+                        assert len(vers) <= 2, f"{name} kept {sorted(vers)}"
 
 
 def test_linear_mv_fused_refresh_contract(spark, tmp_path):
@@ -1452,30 +1395,27 @@ def test_linear_mv_fused_refresh_contract(spark, tmp_path):
 
 
 def test_join_mv_zero_task_observed_write_aborts(spark, tmp_path):
-    """r18 hardening: a non-idle refresh whose whole delta plan collapses
-    to zero tasks (here: INNER join terms against a right table that has
-    never had a segment, so every term folds empty) must abort the fused
-    write through the tolerant metric read — no crash, no segment, and
-    the view catches up normally once the right side gets data."""
+    """A non-idle refresh whose whole delta collapses to nothing (here:
+    an INNER join of a left delta with a right table that has never had
+    a segment, so every term is empty) must write no state and not
+    crash, and the view catches up normally once the right side gets
+    data."""
     from pyspark.sql import types as T
 
     a = FreqTable(spark, str(tmp_path / "za"))
     b = FreqTable(spark, str(tmp_path / "zb"))
     a.create(T.StructType([T.StructField("k", T.IntegerType()),
                            T.StructField("av", T.StringType())]))
-    b.create(T.StructType([T.StructField("k", T.IntegerType()),
+    b.create(T.StructType([T.StructField("bk", T.IntegerType()),
                            T.StructField("bv", T.StringType())]))
-    mv = JoinMaterializedView(
-        spark, "mv_z", a, b, ["k"], ["k", "av", "bv"],
-        str(tmp_path / "mvz"),
-    )
+    mv = _join_rows_view(spark, a, b, str(tmp_path / "mvz"))
     a.insert(spark.createDataFrame([(1, "a1")], "k int, av string"))
-    mv.refresh()  # left delta, right empty-forever: zero-task write
-    assert mv.state._segments() == []
-    assert [tuple(r) for r in mv.read().collect()] == []
-    b.insert(spark.createDataFrame([(1, "b1")], "k int, bv string"))
+    assert mv.refresh() == 0  # left delta, right empty-forever
+    assert mv.state._load_manifest() is None
+    assert _join_rows(mv) == []
+    b.insert(spark.createDataFrame([(1, "b1")], "bk int, bv string"))
     mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [(1, "a1", "b1")]
+    assert _join_rows(mv) == [(1, "a1", "b1")]
 
 
 def test_pipelined_prepare_commit_equals_serial_refresh(spark, tmp_path):

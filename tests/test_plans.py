@@ -775,3 +775,77 @@ def test_quantize_int8_one_dim_shuffle_then_narrow(spark):
     )
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
     assert len(re.findall(r"BroadcastExchange", plan)) == 1
+
+
+def _sketch_feed(spark, name):
+    """(maintainer factory, wave w -> ingest) for one sketch maintainer,
+    over two halves of the small fixture."""
+    from incresql_spark.operators.dedup import EVAL_SET_MAX_DOC, _doc_shingles
+    from incresql_spark.operators.relational import (
+        quantile_base,
+        quantile_grouped_base,
+    )
+    from incresql_spark.operators.text import CMS_D, CMS_W, cms_tokens
+    from incresql_spark.streaming.bloom_incremental import IncrementalBloom
+    from incresql_spark.streaming.cms_incremental import IncrementalCms
+    from incresql_spark.streaming.hll_incremental import IncrementalHll
+    from incresql_spark.streaming.quantile_incremental import (
+        IncrementalQuantile,
+        IncrementalQuantileGrouped,
+    )
+
+    if name == "hll":
+        li = load_table(spark, SF_SMALL, "lineitem")
+        return (lambda d: IncrementalHll(spark, d),
+                lambda m, w: m.add_batch(li.filter(f"l_orderkey % 2 = {w}")))
+    if name == "cms":
+        docs = load_table(spark, SF_SMALL, "documents")
+        return (lambda d: IncrementalCms(spark, d, width=CMS_W, depth=CMS_D),
+                lambda m, w: m.add_batch(
+                    cms_tokens(docs.filter(f"doc_id % 2 = {w}"))))
+    if name == "bloom":
+        ev = _doc_shingles(spark, SF_SMALL).filter(
+            F.col("doc_id") < EVAL_SET_MAX_DOC
+        ).select("doc_id", F.explode("shingles").alias("shingle"))
+        return (lambda d: IncrementalBloom(spark, d),
+                lambda m, w: m.add_eval_batch(ev.filter(f"doc_id % 2 = {w}")))
+    if name == "quantile":
+        li = load_table(spark, SF_SMALL, "lineitem")
+        return (lambda d: IncrementalQuantile(spark, d),
+                lambda m, w: m.add_batch(
+                    quantile_base(li.filter(f"l_orderkey % 2 = {w}"))))
+    o = load_table(spark, SF_SMALL, "orders")
+    return (lambda d: IncrementalQuantileGrouped(spark, d),
+            lambda m, w: m.add_batch(
+                quantile_grouped_base(o.filter(f"o_orderkey % 2 = {w}"))))
+
+
+@pytest.mark.parametrize("name, exchanges", [
+    ("hll", 3),               # input distinct, register max, merge max
+    ("cms", 3),
+    ("bloom", 1),             # the merge's distinct only: no pre-merge one
+    ("quantile", 1),
+    ("quantile_grouped", 3),
+])
+def test_sketch_merge_plan_shapes(spark, tmp_path, monkeypatch, name,
+                                  exchanges):
+    """Each sketch maintainer's merge runs through ``AggState.merge_all``;
+    the frame it hands ``write_buckets`` once state exists (wave 2: state
+    ∪ delta, then the merge) keeps a pinned exchange count, so a
+    redundant shuffle in a delta or a merge shows up here."""
+    from incresql_spark.materialize import AggState
+
+    plans = []
+    write = AggState.write_buckets
+
+    def capture(self, merged, *args, **kwargs):
+        plans.append(merged._jdf.queryExecution().executedPlan().toString())
+        return write(self, merged, *args, **kwargs)
+
+    monkeypatch.setattr(AggState, "write_buckets", capture)
+    make, ingest = _sketch_feed(spark, name)
+    maintainer = make(str(tmp_path / "state"))
+    ingest(maintainer, 0)
+    ingest(maintainer, 1)
+    assert len(plans) == 2
+    assert plans[1].count("Exchange") == exchanges, plans[1]
