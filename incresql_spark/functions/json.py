@@ -63,17 +63,6 @@ def json_extract(col: Column | str, path: str) -> Column:
     return F.to_json(F.try_variant_get(F.parse_json(c), p, "variant"))
 
 
-def json_unquote_extract(col: Column | str, path: str) -> Column:
-    """``->>`` = json_unquote(json_extract(x, p)) — the reference's exact
-    composition (json_extract_unquote.rs:10-23); keeps decimal fidelity
-    and the json-null → ``'null'`` text behaviour."""
-    c = F.col(col) if isinstance(col, str) else col
-    p = translate_path(path)
-    if "*" in p:
-        return F.get_json_object(c, p)
-    return json_unquote(F.to_json(F.try_variant_get(F.parse_json(c), p, "variant")))
-
-
 def json_unquote(col: Column | str) -> Column:
     """``json_unquote``: strip quotes from a JSON string value, pass others
     through; SQL NULL → SQL NULL (typed TEXT)."""

@@ -44,7 +44,6 @@ import os
 import re
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,35 +51,12 @@ from pyspark.sql.types import DecimalType, StructType
 
 from . import commit
 from .frequency import FREQ, FreqTable
+from .session import raise_chained, worker_pool
 
 _AGG_RE = re.compile(
     r"^\s*(count|sum|avg)\s*\(\s*(\*|.+?)\s*\)\s+AS\s+(\w+)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-
-
-def _worker_pools(spark: SparkSession, n: int) -> list[ThreadPoolExecutor]:
-    """``n`` single-worker pools whose threads run like the calling thread
-    on the JVM side: under its local properties (job group, description),
-    so an engine KILL of the statement cancels the workers' jobs too and
-    session accounting sees them tagged, and with its active session, so
-    pyspark calls on a worker do not fall back to ``getOrCreate`` round
-    trips.  Each thread gets its own copy of the properties, cloned here
-    on the caller (Spark sets per-query keys on a thread's properties
-    object), and sets both once when it starts: a handful of py4j calls
-    per pool, where ``pyspark.inheritable_thread_target``'s per-call
-    pinned-connection churn measured ~0.9s per cascade cycle."""
-    jsc = spark.sparkContext._jsc.sc()
-    props = jsc.getLocalProperties()
-    jvm_session = spark.sparkContext._jvm.SparkSession
-
-    def start(own_props) -> None:
-        jsc.setLocalProperties(own_props)
-        jvm_session.setActiveSession(spark._jsparkSession)
-
-    return [ThreadPoolExecutor(max_workers=1, initializer=start,
-                               initargs=(props.clone(),))
-            for _ in range(n)]
 
 
 def _parse_select_items(select_list: str) -> list[tuple[str, str, str]]:
@@ -965,7 +941,7 @@ class MaterializedView:
             # replay guard skips the duplicate append.  Both jobs read
             # the persisted ``merged``; concurrent first actions may race
             # the cache fill, bounded by |touched groups|.
-            with _worker_pools(self.spark, 1)[0] as ex:
+            with worker_pool(self.spark) as ex:
                 fut = ex.submit(self._emit_changelog, old, merged, cursor)
                 try:
                     st.write_buckets(merged, keys, touched, extra=cursor,
@@ -1519,8 +1495,8 @@ class RefreshPipeline:
             raise ValueError("every level but the last needs a changelog")
         self._errors: list[BaseException] = []
         # stage 0: root prepares; stage 1: root commits; k+1: level k
-        self._stages = _worker_pools(self.chain[0].spark,
-                                     len(self.chain) + 1)
+        self._stages = [worker_pool(self.chain[0].spark)
+                        for _ in range(len(self.chain) + 1)]
 
     def __enter__(self) -> "RefreshPipeline":
         return self
@@ -1545,10 +1521,7 @@ class RefreshPipeline:
             return
         for view in self.chain:
             view._prepared = None  # the next refresh reads the committed cursor
-        for a, b in zip(self._errors, self._errors[1:]):
-            if a.__cause__ is None:
-                a.__cause__ = b
-        raise self._errors[0]
+        raise_chained(self._errors)
 
     def _prepare(self, bound) -> None:
         root, handles = self.chain[0], []

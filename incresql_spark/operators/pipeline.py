@@ -369,30 +369,24 @@ def _q3_drive_waves(tables, after_wave=lambda: None) -> None:
     directories, independent commits), so they run concurrently — the
     wave completes at the slowest table's wall instead of the serial
     sum."""
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import overlap
 
-    def _ingest(args) -> None:
-        t, df = args
-        t.insert(df, assume_distinct=True)
+    spark = tables["lineitem"][0].spark
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        # wave 1: dimension + even orderkeys
-        list(pool.map(_ingest, [
-            (tables["customer"][0], tables["customer"][1]),
-            (tables["orders"][0],
-             tables["orders"][1].filter("o_orderkey % 2 = 0")),
-            (tables["lineitem"][0],
-             tables["lineitem"][1].filter("l_orderkey % 2 = 0")),
-        ]))
-        after_wave()
-        # wave 2: odd orderkeys on BOTH fact-side tables
-        list(pool.map(_ingest, [
-            (tables["orders"][0],
-             tables["orders"][1].filter("o_orderkey % 2 = 1")),
-            (tables["lineitem"][0],
-             tables["lineitem"][1].filter("l_orderkey % 2 = 1")),
-        ]))
-        after_wave()
+    def ingest(name, where=None):
+        t, df = tables[name]
+        df = df if where is None else df.filter(where)
+        return lambda: t.insert(df, assume_distinct=True)
+
+    # wave 1: dimension + even orderkeys
+    overlap(spark, ingest("customer"),
+            ingest("orders", "o_orderkey % 2 = 0"),
+            ingest("lineitem", "l_orderkey % 2 = 0"))
+    after_wave()
+    # wave 2: odd orderkeys on BOTH fact-side tables
+    overlap(spark, ingest("orders", "o_orderkey % 2 = 1"),
+            ingest("lineitem", "l_orderkey % 2 = 1"))
+    after_wave()
     # wave 3: retraction — DELETE one return-flag class (the delete
     # derives its negative segment from the table's own live scan, which
     # is independent of MV state)
@@ -722,6 +716,7 @@ def mv_q13_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..frequency import FreqTable
     from ..materialize import AggregateJoinMaterializedView, RefreshPipeline
+    from ..session import overlap
 
     root = tempfile.mkdtemp(prefix="incr_mv_q13_")
     try:
@@ -748,14 +743,10 @@ def mv_q13_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # TPC-H rows are tuple-distinct — skip the in-batch merge shuffle;
         # the two tables are independent, so their ingests overlap
         # (guide §2.6, the _q3_drive_waves treatment)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(cust.insert, cust_src, assume_distinct=True)
-            fb = pool.submit(ords.insert,
-                             ord_src.filter("o_orderkey % 2 = 0"),
-                             assume_distinct=True)
-            fa.result(); fb.result()
+        overlap(spark,
+                lambda: cust.insert(cust_src, assume_distinct=True),
+                lambda: ords.insert(ord_src.filter("o_orderkey % 2 = 0"),
+                                    assume_distinct=True))
 
         with RefreshPipeline([mv]) as pipe:
             # refresh 1: many customers still NULL-padded
@@ -841,14 +832,13 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         #    prep/ingest instead of running as three serial fences.
         # Per-wave outputs, and hence the union, stay byte-identical to
         # the serial drive; only job scheduling changes.
-        from concurrent.futures import ThreadPoolExecutor
-
         from ..plans import layout
         from ..plans.layout import materialize
+        from ..session import worker_pool
 
         futs = []
         try:
-            with ThreadPoolExecutor(max_workers=3) as pool:
+            with worker_pool(spark, 3) as pool:
                 prep = dd.prepare_batch(docs.filter("doc_id % 3 = 0"))
                 for w in range(3):
                     nxt = (

@@ -1523,8 +1523,8 @@ def text_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ {B} rows per doc) are released before returning — only the small
     returned score frame stays pinned, through the BOUNDED auto-pin
     registry (``plans.layout.materialize_bounded``): a long-lived session
-    calling this repeatedly keeps at most ``incresql.materialize.
-    auto_pins`` score frames alive (oldest released first); a caller may
+    calling this repeatedly keeps at most ``layout.AUTO_PIN_CAPACITY``
+    score frames alive (oldest released first); a caller may
     still ``plans.layout.release(result)`` early once consumed.
     Byte-sliced grams (O(1) offsets) with hex-encoded
     hashing so the DuckDB oracle is byte-faithful on any text (the

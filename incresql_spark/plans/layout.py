@@ -11,8 +11,11 @@ TPC-H suite into a local zip of co-located buckets.
 from __future__ import annotations
 
 import math
+from collections import deque
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from ..session import overlap
 
 
 def write_bucketed(
@@ -72,21 +75,36 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
+def materialize_alongside(df: DataFrame, *calls) -> DataFrame:
+    """``materialize(df)`` on the calling thread while ``calls`` run
+    (``session.overlap``); when any of them fails, the pin is released
+    before the error propagates."""
+    pinned = []
+    try:
+        overlap(df.sparkSession, lambda: pinned.append(materialize(df)),
+                *calls)
+    except BaseException:
+        for out in pinned:
+            release(out)
+        raise
+    return pinned[0]
+
+
 #: capacity of the bounded auto-pin registry (see materialize_bounded)
-AUTO_PIN_CAPACITY_CONF = "incresql.materialize.auto_pins"
-#: per-SparkSession FIFO registries, weakly keyed — a stopped/dropped
-#: session's entry disappears with the session instead of pinning dead
-#: DataFrame handles for the life of the process, and two engines in one
-#: process can no longer evict each other's pins (round-10 advice; the
-#: registry used to be one process-global deque).
-_auto_pins_by_session: "weakref.WeakKeyDictionary[SparkSession, deque]" = None  # type: ignore[assignment]
+AUTO_PIN_CAPACITY = 8
+#: SparkSession attribute holding that session's FIFO registry.  It lives
+#: on the session object, so a dropped session's pins go with it (a
+#: weakly keyed dict never dropped an entry: each pinned frame references
+#: its session), and two engines in one process do not evict each
+#: other's pins (round-10 advice).
+AUTO_PINS_ATTR = "_incresql_auto_pins"
 
 
 def materialize_bounded(df: DataFrame) -> DataFrame:
     """``materialize()`` whose pin is tracked in a bounded FIFO registry,
     scoped to the frame's SparkSession: once more than
-    ``incresql.materialize.auto_pins`` (default 8) frames are outstanding
-    in that session, the OLDEST is released automatically.
+    ``AUTO_PIN_CAPACITY`` frames are outstanding in that session, the
+    OLDEST is released automatically.
 
     This is the long-lived-session guard for operators that return a
     pinned result the caller may never release (text_dsir_select's score
@@ -97,21 +115,14 @@ def materialize_bounded(df: DataFrame) -> DataFrame:
     must hold indefinitely should use ``materialize()`` directly and own
     the release.  Releasing twice is harmless, so callers may still
     ``release()`` early."""
-    global _auto_pins_by_session
-    if _auto_pins_by_session is None:
-        import weakref
-
-        _auto_pins_by_session = weakref.WeakKeyDictionary()
     spark = df.sparkSession
-    pins = _auto_pins_by_session.get(spark)
+    pins = getattr(spark, AUTO_PINS_ATTR, None)
     if pins is None:
-        from collections import deque
-
-        pins = _auto_pins_by_session[spark] = deque()
+        pins = deque()
+        setattr(spark, AUTO_PINS_ATTR, pins)
     out = materialize(df)
-    cap = int(spark.conf.get(AUTO_PIN_CAPACITY_CONF, "8"))
     pins.append(out)
-    while len(pins) > cap:
+    while len(pins) > AUTO_PIN_CAPACITY:
         release(pins.popleft())
     return out
 
@@ -164,11 +175,3 @@ def partitions_for_bytes(
     """Partition count that lands ~128 MB per partition (the sweet spot for
     parquet scans and shuffle spills alike)."""
     return max(1, math.ceil(total_bytes / target_partition_bytes))
-
-
-def repartition_for_output(
-    df: DataFrame, approx_rows: int, rows_per_file: int = 1_000_000
-) -> DataFrame:
-    """Coalesce to sensible output file counts (avoids the classic
-    32-shuffle-partitions → 32 tiny files problem)."""
-    return df.repartition(max(1, approx_rows // rows_per_file))

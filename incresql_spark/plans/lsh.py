@@ -73,43 +73,6 @@ def bucket_expr_spark(n_planes: int, vec_col: str = "embedding", salt: str = "pl
     return " + ".join(bits)
 
 
-def width_guard_sql(
-    table: str,
-    frozen_bits: int,
-    target_rows_per_bucket: int = 64,
-    lo: int = 4,
-    hi: int = 24,
-) -> str:
-    """A one-row guard SELECT that ERRORS when the corpus size demands a
-    different bit width than the one a static oracle SQL was generated
-    for.  The driver's oracle strings are fixed at authoring time while
-    the Spark side derives the width from the live corpus count — without
-    this, running the gate at another scale factor silently hash-diverges
-    instead of failing loudly.  Mirrors ``bits_for_corpus`` exactly:
-    GREATEST/LEAST clamp of CEIL(LOG2(n / target)).
-    """
-    expr = (
-        f"GREATEST({lo}, LEAST({hi}, CAST(CEIL(LOG2(GREATEST(1.0, "
-        f"count(*) / {target_rows_per_bucket}.0))) AS INT)))"
-    )
-    return (
-        f"SELECT CASE WHEN {expr} <> {frozen_bits} THEN "
-        f"error('oracle SQL frozen at {frozen_bits} LSH bits; corpus size in "
-        f"{table} needs a different width — regenerate the oracle') "
-        f"ELSE 1 END AS ok FROM {table}"
-    )
-
-
-def bucket_expr_duck(n_planes: int, vec_col: str = "embedding", salt: str = "plane") -> str:
-    """Signed-projection bucket id (DuckDB), bit-identical to the Spark one."""
-    bits = [
-        f"(CASE WHEN {dot_literal_duck(vec_col, hyperplane(j, salt))} > 0 "
-        f"THEN (CAST(1 AS BIGINT) << {j}) ELSE 0 END)"
-        for j in range(n_planes)
-    ]
-    return " + ".join(bits)
-
-
 def nbits_sql(
     table: str,
     target_rows_per_bucket: int = 64,

@@ -6,11 +6,16 @@ the things that matter at 100 TB: AQE (runtime re-planning, skew-join
 splitting, partition coalescing), sane shuffle partition counts, Arrow for any
 pandas-UDF exchange, and ANSI-ish timestamp behaviour pinned to UTC so results
 are reproducible against the DuckDB oracle.
+
+``overlap`` and ``worker_pool`` are the one way this package runs Spark
+jobs off the calling thread, each in its caller's job group.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -125,3 +130,61 @@ def disable_generate_filter_inference(spark: SparkSession) -> None:
     if _INFER_FROM_GENERATE not in rules:
         rules.append(_INFER_FROM_GENERATE)
         spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
+
+
+def worker_pool(spark: SparkSession, workers: int = 1) -> ThreadPoolExecutor:
+    """A pool whose threads run like the calling thread on the JVM side:
+    under its local properties (job group, description), so an engine
+    KILL of the statement cancels the workers' jobs too and session
+    accounting sees them tagged, and with its active session, so pyspark
+    calls on a worker do not fall back to ``getOrCreate`` round trips.
+    Each thread installs its own clone of the properties, taken here on
+    the caller (Spark sets per-query keys on a thread's properties
+    object), once when it starts: a handful of py4j calls per thread,
+    where ``pyspark.inheritable_thread_target``'s per-call
+    pinned-connection churn measured ~0.9s per cascade cycle."""
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties()
+    clones = [props.clone() for _ in range(workers)]
+    jvm_session = spark.sparkContext._jvm.SparkSession
+
+    def start() -> None:
+        # the pool starts at most ``workers`` threads, one clone each
+        jsc.setLocalProperties(clones.pop())
+        jvm_session.setActiveSession(spark._jsparkSession)
+
+    return ThreadPoolExecutor(max_workers=workers, initializer=start)
+
+
+def raise_chained(errors: list[BaseException]) -> None:
+    """Raise the first of ``errors``, each later one chained as the cause
+    of the one before it; return when there are none."""
+    if not errors:
+        return
+    for a, b in zip(errors, errors[1:]):
+        if a.__cause__ is None:
+            a.__cause__ = b
+    raise errors[0]
+
+
+def overlap(spark: SparkSession, *calls: Callable[[], Any]) -> list[Any]:
+    """Run ``calls`` concurrently: the first on the calling thread, the
+    others on ``worker_pool`` threads, so every job they launch runs in
+    the caller's job group.  Returns once every call has finished, with
+    the results in call order; if calls raised, raises the first failure
+    in call order with the later ones chained."""
+    with worker_pool(spark, max(len(calls) - 1, 1)) as pool:
+        futures = [pool.submit(call) for call in calls[1:]]
+        try:
+            results, errors = [calls[0]()], []
+        except BaseException as exc:
+            results, errors = [None], [exc]
+    # leaving the pool waited for every worker call
+    for f in futures:
+        exc = f.exception()
+        if exc is None:
+            results.append(f.result())
+        else:
+            errors.append(exc)
+    raise_chained(errors)
+    return results

@@ -42,7 +42,7 @@ from ..operators.dedup import (
     _embed_band_spark,
 )
 from ._geometry import pin_geometry, unpin_geometry
-from ..plans.layout import materialize, release
+from ..plans.layout import materialize, materialize_alongside, release
 
 _BANDS_SCHEMA = T.StructType(
     [
@@ -121,6 +121,17 @@ class IncrementalEmbeddingDedup:
                 ],
             )
         )
+        try:
+            return self._ingest(delta)
+        finally:
+            # Both state inserts have read the materialized delta — free
+            # its blocks, or a long-lived maintainer accumulates one block
+            # set per batch (the leak the minhash/passages unpersists
+            # already avoid).
+            release(delta)
+
+    def _ingest(self, delta: DataFrame) -> DataFrame:
+        """``add_batch`` past the delta pin, which the caller owns."""
         band_cols = F.array(
             *[
                 F.struct(
@@ -193,20 +204,11 @@ class IncrementalEmbeddingDedup:
         # above) plus the already-materialized ``delta`` — so all three
         # run as concurrent driver jobs (guide §2.6, the minhash
         # maintainer's r18 shape).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self.bands.insert, delta_bands,
-                             assume_distinct=True)
-            fb = pool.submit(self.vectors.insert, delta_vecs,
-                             assume_distinct=True)
-            out = materialize(pairs)
-            fa.result(); fb.result()
-        # Both state inserts have read the materialized delta — free its
-        # blocks now, or a long-lived maintainer accumulates one block set
-        # per batch (the leak the minhash/passages unpersists already avoid).
-        release(delta)
-        return out
+        return materialize_alongside(
+            pairs,
+            lambda: self.bands.insert(delta_bands, assume_distinct=True),
+            lambda: self.vectors.insert(delta_vecs, assume_distinct=True),
+        )
 
     def drop(self) -> None:
         self.bands.drop()

@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import FREQ, FreqTable
-from ..plans.layout import materialize
+from ..plans.layout import materialize_alongside
+from ..session import overlap
 from ..operators.dedup import (
     JACCARD_THRESHOLD,
     N_BANDS,
@@ -156,7 +157,8 @@ class IncrementalMinHashDedup:
         end (guide §1.2 / §2.6: three small straggler-tailed verify jobs
         become one well-packed job).  The state appends still commit
         before returning; the delta pins stay alive until
-        ``release_deferred()`` — call it after consuming the result.
+        ``release_deferred()`` — call it after consuming the result, or
+        after a failure: the pins are registered before any job runs.
         """
         self._ensure_state()
         if prepared is not None:
@@ -167,7 +169,20 @@ class IncrementalMinHashDedup:
             # three reads.
             delta_sh = doc_shingles_df(docs).persist()
             delta_bands = minhash_bands_long(delta_sh).persist()
+        if defer:
+            # registered before any job runs, so a failed batch's pins
+            # are reclaimed by release_deferred() too
+            self._deferred_pins += [delta_sh, delta_bands]
+            return self._ingest(delta_sh, delta_bands, defer)
+        try:
+            return self._ingest(delta_sh, delta_bands, defer)
+        finally:
+            delta_sh.unpersist()
+            delta_bands.unpersist()
 
+    def _ingest(self, delta_sh: DataFrame, delta_bands: DataFrame,
+             defer: bool) -> DataFrame:
+        """``add_batch`` past the delta pins, which the caller owns."""
         # Unmerged scans: band/shingle state is append-only with
         # batch-unique doc_ids, so the cross-segment freq merge is a no-op
         # — skipping it removes a state-wide shuffle per scan (the cost
@@ -205,18 +220,15 @@ class IncrementalMinHashDedup:
             self.shingles.scan(expand=False, merged=False).drop(FREQ)
         )
         pairs = verify_jaccard_pairs(candidates, all_sh, all_sh)
-        from concurrent.futures import ThreadPoolExecutor
-
+        # The two state appends are unique by construction (one row per
+        # doc / per (doc, band)), so they skip the in-batch merge shuffle.
+        appends = (
+            lambda: self.bands.insert(delta_bands, assume_distinct=True),
+            lambda: self.shingles.insert(delta_sh, assume_distinct=True),
+        )
         if defer:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fa = pool.submit(self.bands.insert, delta_bands,
-                                 assume_distinct=True)
-                fb = pool.submit(self.shingles.insert, delta_sh,
-                                 assume_distinct=True)
-                fa.result(); fb.result()
-            self._deferred_pins += [delta_sh, delta_bands]
+            overlap(self.spark, *appends)
             return pairs
-        pairs = pairs.orderBy("doc_a", "doc_b")
         # Materialize results BEFORE appending state (the pairs plan reads
         # the pre-batch state scan; FreqTable segments are immutable, so a
         # lazy read after insert would still see only the old segments — the
@@ -228,25 +240,15 @@ class IncrementalMinHashDedup:
         # Callers that fully consume the result may reclaim its blocks with
         # ``plans.layout.release(out)``.
         #
-        # The two state appends are unique by construction (one row per
-        # doc / per (doc, band)), so they skip the in-batch merge shuffle;
-        # they land on independent dirs with independent commits, and the
-        # pair materialization's plan reads the PRE-batch segment paths
-        # (pinned at plan time above), so all three run as concurrent
-        # driver jobs (guide §2.6) — the verify join's stage tail
-        # back-fills with the segment writes instead of paying them
+        # The appends land on independent dirs with independent commits,
+        # and the pair materialization's plan reads the PRE-batch segment
+        # paths (pinned at plan time above), so all three run as
+        # concurrent driver jobs (guide §2.6) — the verify join's stage
+        # tail back-fills with the segment writes instead of paying them
         # serially afterwards (r18).  All three read the persisted delta
         # frames, so no recomputation races exist.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self.bands.insert, delta_bands,
-                             assume_distinct=True)
-            fb = pool.submit(self.shingles.insert, delta_sh,
-                             assume_distinct=True)
-            out = materialize(pairs)
-            fa.result(); fb.result()
-        delta_sh.unpersist()
-        delta_bands.unpersist()
-        return out
+        return materialize_alongside(pairs.orderBy("doc_a", "doc_b"),
+                                     *appends)
 
     def release_deferred(self) -> None:
         """Unpersist the delta pins accumulated by ``add_batch(defer=True)``

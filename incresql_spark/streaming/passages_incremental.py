@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import FREQ, FreqTable
-from ..plans.layout import materialize
+from ..plans.layout import materialize_alongside, release
 from ..operators.dedup import (
     PASSAGE_MAX_SHARED_FRAC,
     PASSAGE_SHARED_MIN_DOCS,
@@ -120,115 +120,117 @@ class IncrementalPassagesDedup:
         self._ensure_state()
         # One computation, three reads (count join, state append, stats).
         delta = doc_chunks_df(docs).persist()
-
-        # Distinct-doc contribution of the delta per chunk digest.
-        delta_counts = delta.groupBy("chunk_hash").agg(
-            F.countDistinct("doc_id").alias("d_new")
-        )
-
-        # Pre-batch history pairs (scan BEFORE the append below).  Unmerged:
-        # chunks state is append-only with batch-unique doc_ids (module
-        # contract above), so the cross-segment merge is a no-op — skipping
-        # it removes a state-wide shuffle per scan (the cost that made the
-        # delta path degrade with corpus size: 28.8s → 3.1s at 500k docs).
-        hist = self.chunks.scan(expand=False, merged=False).select(
-            "doc_id", "chunk_hash"
-        )
-
-        # Chunks crossing the shared threshold in THIS batch: history count
-        # for the delta's digests only (digest-keyed join), old < MIN <= new.
-        hist_counts = (
-            hist.join(delta_counts.select("chunk_hash"), "chunk_hash")
-            .groupBy("chunk_hash")
-            .agg(F.countDistinct("doc_id").alias("d_old"))
-        )
-        crossing = (
-            delta_counts.join(hist_counts, "chunk_hash", "left")
-            .withColumn("d_old", F.coalesce("d_old", F.lit(0)))
-            .filter(
-                (F.col("d_old") < PASSAGE_SHARED_MIN_DOCS)
-                & (F.col("d_old") + F.col("d_new") >= PASSAGE_SHARED_MIN_DOCS)
+        pins = [delta]  # unpersisted on the way out, failure or not
+        try:
+            # Distinct-doc contribution of the delta per chunk digest.
+            delta_counts = delta.groupBy("chunk_hash").agg(
+                F.countDistinct("doc_id").alias("d_new")
             )
-            .select("chunk_hash")
-        )
 
-        # History docs affected by a crossing chunk + the delta's docs.
-        changed_docs = (
-            hist.join(crossing, "chunk_hash")
-            .select("doc_id")
-            .union(delta.select("doc_id"))
-            .distinct()
-        ).persist()
-
-        # Append the delta FIRST so the stats recompute reads one unified
-        # post-batch state (FreqTable segments are immutable; the plans
-        # above captured the pre-batch segment list already).
-        self.chunks.insert(delta.select("doc_id", "chunk_hash"))
-
-        all_pairs = self.chunks.scan(expand=False, merged=False)
-        changed_rows = all_pairs.join(changed_docs, "doc_id").persist()
-        # Shared set restricted to digests the changed docs actually hold.
-        shared = (
-            all_pairs.join(
-                changed_rows.select("chunk_hash").distinct(), "chunk_hash"
+            # Pre-batch history pairs (scan BEFORE the append below).  Unmerged:
+            # chunks state is append-only with batch-unique doc_ids (module
+            # contract above), so the cross-segment merge is a no-op — skipping
+            # it removes a state-wide shuffle per scan (the cost that made the
+            # delta path degrade with corpus size: 28.8s → 3.1s at 500k docs).
+            hist = self.chunks.scan(expand=False, merged=False).select(
+                "doc_id", "chunk_hash"
             )
-            .groupBy("chunk_hash")
-            .agg(F.countDistinct("doc_id").alias("n_docs"))
-            .filter(F.col("n_docs") >= PASSAGE_SHARED_MIN_DOCS)
-            .select("chunk_hash", F.lit(1).alias("is_shared"))
-        )
-        new_rows = (
-            changed_rows.join(shared, "chunk_hash", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(FREQ).alias("n_chunks"),
-                F.sum(
-                    F.when(F.col("is_shared").isNotNull(), F.col(FREQ)).otherwise(
-                        F.lit(0)
-                    )
-                ).alias("n_shared_chunks"),
-            )
-            .withColumn(
-                "shared_frac",
-                F.col("n_shared_chunks").cast("double")
-                / F.col("n_chunks").cast("double"),
-            )
-            .withColumn("keep", F.col("shared_frac") < PASSAGE_MAX_SHARED_FRAC)
-        )
-        # Pin the changed-row batch before mutating the results state (the
-        # retraction below must see the PRE-update rows, and returning a
-        # plan that re-reads state after two more segments land would be a
-        # lazy-evaluation trap for callers).  materialize() pins it
-        # executor-side — a threshold-crossing chunk in a boilerplate-heavy
-        # crawl can flip millions of history rows, which must never
-        # round-trip the driver.  Callers may layout.release(out) when done.
-        # Upsert = retraction segment (freq −1 of the old rows) + insert.
-        # ``old_rows`` pins the PRE-update results segments at scan time,
-        # so its retraction write can run CONCURRENTLY with the new-rows
-        # materialization (guide §2.6, the minhash maintainer's r18
-        # shape) — the two read disjoint pinned inputs and the write
-        # lands on the results dir the materialization never touches.
-        # The +1 insert stays AFTER both: same table, and the writer seq
-        # discipline keeps segment commits single-file-ordered.
-        old_rows = self.results.scan().join(changed_docs, "doc_id").select(
-            *[f.name for f in _RESULTS_SCHEMA.fields]
-        )
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
+            # Chunks crossing the shared threshold in THIS batch: history count
+            # for the delta's digests only (digest-keyed join), old < MIN <= new.
+            hist_counts = (
+                hist.join(delta_counts.select("chunk_hash"), "chunk_hash")
+                .groupBy("chunk_hash")
+                .agg(F.countDistinct("doc_id").alias("d_old"))
+            )
+            crossing = (
+                delta_counts.join(hist_counts, "chunk_hash", "left")
+                .withColumn("d_old", F.coalesce("d_old", F.lit(0)))
+                .filter(
+                    (F.col("d_old") < PASSAGE_SHARED_MIN_DOCS)
+                    & (F.col("d_old") + F.col("d_new") >= PASSAGE_SHARED_MIN_DOCS)
+                )
+                .select("chunk_hash")
+            )
+
+            # History docs affected by a crossing chunk + the delta's docs.
+            changed_docs = (
+                hist.join(crossing, "chunk_hash")
+                .select("doc_id")
+                .union(delta.select("doc_id"))
+                .distinct()
+            ).persist()
+            pins.append(changed_docs)
+
+            # Append the delta FIRST so the stats recompute reads one unified
+            # post-batch state (FreqTable segments are immutable; the plans
+            # above captured the pre-batch segment list already).
+            self.chunks.insert(delta.select("doc_id", "chunk_hash"))
+
+            all_pairs = self.chunks.scan(expand=False, merged=False)
+            changed_rows = all_pairs.join(changed_docs, "doc_id").persist()
+            pins.append(changed_rows)
+            # Shared set restricted to digests the changed docs actually hold.
+            shared = (
+                all_pairs.join(
+                    changed_rows.select("chunk_hash").distinct(), "chunk_hash"
+                )
+                .groupBy("chunk_hash")
+                .agg(F.countDistinct("doc_id").alias("n_docs"))
+                .filter(F.col("n_docs") >= PASSAGE_SHARED_MIN_DOCS)
+                .select("chunk_hash", F.lit(1).alias("is_shared"))
+            )
+            new_rows = (
+                changed_rows.join(shared, "chunk_hash", "left")
+                .groupBy("doc_id")
+                .agg(
+                    F.sum(FREQ).alias("n_chunks"),
+                    F.sum(
+                        F.when(F.col("is_shared").isNotNull(), F.col(FREQ)).otherwise(
+                            F.lit(0)
+                        )
+                    ).alias("n_shared_chunks"),
+                )
+                .withColumn(
+                    "shared_frac",
+                    F.col("n_shared_chunks").cast("double")
+                    / F.col("n_chunks").cast("double"),
+                )
+                .withColumn("keep", F.col("shared_frac") < PASSAGE_MAX_SHARED_FRAC)
+            )
+            # Pin the changed-row batch before mutating the results state (the
+            # retraction below must see the PRE-update rows, and returning a
+            # plan that re-reads state after two more segments land would be a
+            # lazy-evaluation trap for callers).  materialize() pins it
+            # executor-side — a threshold-crossing chunk in a boilerplate-heavy
+            # crawl can flip millions of history rows, which must never
+            # round-trip the driver.  Callers may layout.release(out) when done.
+            # Upsert = retraction segment (freq −1 of the old rows) + insert.
+            # ``old_rows`` pins the PRE-update results segments at scan time,
+            # so its retraction write can run CONCURRENTLY with the new-rows
+            # materialization (guide §2.6, the minhash maintainer's r18
+            # shape) — the two read disjoint pinned inputs and the write
+            # lands on the results dir the materialization never touches.
+            # The +1 insert stays AFTER both: same table, and the writer seq
+            # discipline keeps segment commits single-file-ordered.
+            old_rows = self.results.scan().join(changed_docs, "doc_id").select(
+                *[f.name for f in _RESULTS_SCHEMA.fields]
+            )
             # both frames are unique per doc_id — skip the in-batch merge
-            fa = pool.submit(self.results.insert, old_rows, freq=-1,
-                             assume_distinct=True)
-            out = materialize(
-                new_rows.select(*[f.name for f in _RESULTS_SCHEMA.fields])
+            out = materialize_alongside(
+                new_rows.select(*[f.name for f in _RESULTS_SCHEMA.fields]),
+                lambda: self.results.insert(old_rows, freq=-1,
+                                            assume_distinct=True),
             )
-            fa.result()
-        self.results.insert(out, assume_distinct=True)
-
-        delta.unpersist()
-        changed_docs.unpersist()
-        changed_rows.unpersist()
-        return out
+            try:
+                self.results.insert(out, assume_distinct=True)
+            except BaseException:
+                release(out)
+                raise
+            return out
+        finally:
+            for df in pins:
+                df.unpersist()
 
     def current(self) -> DataFrame:
         """The maintained result table — equals batch ``dedup_passages``

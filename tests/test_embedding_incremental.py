@@ -70,3 +70,26 @@ def test_frozen_geometry_validated_on_reopen(spark, tmp_path):
 
     inc.drop()  # geometry pin dies with the state
     IncrementalEmbeddingDedup(spark, str(tmp_path / "geo_state"), 6)
+
+
+def test_failed_state_append_releases_its_pins(spark, tmp_path, monkeypatch):
+    """A failed state append surfaces its own error and releases both the
+    materialized delta and the pair pin."""
+    from incresql_spark.plans.layout import release
+    from tests.test_refresh_pipeline import _persisted
+
+    vecs = load_table(spark, SF_SMALL, "embeddings")
+    inc = IncrementalEmbeddingDedup(spark, str(tmp_path / "emb_state"),
+                                    _embed_band_bits(vecs.count()))
+    release(inc.add_batch(vecs.filter(F.col("vec_id") % 2 == 0)))  # history
+    err = RuntimeError("injected vectors append failure")
+
+    def failing(*args, **kwargs):
+        raise err
+
+    monkeypatch.setattr(inc.vectors, "insert", failing)
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError) as info:
+        inc.add_batch(vecs.filter(F.col("vec_id") % 2 == 1))
+    assert info.value is err
+    assert _persisted(spark) - before == set()

@@ -136,3 +136,40 @@ def test_deferred_prepared_drive_equals_eager(spark, tmp_path):
     got = [_rows(p) for p in plans]  # evaluated after ALL appends
     lazy.release_deferred()
     assert got == expected
+
+
+@pytest.mark.parametrize("defer", [False, True])
+def test_failed_state_append_releases_delta_pins(spark, tmp_path,
+                                                 monkeypatch, defer):
+    """A failed state append surfaces its own error, with the other
+    append's failure chained, and leaves nothing persisted: the eager
+    path unpersists the delta frames and releases the pair pin; the
+    deferred path hands its frames to ``release_deferred()``."""
+    from incresql_spark.plans.layout import release
+    from tests.test_refresh_pipeline import _persisted
+
+    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    dd = IncrementalMinHashDedup(spark, str(tmp_path / "state"))
+    release(dd.add_batch(docs.filter("doc_id % 3 = 0")))  # some history
+    bands_err = RuntimeError("injected bands append failure")
+    shingles_err = RuntimeError("injected shingles append failure")
+
+    def failing(err):
+        def insert(*args, **kwargs):
+            raise err
+        return insert
+
+    monkeypatch.setattr(dd.bands, "insert", failing(bands_err))
+    monkeypatch.setattr(dd.shingles, "insert", failing(shingles_err))
+    before = _persisted(spark)
+    # the prepared delta frames are already cached when the appends fail;
+    # each case caches its own wave (the cache reuses an identical plan)
+    batch = dd.prepare_batch(docs.filter(f"doc_id % 3 = {1 + defer}"))
+    with pytest.raises(RuntimeError) as info:
+        try:
+            dd.add_batch(None, prepared=batch, defer=defer)
+        finally:
+            dd.release_deferred()
+    assert info.value is bands_err
+    assert info.value.__cause__ is shingles_err
+    assert _persisted(spark) - before == set()

@@ -142,3 +142,26 @@ def test_passages_geometry_pinned_with_state(spark, tmp_path):
         IncrementalPassagesDedup(spark, str(tmp_path / "pp_state"))
     inc.drop()
     IncrementalPassagesDedup(spark, str(tmp_path / "pp_state"))
+
+
+def test_failed_state_append_releases_its_pins(spark, state_dir, monkeypatch):
+    """A failed results append surfaces its own error and leaves nothing
+    persisted: the delta, changed-doc and changed-row frames and the
+    materialized new rows are all released."""
+    from incresql_spark.plans.layout import release
+    from tests.test_refresh_pipeline import _persisted
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    inc = IncrementalPassagesDedup(spark, state_dir)
+    release(inc.add_batch(docs.filter(docs.doc_id % 2 == 0)))  # history
+    err = RuntimeError("injected results append failure")
+
+    def failing(*args, **kwargs):
+        raise err
+
+    monkeypatch.setattr(inc.results, "insert", failing)
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError) as info:
+        inc.add_batch(docs.filter(docs.doc_id % 2 == 1))
+    assert info.value is err
+    assert _persisted(spark) - before == set()

@@ -589,7 +589,7 @@ def test_left_outer_mv_pad_probes_are_delta_key_restricted(spark, tmp_path):
     assert plan2.count("LeftSemi") == 2, plan2[:3000]
 
 
-def test_materialize_bounded_caps_outstanding_pins(spark):
+def test_materialize_bounded_caps_outstanding_pins(spark, monkeypatch):
     """The bounded auto-pin registry (r9 advisory: text_dsir_select's
     returned pin was caller-released only — a long-lived session leaked
     one doc-count-sized block set per call).  N calls with capacity C must
@@ -597,63 +597,54 @@ def test_materialize_bounded_caps_outstanding_pins(spark):
     no storage level, the survivors still read."""
     from pyspark.storagelevel import StorageLevel
 
-    prev = spark.conf.get(layout.AUTO_PIN_CAPACITY_CONF, None)
-    spark.conf.set(layout.AUTO_PIN_CAPACITY_CONF, "3")
-    try:
-        frames = [
-            layout.materialize_bounded(
-                spark.range(100).selectExpr("id", f"id * {i} AS v")
-            )
-            for i in range(10)
-        ]
-        pinned = [
-            f for f in frames
-            if f.rdd.getStorageLevel() != StorageLevel(False, False, False, False, 1)
-        ]
-        assert len(pinned) <= 3, f"{len(pinned)} frames still pinned"
-        # the survivors are intact
-        assert frames[-1].count() == 100
-    finally:
-        if prev is None:
-            spark.conf.unset(layout.AUTO_PIN_CAPACITY_CONF)
-        else:
-            spark.conf.set(layout.AUTO_PIN_CAPACITY_CONF, prev)
+    monkeypatch.setattr(layout, "AUTO_PIN_CAPACITY", 3)
+    frames = [
+        layout.materialize_bounded(
+            spark.range(100).selectExpr("id", f"id * {i} AS v")
+        )
+        for i in range(10)
+    ]
+    pinned = [
+        f for f in frames
+        if f.rdd.getStorageLevel() != StorageLevel(False, False, False, False, 1)
+    ]
+    assert len(pinned) <= 3, f"{len(pinned)} frames still pinned"
+    # the survivors are intact
+    assert frames[-1].count() == 100
+    for f in frames:
+        layout.release(f)
 
 
-def test_materialize_bounded_registry_is_session_scoped(spark):
+def test_materialize_bounded_registry_is_session_scoped(spark, monkeypatch):
     """Two engines in one process must not evict each other's auto-pins
     (r10 advice: the registry was one process-global deque).  Flooding a
     second session's registry past its cap must leave the first session's
     pinned frames registered and readable (an evicted localCheckpoint
     frame has no lineage left to recompute from)."""
-    prev = spark.conf.get(layout.AUTO_PIN_CAPACITY_CONF, None)
-    spark.conf.set(layout.AUTO_PIN_CAPACITY_CONF, "2")
+    monkeypatch.setattr(layout, "AUTO_PIN_CAPACITY", 2)
     other = spark.newSession()
-    other.conf.set(layout.AUTO_PIN_CAPACITY_CONF, "2")
-    try:
-        mine = [
-            layout.materialize_bounded(
-                spark.range(50).selectExpr("id", f"id + {i} AS v")
-            )
-            for i in range(2)
-        ]
-        for i in range(8):  # well past the other session's cap
-            layout.materialize_bounded(
-                other.range(50).selectExpr("id", f"id * {i} AS v")
-            )
-        # the first session's pins were untouched by the flood: still in
-        # its registry (never evicted/released) and still readable
-        my_pins = layout._auto_pins_by_session[spark]
-        assert all(any(f is p for p in my_pins) for f in mine)
-        for f in mine:
-            assert f.count() == 50
-        # and the other session's own cap still applied
-        assert len(layout._auto_pins_by_session[other]) <= 2
-    finally:
-        if prev is None:
-            spark.conf.unset(layout.AUTO_PIN_CAPACITY_CONF)
-        else:
-            spark.conf.set(layout.AUTO_PIN_CAPACITY_CONF, prev)
+    mine = [
+        layout.materialize_bounded(
+            spark.range(50).selectExpr("id", f"id + {i} AS v")
+        )
+        for i in range(2)
+    ]
+    for i in range(8):  # well past the other session's cap
+        layout.materialize_bounded(
+            other.range(50).selectExpr("id", f"id * {i} AS v")
+        )
+    # the first session's pins were untouched by the flood: still in
+    # its registry (never evicted/released) and still readable
+    my_pins = getattr(spark, layout.AUTO_PINS_ATTR)
+    assert all(any(f is p for p in my_pins) for f in mine)
+    for f in mine:
+        assert f.count() == 50
+    # and the other session's own cap still applied
+    assert len(getattr(other, layout.AUTO_PINS_ATTR)) <= 2
+    # pyspark keeps the newest session reachable (RDD.toDF), so the
+    # other session's pins would outlive this test
+    for f in mine + list(getattr(other, layout.AUTO_PINS_ATTR)):
+        layout.release(f)
 
 
 def test_gated_round10_ops_plan_shapes(spark):
