@@ -319,6 +319,7 @@ class Engine:
                 state,
                 hows=meta.get("hows"),  # pre-left-outer metas: all inner
                 changelog=bool(meta.get("changelog")),
+                aliases=meta.get("aliases"),  # older metas: unaliased
             )
         if "base_mv" in meta:
             # Cascaded view (round 17): the base is ANOTHER aggregate
@@ -889,18 +890,25 @@ class Engine:
                 hows.append(
                     "left_outer" if kw.upper().startswith("LEFT") else "inner"
                 )
-            qualified = []
+            qualified, aliases = [], []
             for t in tables:
-                tdb, tn = _split_name(t, self.current_db)
-                if not self._table(tdb, tn).exists():
-                    raise ValueError(f"unknown base table {tdb}.{tn}")
+                # ``db.t``, ``t AS a`` or ``t a``: each side is aliased by
+                # its alias, else its table name, so ``a.col`` resolves
+                mt = re.fullmatch(rf"({_QNAME})(?:\s+(?:AS\s+)?(\w+))?", t,
+                                  re.IGNORECASE)
+                tdb, tn = _split_name(mt.group(1) if mt else t,
+                                      self.current_db)
+                if not mt or not self._table(tdb, tn).exists():
+                    raise ValueError(f"unknown base table {t}")
                 qualified.append(f"{tdb}.{tn}")
+                aliases.append(mt.group(2) or tn)
             mvs = self._mvs(db)
             mvs[name] = {
                 "type": "agg_join",
                 "tables": qualified,
                 "join_conds": conds,
                 "hows": hows,
+                "aliases": aliases,
                 "select_list": m.group(2),
                 "where": where,
                 "group_by": group_by,

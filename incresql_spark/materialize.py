@@ -30,11 +30,15 @@ delta propagation:
   with ``count(*)`` — the same multiset.
 
 Scale: every refresh touches O(delta) base rows plus O(touched groups)
-state — never a full recompute and never a full-state rewrite.  Aggregate
-state is hash-bucketed on the group key (``AggState``): the merge reads
-only the buckets the delta's groups hash into, re-aggregates those (one
-shuffle over touched-bucket rows), and commits new versions of only those
-buckets — untouched buckets are neither read nor rewritten.
+state — never a full recompute.  Aggregate state is hash-bucketed on the
+group key (``AggState``): the merge reads only the buckets the delta's
+groups hash into, re-aggregates those, and commits new versions of only
+those buckets — untouched buckets are neither read nor rewritten.  One
+shuffle, on the bucket id, serves both the re-aggregation and the bucket
+write.  The bucket count follows the state's size (``BUCKET_BYTES`` per
+bucket): a state of a few thousand groups is one bucket file, and a state
+that outgrows its count is rewritten once at double the count or more, so
+full-state rewrites cost O(1) amortized per row.
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, StructType
 
 from . import commit
-from .frequency import FREQ, FreqTable
+from .frequency import FREQ, FreqTable, _observed_metric
 from .session import raise_chained, worker_pool
 
 _AGG_RE = re.compile(
@@ -68,29 +72,28 @@ def _parse_select_items(select_list: str) -> list[tuple[str, str, str]]:
             items.append((m.group(1).lower(), m.group(2), m.group(3)))
         else:
             mm = re.match(r"^\s*(.+?)(?:\s+AS\s+(\w+))?\s*$", raw, re.IGNORECASE | re.DOTALL)
-            expr, alias = mm.group(1), mm.group(2) or mm.group(1).strip()
-            items.append(("key", expr, alias))
+            expr = mm.group(1).strip()
+            items.append(("key", expr, mm.group(2) or _unqualified(expr)))
     return items
 
 
-#: session conf key for the aggregate-MV state bucket count.  64 keeps
-#: bucket files chunky at test scale; a 100 TB deployment sets thousands so
-#: each bucket stays ~128 MB (plans.layout.partitions_for_bytes).
-STATE_BUCKETS_CONF = "incresql.mv.state.buckets"
-_DEFAULT_STATE_BUCKETS = 64
-#: session conf key for the optional RANGE state layout: when set to a
-#: positive width W, groups bucket by ``(first_key DIV W) mod num_buckets``
-#: instead of a hash — key-LOCAL deltas (the recency-shaped ingest of
-#: append-mostly fact tables) then touch O(delta span / W) buckets instead
-#: of all of them (hash deliberately destroys locality for skew-immunity;
-#: see SCALING.md round-9 bucketed-merge economics).  The range key is the
-#: LEADING group key unless ``incresql.mv.state.range_key`` names another
-#: group key; it must be numeric (a non-numeric key raises — folding every
-#: group to one bucket would silently serialize the merge).  0 (default) =
-#: hash layout.  Both knobs are pinned in the manifest like the bucket
-#: count.
-STATE_RANGE_WIDTH_CONF = "incresql.mv.state.range_width"
-STATE_RANGE_KEY_CONF = "incresql.mv.state.range_key"
+def _unqualified(expr: str) -> str:
+    """``t.col`` → ``col``: the name a qualified group key has in the
+    state (other expressions are returned unchanged)."""
+    m = re.fullmatch(r"\w+\.(\w+)", expr)
+    return m.group(1) if m else expr
+
+
+#: Target bytes per state bucket.  A state that sizes itself (no explicit
+#: ``num_buckets``) keeps the smallest power-of-two bucket count B with
+#: rows × row size ≤ B × BUCKET_BYTES: rows is the row count its manifest
+#: records, row size the state schema's JVM ``defaultSize``.  A commit
+#: that would overflow B rewrites the state at the next fitting power of
+#: two, so B only ever doubles and each row is rewritten an amortized
+#: O(1) times.  16 MB keeps a bucket far below one read split while a
+#: state of thousands of groups stays one file, not dozens of files that
+#: are mostly parquet overhead.
+BUCKET_BYTES = 16 << 20
 
 
 class AggState:
@@ -110,15 +113,23 @@ class AggState:
     design implies, storage/src/storage.rs:26-65, and what
     plans.layout.write_bucketed does for query-side tables).
 
+    Bucket count: an explicit ``num_buckets`` is pinned for the life of
+    the state (the sketch maintainers pass one).  Without one the state
+    sizes itself to its data (``BUCKET_BYTES``): every write records the
+    rows it wrote per bucket in the manifest, and a commit that would
+    outgrow the count rewrites the whole state at a larger power of two
+    (``fit_buckets``).  A manifest without row counts — written before
+    states sized themselves — keeps its count.  The manifest also keeps
+    the schema the state was written with whenever re-aggregation cannot
+    change it, so reads skip parquet footer inference.
+
     Crash safety: new bucket versions are staged in a scratch directory and
     moved into place BEFORE the manifest commit (a single ``os.replace``),
-    so a crash mid-refresh leaves the previous manifest — and the exact
-    previous state — intact; ``write_buckets`` begins by reclaiming any
-    uncommitted bucket versions and stage directories a crashed refresh
-    left behind (they are never referenced — the manifest commit is the
-    transaction point — but would collide with the reused version number).
-    The bucket count is pinned in the manifest so a session with a
-    different conf cannot mis-bucket an existing state.
+    so a crash mid-refresh — a resize included — leaves the previous
+    manifest and the exact previous state intact; ``write_buckets`` begins
+    by reclaiming the stage directories a crashed refresh left behind
+    (they are never referenced — the manifest commit is the transaction
+    point).
     """
 
     def __init__(
@@ -126,8 +137,6 @@ class AggState:
         spark: SparkSession,
         path: str,
         num_buckets: int | None = None,
-        range_width: int | None = None,
-        range_key: str | None = None,
         backend=None,
     ):
         self.spark = spark
@@ -138,23 +147,11 @@ class AggState:
         self.backend = (backend if backend is not None
                         else commit.backend_for(spark))
         self._fence: "commit.WriterFence | None" = None
-        # an EXPLICIT layout must agree with an existing manifest —
-        # silently re-pinning would hide a caller bug; the conf-derived
-        # defaults defer to the manifest (the layout owns itself)
+        # an EXPLICIT count is pinned: it must agree with an existing
+        # manifest (silently re-pinning would hide a caller bug) and never
+        # resizes; otherwise the manifest owns the count
         self._explicit = num_buckets is not None
-        self._explicit_width = range_width is not None
-        self._explicit_range_key = range_key is not None
-        if num_buckets is None:
-            num_buckets = int(
-                spark.conf.get(STATE_BUCKETS_CONF, str(_DEFAULT_STATE_BUCKETS))
-            )
-        if range_width is None:
-            range_width = int(spark.conf.get(STATE_RANGE_WIDTH_CONF, "0"))
-        if range_key is None:
-            range_key = spark.conf.get(STATE_RANGE_KEY_CONF, "")
-        self.num_buckets = num_buckets
-        self.range_width = range_width
-        self.range_key = range_key
+        self.num_buckets = num_buckets or 1
 
     def acquire_writer_fence(self) -> None:
         """Claim single-writer ownership of this state directory; every
@@ -189,75 +186,65 @@ class AggState:
         m = self.backend.load_manifest(self.path)
         if m is None:
             return None
-        # the on-disk layout owns the bucket count AND range width from
-        # first write onward; an explicitly requested conflicting layout is
-        # a caller bug — fail with the real cause, not a downstream
-        # mis-bucketing assertion
+        # an explicitly requested conflicting count, or a state in the
+        # removed range layout, is a caller bug — fail with the real
+        # cause, not a downstream mis-bucketing assertion
+        if m.get("range_width"):
+            raise ValueError(
+                f"state {self.path} uses the range bucket layout, which is "
+                f"no longer supported; drop and recreate the view"
+            )
         if self._explicit and m["num_buckets"] != self.num_buckets:
             raise ValueError(
                 f"bucket count mismatch: state manifest pins "
                 f"{m['num_buckets']} buckets, caller requested "
                 f"{self.num_buckets} ({self.path})"
             )
-        stored_width = m.get("range_width", 0)
-        if self._explicit_width and stored_width != self.range_width:
-            raise ValueError(
-                f"range width mismatch: state manifest pins "
-                f"{stored_width}, caller requested "
-                f"{self.range_width} ({self.path})"
-            )
-        stored_key = m.get("range_key", "")
-        if self._explicit_range_key and stored_key != self.range_key:
-            raise ValueError(
-                f"range key mismatch: state manifest pins "
-                f"{stored_key!r}, caller requested "
-                f"{self.range_key!r} ({self.path})"
-            )
         self.num_buckets = m["num_buckets"]
-        self.range_width = stored_width
-        self.range_key = stored_key
         return m
 
-    def bucket_expr(self, keys: list[str], df: DataFrame | None = None):
-        """The deterministic group-key → bucket mapping.  Global aggregates
-        (no keys) live in bucket 0.  Default is a hash of ALL keys
-        (skew-immune, locality-free); with a pinned ``range_width`` W the
-        range key — ``incresql.mv.state.range_key`` if declared, else the
-        LEADING group key — maps by ``(key DIV W) mod num_buckets`` so
-        key-local deltas touch contiguous, few buckets.  NULL key values
-        fold to bucket 0 (deterministic).  A declared range key must be
-        one of the group keys, and (when ``df`` provides the schema) of a
-        numeric type — a non-numeric key would silently fold EVERY group
-        to bucket 0, turning the layout into a single hot bucket, so it
-        raises instead."""
-        if not keys:
-            return F.lit(0)
-        if self.range_width:
-            rk = self.range_key or keys[0]
-            if rk not in keys:
-                raise ValueError(
-                    f"range key {rk!r} is not a group key {keys} "
-                    f"({self.path})"
-                )
-            if df is not None:
-                from pyspark.sql import types as T
+    def _sized(self, m: dict | None) -> bool:
+        """Whether the state under manifest ``m`` sizes itself: no
+        explicit count, and row counts in the manifest (or none yet)."""
+        return not self._explicit and (m is None or "rows" in m)
 
-                dtype = df.schema[rk].dataType
-                if not isinstance(dtype, T.NumericType):
-                    raise ValueError(
-                        f"range layout needs a numeric range key; "
-                        f"{rk!r} is {dtype.simpleString()} — use the hash "
-                        f"layout (range_width=0) or declare a numeric key "
-                        f"via {STATE_RANGE_KEY_CONF} ({self.path})"
-                    )
-            return F.pmod(
-                F.expr(
-                    f"CAST(coalesce(CAST(`{rk}` AS BIGINT), 0) "
-                    f"DIV {self.range_width} AS BIGINT)"
-                ),
-                F.lit(self.num_buckets),
-            )
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets))
+    def fit_buckets(self, m: dict | None, new_rows: int,
+                    schema: StructType) -> int:
+        """The bucket count a commit adding up to ``new_rows`` rows of
+        ``schema`` to the state of manifest ``m`` publishes: the current
+        count (1 for a fresh state), doubled until the rows fit
+        ``BUCKET_BYTES`` per bucket.  Pinned counts never change."""
+        b = m["num_buckets"] if m else self.num_buckets
+        if not self._sized(m):
+            return b
+        rows = new_rows + sum(m["rows"].values()) if m else new_rows
+        row_bytes = self.spark._jvm.org.apache.spark.sql.types.DataType \
+            .fromJson(schema.json()).defaultSize()
+        while b * BUCKET_BYTES < rows * row_bytes:
+            b *= 2
+        return b
+
+    def bucket_expr(self, keys: list[str], num_buckets: int | None = None):
+        """The deterministic group-key → bucket mapping for a layout of
+        ``num_buckets`` (default: the current count): a hash of ALL keys,
+        skew-immune and locality-free.  Global aggregates (no keys) and
+        one-bucket layouts live in bucket 0."""
+        n = num_buckets or self.num_buckets
+        if not keys or n == 1:
+            return F.lit(0)
+        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n))
+
+    def partition(self, df: DataFrame, n_touched: int) -> DataFrame:
+        """Hash-partition a frame carrying ``__bkt`` on it — the one
+        shuffle of a bucket write.  Every row of a bucket lands in the
+        same task, so ``write_buckets`` writes one file per bucket, and a
+        ``groupBy("__bkt", *keys)`` above it needs no second exchange.
+        The task count is capped at the core count, so a wide write does
+        not pay one task launch and one tiny output commit per bucket
+        (local[4] on a 4-core Xeon, 64 buckets, 300 rows: median 1.2-1.5 s
+        with 64 tasks, 0.5-0.7 s with 4)."""
+        parts = min(n_touched, self.spark.sparkContext.defaultParallelism)
+        return df.repartition(max(parts, 1), "__bkt")
 
     @staticmethod
     def _vdir(v) -> str:
@@ -281,43 +268,31 @@ class AggState:
         ]
 
     # -- read -----------------------------------------------------------------
-    def read(self, schema=None) -> DataFrame | None:
-        """All live state rows (None if empty).  ``schema``: callers that
-        KNOW the state schema (the sketch maintainers — their delta frame
-        is written by the same code path) pass it to skip parquet footer
-        inference, the read_buckets treatment (r15 verdict task 7)."""
-        m = self._load_manifest()
-        if m is None or not m["buckets"]:
-            return None
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*self._bucket_paths(m))
-
-    def read_buckets(self, buckets: list[int],
-                     schema=None) -> DataFrame | None:
-        """Rows of just the given buckets (None if state empty or none of
-        them are live) — the pruning read a touched-groups merge needs.
-
-        ``schema``: callers that KNOW the state schema (the merge path —
-        reader and writer share the delta-aggregation code, so column
-        names/types/order are identical by construction) pass it to skip
-        parquet footer schema inference: a measured ~0.3s of driver-side
-        listing+footer work per refresh wave at sf0.1 (r15 verdict task
-        7).  Spark matches parquet columns by NAME under an explicit
-        schema, so a genuinely divergent on-disk state would surface as
-        null state columns and fail the merge invariants loudly, not
-        silently reorder."""
-        m = self._load_manifest()
-        if m is None:
-            return None
+    def _read(self, m: dict, buckets: list[int] | None = None
+              ) -> DataFrame | None:
+        """The live rows of ``buckets`` (all when None) under manifest
+        ``m``, read with the manifest's schema when it has one.  Spark
+        matches parquet columns by NAME under an explicit schema, so a
+        divergent on-disk state would surface as null state columns and
+        fail the merge invariants loudly, not silently reorder."""
         paths = self._bucket_paths(m, buckets)
         if not paths:
             return None
         reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
+        if m.get("schema"):
+            reader = reader.schema(StructType.fromJson(m["schema"]))
         return reader.parquet(*paths)
+
+    def read(self) -> DataFrame | None:
+        """All live state rows (None if empty)."""
+        m = self._load_manifest()
+        return None if m is None else self._read(m)
+
+    def read_buckets(self, buckets: list[int]) -> DataFrame | None:
+        """Rows of just the given buckets (None if state empty or none of
+        them are live) — the pruning read a touched-groups merge needs."""
+        m = self._load_manifest()
+        return None if m is None else self._read(m, buckets)
 
     # -- write ----------------------------------------------------------------
     def write_buckets(
@@ -327,13 +302,22 @@ class AggState:
         touched: list[int],
         extra: dict | None = None,
         pre_publish=None,
+        num_buckets: int | None = None,
     ) -> None:
         """Commit new versions of exactly the ``touched`` buckets.
 
         ``merged`` must be the full post-merge contents of those buckets
         (rows of OTHER buckets would be silently misplaced — guarded by the
-        staging-dir subset check below).  A touched bucket with no surviving
-        groups is dropped from the manifest.  ``extra`` entries are stored
+        staging-dir subset check below).  A frame that already carries
+        ``__bkt`` must come hash-partitioned on it (``partition``) and is
+        written as it is; any other frame is bucketed and partitioned
+        here.  A touched bucket with no surviving groups is dropped from
+        the manifest.
+
+        ``num_buckets``: the count ``merged`` is bucketed with (default:
+        the current one).  A count other than the manifest's replaces the
+        whole state — a resize — so ``touched`` must then name every
+        bucket of the new layout.  ``extra`` entries are stored
         in the manifest — committed ATOMICALLY with the state (MV refresh
         cursors ride here so a crash between state merge and cursor save
         cannot cause the same delta to be re-applied).
@@ -348,7 +332,9 @@ class AggState:
         — exactly the crash-between-commits recovery path."""
         m = self._load_manifest()
         nxt = (m["version"] + 1) if m else 0
-        buckets = dict(m["buckets"]) if m else {}
+        nb = num_buckets or self.num_buckets
+        old = dict(m["buckets"]) if m else {}
+        resize = m is not None and nb != m["num_buckets"]
         # Crashed-refresh garbage collection.  Every artifact this method
         # writes is WRITER-UNIQUE (stage-{v}-{tag}, v-{v}-{tag}), so a
         # crashed or fenced predecessor's leftovers can never occupy a name
@@ -376,22 +362,19 @@ class AggState:
                     shutil.rmtree(p, ignore_errors=True)
         tag = uuid.uuid4().hex[:8]
         stage = os.path.join(self.path, f"stage-{nxt}-{tag}")
-        # One shuffle over O(touched-bucket) rows.  Hash-partitioning on
-        # __bkt sends every row of a bucket to the same task, so
-        # partitionBy still writes exactly one file per bucket; capping
-        # the task count at the core count keeps a wide refresh from
-        # paying one task launch and one tiny output commit per bucket
-        # (local[4] on a 4-core Xeon, 64 buckets, 300 rows: median
-        # 1.2-1.5 s with 64 tasks, 0.5-0.7 s with 4).
-        parts = min(len(touched),
-                    self.spark.sparkContext.defaultParallelism)
-        (
-            merged.withColumn("__bkt", self.bucket_expr(keys, merged))
-            .repartition(max(parts, 1), F.col("__bkt"))
-            .write.partitionBy("__bkt")
-            .mode("overwrite")
-            .parquet(stage)
-        )
+        if "__bkt" not in merged.columns:
+            merged = self.partition(
+                merged.withColumn("__bkt", self.bucket_expr(keys, nb)),
+                len(touched))
+        # the rows written per bucket ride the write as one exact
+        # histogram: at most nb distinct __bkt values, so no bins merge
+        # (the function needs at least 2 bins)
+        obs = None
+        if self._sized(m):
+            obs = Observation()
+            merged = merged.observe(obs, F.expr(
+                f"histogram_numeric(__bkt, {max(nb, 2)})").alias("h"))
+        merged.write.partitionBy("__bkt").mode("overwrite").parquet(stage)
         staged = {
             int(d.split("=")[1])
             for d in os.listdir(stage)
@@ -408,11 +391,14 @@ class AggState:
         # no longer collide with (or be reclaimed into) the new owner's
         # names — its dirs are unreferenced garbage the version-scoped GC
         # collects later — but raising WriterFenced before the copy saves
-        # the wasted I/O.
-        prev = {}
+        # the wasted I/O.  A resize supersedes every old bucket, a merge
+        # only the touched ones.
+        buckets = {} if resize else dict(old)
+        superseded = old if resize else {
+            str(k): old[str(k)] for k in touched if str(k) in old}
         with commit.fence_guard(self._fence):
             for k in touched:
-                prev[k] = buckets.pop(str(k), None)
+                buckets.pop(str(k), None)
                 src = os.path.join(stage, f"__bkt={k}")
                 if os.path.isdir(src):  # emptied buckets leave the manifest
                     dst_dir = os.path.join(self.path, f"b-{k}")
@@ -420,18 +406,26 @@ class AggState:
                     vname = f"v-{nxt}-{tag}"
                     self.backend.place_dir(src, os.path.join(dst_dir, vname))
                     buckets[str(k)] = vname
-        manifest = {
-            "version": nxt,
-            "num_buckets": self.num_buckets,
-            "range_width": self.range_width,
-            "range_key": self.range_key,
-            "buckets": buckets,
-        }
-        if m:  # carry forward prior extras (e.g. the cursor) …
-            manifest.update(
-                {k: v for k, v in m.items() if k not in manifest}
-            )
-        if extra:  # … and overwrite with this commit's
+        # carry forward prior extras (e.g. the cursor), then this commit's
+        manifest = {k: v for k, v in (m or {}).items()
+                    if k not in ("rows", "schema")}
+        manifest.update(version=nxt, num_buckets=nb, buckets=buckets)
+        if obs is not None:
+            rows = {} if resize else {
+                k: n for k, n in (m or {}).get("rows", {}).items()
+                if k not in superseded}
+            for r in _observed_metric(obs, "h", default=None) or []:
+                rows[str(int(r["x"]))] = int(r["y"])
+            manifest["rows"] = rows
+        # Spark widens decimal precision on every re-aggregation (sum over
+        # already-summed decimals), so a decimal state's on-disk types
+        # drift between buckets and its reads keep inferring the schema;
+        # every other state type is re-aggregation-stable
+        schema = StructType([f for f in merged.schema.fields
+                             if f.name != "__bkt"])
+        if not any(isinstance(f.dataType, DecimalType) for f in schema):
+            manifest["schema"] = schema.jsonValue()
+        if extra:
             manifest.update(extra)
         # Ordering barrier for work that must commit before this state is
         # visible (see docstring) — runs after the placement loop so its
@@ -447,6 +441,7 @@ class AggState:
             self.backend.publish_manifest(
                 self.path, nxt, manifest,
                 fence_epoch=self._fence.epoch if self._fence else None)
+        self.num_buckets = nb
         # Post-commit sweep: retain the live generation of every bucket
         # plus the one superseded generation of the buckets this refresh
         # touched (debug/time-travel — the retained previous manifest
@@ -463,9 +458,8 @@ class AggState:
         keep_by_bucket: dict[str, set[str]] = {
             k: {self._vdir(v)} for k, v in buckets.items()
         }
-        for k, old_v in prev.items():
-            if old_v is not None:
-                keep_by_bucket.setdefault(str(k), set()).add(self._vdir(old_v))
+        for k, old_v in superseded.items():
+            keep_by_bucket.setdefault(k, set()).add(self._vdir(old_v))
         for name in os.listdir(self.path):
             p = os.path.join(self.path, name)
             if (name.startswith("stage-")
@@ -483,10 +477,8 @@ class AggState:
         ``merge(delta)`` on an empty state, else ``merge(old ∪ delta)``.
         ``merge`` is the state's merge operator (the reference's
         storage.rs:115-150 idea) — max, sum, distinct, bottom-k — and
-        must return an already-merged frame unchanged.  The state was
-        written from ``delta``'s frame shape, so the read skips parquet
-        footer inference (the ``read_buckets`` treatment)."""
-        old = self.read(schema=delta.schema)
+        must return an already-merged frame unchanged."""
+        old = self.read()
         merged = merge(delta if old is None else old.unionByName(delta))
         self.write_buckets(merged, keys, list(range(self.num_buckets)))
 
@@ -532,9 +524,6 @@ class MaterializedView:
         self.changelog: FreqTable | None = None
         if changelog and self.is_aggregate:
             self.changelog = FreqTable(spark, os.path.join(state_dir, "log"))
-        # lazily-derived stable read schema (False = not derived yet; None
-        # = decimal state, keep inferred reads) — see _state_read_schema
-        self._read_schema_cache: object = False
         # end of the last prepared window (None: the committed cursor)
         self._prepared = None
 
@@ -727,23 +716,25 @@ class MaterializedView:
 
     def _prepare_agg(self, handle: dict, delta: DataFrame) -> None:
         st = self.state
-        # pin the bucket count from the manifest BEFORE bucketing the
-        # delta — a session whose conf differs from an existing state's
-        # layout must hash the delta with the layout's count, not its
-        # own (the count is fixed at state creation, so a still-running
-        # previous commit cannot change what this reads)
-        st._load_manifest()
+        # hash the delta with the state's current bucket count (1 while it
+        # is fresh) and record it: a commit still running for the previous
+        # window may resize the state, and ``commit`` then re-buckets
+        m = st._load_manifest()
+        handle["buckets"] = m["num_buckets"] if m else 1
         delta_state = self._delta_agg(delta, with_rows=True)
         keys = [c for c in delta_state.columns if not c.startswith("__")]
         # the state's schema: the delta's, less the refresh-local row count
         handle["schema"] = StructType([f for f in delta_state.schema.fields
                                        if f.name != "__nrows"])
         handle["delta_state"] = delta_state = delta_state.withColumn(
-            "__bkt", st.bucket_expr(keys, delta_state)
+            "__bkt", st.bucket_expr(keys, handle["buckets"])
         ).persist()
+        # per touched bucket: the delta's rows, and its groups that gain
+        # rows — a bound on the groups the commit adds to the state
         handle["per_bkt"] = (
             delta_state.groupBy("__bkt")
-            .agg(F.sum("__nrows").alias("__n"))
+            .agg(F.sum("__nrows").alias("__n"),
+                 F.count_if(F.col("__cnt") > 0).alias("__g"))
             .collect()
         )
 
@@ -760,11 +751,7 @@ class MaterializedView:
             if self.is_aggregate:
                 n = int(sum(r["__n"] for r in handle["per_bkt"]))
                 if n:
-                    self._merge_agg(
-                        handle["delta_state"].drop("__nrows", "__bkt"),
-                        handle["schema"], cursor={"cursor": now},
-                        touched=sorted(r["__bkt"] for r in handle["per_bkt"]),
-                    )
+                    self._merge_agg(handle, cursor={"cursor": now})
             else:
                 n = self._append_linear(handle["since"], now)
         except BaseException:
@@ -888,40 +875,48 @@ class MaterializedView:
         subclasses with a different input shape (joins) override this."""
         return self._delta_agg(self.base.scan(expand=False).limit(0))
 
-    def _merge_agg(self, delta_state: DataFrame, schema: StructType,
-                   cursor: dict, touched: list[int]) -> None:
-        """Merge per-group state deltas (of state ``schema``) into the
-        bucketed state: read ONLY the ``touched`` buckets the delta's
-        groups hash into (``prepare`` collects them with the row count),
-        re-aggregate those, and commit new versions of only those buckets
-        — O(delta + touched buckets), never O(|state|).  ``cursor`` rides
-        in the manifest commit (see ``_state_cursor``)."""
+    def _merge_agg(self, handle: dict, cursor: dict) -> None:
+        """Merge a prepared window's per-group state deltas into the
+        bucketed state: read ONLY the buckets the delta's groups hash into
+        (``prepare`` collects them with the row count), re-aggregate
+        those, and commit new versions of only those buckets — O(delta +
+        touched buckets), never O(|state|).  ``cursor`` rides in the
+        manifest commit (see ``_state_cursor``).
+
+        One exchange serves the merge and the write: both sides carry
+        ``__bkt``, the union is hash-partitioned on it, and the
+        ``groupBy("__bkt", *keys)`` above needs no second shuffle.  When
+        the commit outgrows the bucket count (``fit_buckets``), or a
+        commit since ``prepare`` changed it, the whole state is
+        re-bucketed and rewritten instead."""
+        schema = handle["schema"]
         keys = [c for c in schema.names if not c.startswith("__")]
         state_cols = [c for c in schema.names if c.startswith("__")]
         st = self.state
-        # The state files are written from this frame shape, so its
-        # schema is the on-disk schema — skip footer inference.
-        # EXCEPT for decimal state columns: Spark widens decimal
-        # precision on every re-aggregation (sum over already-summed
-        # decimals), so after two refreshes the on-disk type is wider
-        # than the delta's and an explicit narrower schema makes the
-        # parquet read throw PARQUET_COLUMN_DATA_TYPE_MISMATCH —
-        # decimal states keep the inferred-schema read.  Every other
-        # state type (bigint counts/sums, double, string keys) is
-        # re-aggregation-stable.
-        stable = not any(isinstance(f.dataType, DecimalType)
-                         for f in schema.fields)
-        old = st.read_buckets(touched, schema=schema if stable else None)
-        merged = delta_state
+        m = st._load_manifest()
+        nb = st.fit_buckets(m, sum(r["__g"] for r in handle["per_bkt"]),
+                            schema)
+        delta = handle["delta_state"].drop("__nrows")
+        if nb == handle["buckets"] and (m is None or nb == m["num_buckets"]):
+            touched = sorted(r["__bkt"] for r in handle["per_bkt"])
+            old = st.read_buckets(touched)
+        else:
+            touched = list(range(nb))
+            old = st.read()
+            delta = delta.withColumn("__bkt", st.bucket_expr(keys, nb))
+        merged = delta
         if old is not None:
-            merged = (
-                old.unionByName(delta_state)
-                .groupBy(*keys)
-                .agg(*[F.sum(c).alias(c) for c in state_cols])
-            )
-        merged = merged.filter(F.col("__cnt") != 0)
+            merged = old.withColumn(
+                "__bkt", st.bucket_expr(keys, nb)).unionByName(delta)
+        merged = (
+            st.partition(merged, len(touched))
+            .groupBy("__bkt", *keys)
+            .agg(*[F.sum(c).alias(c) for c in state_cols])
+            .filter(F.col("__cnt") != 0)
+        )
         if self.changelog is None:
-            st.write_buckets(merged, keys, touched, extra=cursor)
+            st.write_buckets(merged, keys, touched, extra=cursor,
+                             num_buckets=nb)
             return
         # the changelog frame and write_buckets both evaluate ``merged`` —
         # cache it so the touched-bucket re-aggregation runs once
@@ -945,7 +940,7 @@ class MaterializedView:
                 fut = ex.submit(self._emit_changelog, old, merged, cursor)
                 try:
                     st.write_buckets(merged, keys, touched, extra=cursor,
-                                     pre_publish=fut.result)
+                                     pre_publish=fut.result, num_buckets=nb)
                 except BaseException as staging_exc:
                     # staging failed BEFORE the pre_publish barrier
                     # consumed the future: wait for the changelog and
@@ -1007,22 +1002,6 @@ class MaterializedView:
         )
 
     # -- read ----------------------------------------------------------------
-    def _state_read_schema(self):
-        """The on-disk state schema when it is re-aggregation-stable, else
-        None — the ``read_buckets`` footer-skip treatment (r15 task 7)
-        extended to the full-state read (r19): reader and writer share the
-        delta-aggregation code, so names/types/order match by
-        construction; decimal states keep inferred-schema reads because
-        Spark widens decimal precision on every re-aggregation (see
-        ``_merge_agg``).  Derived once per view instance — the
-        ``_empty_delta`` plan build is itself a few ms of py4j."""
-        if self._read_schema_cache is False:  # unresolved marker
-            schema = self._empty_delta().schema
-            stable = not any(isinstance(f.dataType, DecimalType)
-                             for f in schema.fields)
-            self._read_schema_cache = schema if stable else None
-        return self._read_schema_cache
-
     def snapshot_key(self) -> tuple | None:
         """What ``read()`` returns right now, as metadata: the select
         items plus the state manifest's version and bucket dirs
@@ -1045,10 +1024,10 @@ class MaterializedView:
             if not self.state.exists():
                 self.refresh()
             return self.state.scan()
-        st = self.state.read(schema=self._state_read_schema())
+        st = self.state.read()
         if st is None:
             self.refresh()
-            st = self.state.read(schema=self._state_read_schema())
+            st = self.state.read()
         if st is None:
             # base table(s) empty so far: empty state with the delta-agg schema
             st = self.spark.createDataFrame([], self._empty_delta().schema)
@@ -1061,7 +1040,7 @@ class MaterializedView:
         out = []
         for kind, arg, alias in self.items:
             if kind == "key":
-                out.append(F.expr(arg).alias(alias))
+                out.append(F.expr(_unqualified(arg)).alias(alias))
             elif kind == "count":
                 col = (
                     F.col("__cnt") if arg.strip() == "*" else F.col(f"__cntnn_{alias}")
@@ -1152,6 +1131,7 @@ class AggregateJoinMaterializedView(MaterializedView):
         table_filters: list[str | None] | None = None,
         hows: list[str] | None = None,
         changelog: bool = False,
+        aliases: list[str] | None = None,
     ):
         if len(join_conds) != len(tables) - 1:
             raise ValueError("need exactly one join condition per adjacent pair")
@@ -1168,6 +1148,7 @@ class AggregateJoinMaterializedView(MaterializedView):
         self.join_conds = join_conds
         self.table_filters = table_filters or [None] * len(tables)
         self.hows = hows or ["inner"] * len(join_conds)
+        self.aliases = aliases
         if len(self.hows) != len(join_conds):
             raise ValueError("need exactly one join type per join condition")
         for h in self.hows:
@@ -1175,12 +1156,14 @@ class AggregateJoinMaterializedView(MaterializedView):
                 raise ValueError(f"unsupported join type {h!r}")
 
     def _side(self, i: int, df: DataFrame) -> DataFrame:
-        """Apply table i's pushdown filter and give its freq a unique name
-        (the chain join must carry every side's multiplicity)."""
+        """Apply table i's pushdown filter, give its freq a unique name
+        (the chain join must carry every side's multiplicity), and alias
+        it as the SQL names it, so ``t.col`` references resolve."""
         flt = self.table_filters[i]
         if flt:
             df = df.filter(flt)
-        return df.withColumnRenamed(FREQ, f"__f{i}")
+        df = df.withColumnRenamed(FREQ, f"__f{i}")
+        return df.alias(self.aliases[i]) if self.aliases else df
 
     def _step(
         self, chain: DataFrame, side: DataFrame, i: int, how: str | None = None
@@ -1262,7 +1245,9 @@ class AggregateJoinMaterializedView(MaterializedView):
 
     def _pad(self, chain: DataFrame, snapshot: DataFrame, i: int, sign: int) -> DataFrame:
         """Signed NULL-pad rows for left-outer step i: chain rows with no
-        cond match in ``snapshot``, table i's columns as typed NULLs."""
+        cond match in ``snapshot``, table i's columns as typed NULLs — in
+        the column order of an inner step, as the delta's union is
+        positional (sides may share column names, ``c.k = o.k``)."""
         unmatched = chain.join(
             snapshot, F.expr(self.join_conds[i - 1]), "left_anti"
         )
@@ -1270,10 +1255,8 @@ class AggregateJoinMaterializedView(MaterializedView):
             F.lit(None).cast(f.dataType).alias(f.name)
             for f in self.tables[i].schema().fields
         ]
-        keep = [c for c in unmatched.columns if c != "__f"]
-        return unmatched.select(
-            *keep, *nulls, (F.col("__f") * F.lit(sign)).alias("__f")
-        )
+        return unmatched.withColumn(
+            "__f", F.col("__f") * F.lit(sign)).select("*", *nulls)
 
     def _empty_delta(self) -> DataFrame:
         chain = self._side(0, self.tables[0].scan(expand=False).limit(0)) \
@@ -1411,7 +1394,7 @@ class AggregateJoinMaterializedView(MaterializedView):
             if terms:
                 delta = terms[0]
                 for t in terms[1:]:
-                    delta = delta.unionByName(t)
+                    delta = delta.union(t)
             else:
                 delta = None
             # chain building: an inner step is bilinear (unmerged side is

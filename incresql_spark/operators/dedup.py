@@ -40,7 +40,7 @@ from ..functions.hashing import (
     hash60_spark_sql,
     hash60_sql,
 )
-from ..plans.layout import materialize
+from ..plans.layout import materialize, materialize_bounded
 from ..plans.lsh import (
     bits_for_corpus,
     dot_literal_duck,
@@ -206,7 +206,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_shingles").alias("nb"),
         F.col("hot_arr").alias("hot_b"),
     )
-    return (
+    pairs = (
         candidates.join(sa, ["doc_a"])
         .join(sb, ["doc_b"])
         .filter(3 * F.least("na", "nb") >= F.col("na") + F.col("nb"))
@@ -223,6 +223,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "n_common", "jaccard")
         .orderBy("doc_a", "doc_b")
     )
+    # the pinned result owns no cache: the inputs go once it is computed
+    try:
+        return materialize_bounded(pairs)
+    finally:
+        docsh.unpersist()
+        dfreq.unpersist()
 
 
 DEDUP_NGRAM_JACCARD_SQL = f"""
@@ -348,7 +354,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return verify_jaccard_pairs(candidates, docsh, docsh).orderBy("doc_a", "doc_b")
+    pairs = verify_jaccard_pairs(candidates, docsh, docsh).orderBy("doc_a", "doc_b")
+    # the pinned result owns no cache: the inputs go once it is computed
+    try:
+        return materialize_bounded(pairs)
+    finally:
+        docsh.unpersist()
+        bands_long.unpersist()
 
 
 def _minhash_lsh_oracle() -> str:

@@ -416,6 +416,10 @@ def test_reregistering_64_bucket_mv_runs_no_spark_job(engine, spark,
                                                       monkeypatch):
     """A full read of an aggregate MV lists its 64 bucket dirs; in local
     mode that listing must run on the driver, not as a Spark job."""
+    from incresql_spark import materialize
+
+    # 400 groups of 12-byte state rows at 100 bytes per bucket: 64 buckets
+    monkeypatch.setattr(materialize, "BUCKET_BYTES", 100)
     e = engine
     e.execute_statement("CREATE TABLE rj (k INT, v INT)")
     e.execute_statement(

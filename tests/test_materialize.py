@@ -4,8 +4,13 @@ retractable-aggregate contract, functions/src/lib.rs:112-163)."""
 
 from __future__ import annotations
 
-import pytest
+import json
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from incresql_spark import commit
 from incresql_spark.engine import Engine
 from incresql_spark.frequency import FreqTable
 from incresql_spark.materialize import AggregateJoinMaterializedView
@@ -329,7 +334,8 @@ def test_join_mv_random_histories_match_recompute(spark, tmp_path):
                 assert got[g][2] == pytest.approx(want[g][2]), (step, g)
 
 
-def test_agg_state_merge_rewrites_only_touched_buckets(spark, tmp_path):
+def test_agg_state_merge_rewrites_only_touched_buckets(spark, tmp_path,
+                                                      monkeypatch):
     """The O(delta + touched groups) contract, structurally: a refresh whose
     delta touches ONE group must commit a new version of at most ONE state
     bucket — every other bucket's (version, files) pair is untouched
@@ -338,7 +344,11 @@ def test_agg_state_merge_rewrites_only_touched_buckets(spark, tmp_path):
     import json
     import os
 
+    from incresql_spark import materialize
     from incresql_spark.materialize import MaterializedView
+
+    # 200 groups of 28-byte state rows at 100 bytes per bucket: 64 buckets
+    monkeypatch.setattr(materialize, "BUCKET_BYTES", 100)
 
     def manifest(agg_path):
         vs = sorted(
@@ -487,7 +497,7 @@ def test_agg_state_recovers_from_crashed_refresh_leftovers(spark, tmp_path):
 def test_agg_state_explicit_bucket_count_mismatch_raises(spark, tmp_path):
     """An EXPLICIT bucket count conflicting with an existing manifest must
     fail with the real cause (ADVICE r8 low), not the staged-subset
-    assertion downstream; the conf-derived default defers to the manifest."""
+    assertion downstream; a reader without a count defers to the manifest."""
     from incresql_spark.materialize import AggState
 
     st = AggState(spark, str(tmp_path / "agg"), num_buckets=8)
@@ -499,7 +509,7 @@ def test_agg_state_explicit_bucket_count_mismatch_raises(spark, tmp_path):
             for r in df.withColumn("__bkt", st.bucket_expr(["k"])).select("__bkt").distinct().collect()
         ),
     )
-    # conf-default reader pins to the manifest silently
+    # a reader without a count pins to the manifest silently
     st2 = AggState(spark, str(tmp_path / "agg"))
     assert st2.read() is not None and st2.num_buckets == 8
     # explicit conflicting count fails loudly at manifest load
@@ -808,68 +818,6 @@ def test_left_outer_in_three_way_chain(engine):
     engine.execute_statement("REFRESH MATERIALIZED VIEW mv_mid")
     assert rows(engine, "SELECT * FROM mv_last") == rows(engine, batch_last)
     assert rows(engine, "SELECT * FROM mv_mid") == rows(engine, batch_mid)
-
-
-def test_agg_state_range_layout_localizes_touched_buckets(spark, tmp_path):
-    """Range state layout (incresql.mv.state.range_width): a key-LOCAL
-    delta — the recency-shaped ingest of append-mostly fact tables — must
-    touch only the buckets its key span maps into, even when it carries
-    MORE groups than there are buckets (where the hash layout would touch
-    every bucket).  Layout is manifest-pinned: a later session with a
-    different conf keeps the original mapping."""
-    import json
-    import os
-
-    from incresql_spark.materialize import MaterializedView
-
-    spark.conf.set("incresql.mv.state.range_width", "100")
-    try:
-        base = FreqTable(spark, str(tmp_path / "base"))
-        seed = spark.range(1000).selectExpr(
-            "CAST(id AS INT) AS k", "CAST(id AS INT) AS v"
-        )
-        base.create(seed.schema)
-        base.insert(seed)
-        mv = MaterializedView(
-            spark, "mv_rng", base, "k, count(*) AS cnt, sum(v) AS sv",
-            None, "k", str(tmp_path / "state"),
-        )
-        mv.refresh()
-        agg_path = os.path.join(str(tmp_path / "state"), "agg")
-
-        def manifest():
-            vs = sorted(
-                int(f.split("-")[1].split(".")[0])
-                for f in os.listdir(agg_path)
-                if f.startswith("manifest-") and f.endswith(".json")
-            )
-            with open(os.path.join(agg_path, f"manifest-{vs[-1]}.json")) as fh:
-                return json.load(fh)
-
-        m0 = manifest()
-        assert m0["range_width"] == 100
-        assert len(m0["buckets"]) == 10  # keys 0..999, width 100
-
-        # 80-group delta confined to keys 900..979: ONE bucket (9) touched —
-        # the hash layout would have touched ~all 10 with 80 groups
-        delta = spark.range(900, 980).selectExpr(
-            "CAST(id AS INT) AS k", "CAST(1 AS INT) AS v"
-        )
-        # conf changed mid-flight: the manifest pin must win over the conf
-        spark.conf.set("incresql.mv.state.range_width", "7")
-        base.insert(delta)
-        mv.refresh()
-        m1 = manifest()
-        assert m1["range_width"] == 100
-        changed = {
-            b for b in set(m0["buckets"]) | set(m1["buckets"])
-            if m0["buckets"].get(b) != m1["buckets"].get(b)
-        }
-        assert changed == {"9"}, changed
-        got = {r.k: (r.cnt, r.sv) for r in mv.read().collect()}
-        assert len(got) == 1000 and got[950] == (2, 951) and got[10] == (1, 10)
-    finally:
-        spark.conf.unset("incresql.mv.state.range_width")
 
 
 def test_refresh_crash_between_state_commit_and_meta_is_exactly_once(spark, tmp_path):
@@ -1214,66 +1162,6 @@ def test_mv_ddl_failed_constructor_rolls_back(engine):
     engine.execute_statement("DROP MATERIALIZED VIEW mv_rc")
 
 
-def test_agg_state_range_key_declared_and_non_numeric_raises(spark, tmp_path):
-    """Round-10 range-layout generalization: (a) the range key may be any
-    DECLARED group key (incresql.mv.state.range_key), not just the leading
-    one; (b) a non-numeric range key raises at bucketing time instead of
-    silently folding every group into bucket 0 (one hot bucket = a
-    serialized merge); (c) the declared key is manifest-pinned."""
-    import json
-    import os
-
-    from incresql_spark.materialize import MaterializedView
-
-    spark.conf.set("incresql.mv.state.range_width", "100")
-    spark.conf.set("incresql.mv.state.range_key", "k2")
-    try:
-        base = FreqTable(spark, str(tmp_path / "base_rk"))
-        seed = spark.range(1000).selectExpr(
-            "CAST(id % 7 AS STRING) AS tag", "CAST(id AS INT) AS k2",
-            "CAST(id AS INT) AS v",
-        )
-        base.create(seed.schema)
-        base.insert(seed)
-        # leading group key is the STRING tag; range bucketing must use k2
-        mv = MaterializedView(
-            spark, "mv_rk", base, "tag, k2, count(*) AS cnt",
-            None, "tag, k2", str(tmp_path / "state_rk"),
-        )
-        mv.refresh()
-        agg_path = os.path.join(str(tmp_path / "state_rk"), "agg")
-        vs = sorted(
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(agg_path)
-            if f.startswith("manifest-") and f.endswith(".json")
-        )
-        with open(os.path.join(agg_path, f"manifest-{vs[-1]}.json")) as fh:
-            m = json.load(fh)
-        assert m["range_key"] == "k2"
-        assert len(m["buckets"]) == 10  # k2 spans 0..999, width 100
-        assert mv.read().count() == 1000
-
-        # non-numeric declared range key → loud error, not a hot bucket
-        spark.conf.set("incresql.mv.state.range_key", "tag")
-        mv_bad = MaterializedView(
-            spark, "mv_rk_bad", base, "tag, k2, count(*) AS cnt",
-            None, "tag, k2", str(tmp_path / "state_rk_bad"),
-        )
-        with pytest.raises(ValueError, match="numeric range key"):
-            mv_bad.refresh()
-        # a key that is not a group key at all is refused too
-        spark.conf.set("incresql.mv.state.range_key", "nope")
-        mv_bad2 = MaterializedView(
-            spark, "mv_rk_bad2", base, "tag, k2, count(*) AS cnt",
-            None, "tag, k2", str(tmp_path / "state_rk_bad2"),
-        )
-        with pytest.raises(ValueError, match="not a group key"):
-            mv_bad2.refresh()
-    finally:
-        spark.conf.unset("incresql.mv.state.range_width")
-        spark.conf.unset("incresql.mv.state.range_key")
-
-
 def test_join_mv_left_outer_randomized_differential_with_compaction(spark, tmp_path):
     """Randomized insert/delete histories through a 2-way LEFT OUTER join
     view that keeps the join's rows (grouped by every column with
@@ -1557,3 +1445,144 @@ def test_write_buckets_one_file_per_bucket_with_fewer_tasks(
     monkeypatch.undo()
     assert sorted(st.read().collect()) == sorted(per_bucket.read().collect())
     assert st._load_manifest()["version"] == m["version"]  # guard published nothing
+
+
+def _manifest(state_dir):
+    from incresql_spark.materialize import AggState
+
+    return AggState(None, f"{state_dir}/agg",
+                    backend=commit.RenameCommitBackend())._load_manifest()
+
+
+def _grown_view(spark, tmp_path, monkeypatch):
+    """A single-base view whose state holds 28-byte rows (int key + three
+    bigint state columns), with 4 such rows per bucket."""
+    from incresql_spark import materialize
+
+    monkeypatch.setattr(materialize, "BUCKET_BYTES", 4 * 28)
+    base = FreqTable(spark, str(tmp_path / "base"))
+    base.create(T.StructType([T.StructField("k", T.IntegerType()),
+                              T.StructField("v", T.IntegerType())]))
+    mv = materialize.MaterializedView(
+        spark, "grown", base, "k, count(*) AS n, sum(v) AS s", None, "k",
+        str(tmp_path / "state"))
+    return base, mv
+
+
+def _recomputed(spark, base):
+    return sorted(tuple(r) for r in base.scan().groupBy("k").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")).collect())
+
+
+def test_agg_state_bucket_count_doubles_as_the_state_grows(
+        spark, tmp_path, monkeypatch):
+    """A state that outgrows BUCKET_BYTES per bucket is rewritten at the
+    next fitting power of two; the manifest records the rows it holds per
+    bucket and the schema it was written with, and the view still equals
+    its recomputed SELECT — after growth and after deletes."""
+    base, mv = _grown_view(spark, tmp_path, monkeypatch)
+    counts = []
+    for lo, hi in [(0, 3), (3, 9), (9, 30)]:
+        base.insert(spark.createDataFrame(
+            [(k, k * 10) for k in range(lo, hi)], "k INT, v INT"))
+        mv.refresh()
+        m = _manifest(tmp_path / "state")
+        counts.append(m["num_buckets"])
+        assert sum(m["rows"].values()) == hi
+        assert set(m["rows"]) == set(m["buckets"])
+        assert sorted(tuple(r) for r in mv.read().collect()) == \
+            _recomputed(spark, base)
+    assert counts == [1, 4, 8]
+    assert T.StructType.fromJson(m["schema"]).names == [
+        "k", "__cnt", "__sum_s", "__cntnn_s"]
+    base.delete_where("k < 20")
+    mv.refresh()
+    m = _manifest(tmp_path / "state")
+    assert m["num_buckets"] == 8  # the count never shrinks
+    assert sum(m["rows"].values()) == 10
+    assert sorted(tuple(r) for r in mv.read().collect()) == \
+        _recomputed(spark, base)
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+def test_agg_state_resize_failure_at_publish_recovers(
+        spark, tmp_path, monkeypatch, when):
+    """A failure just before or just after the resize's manifest
+    publication leaves the previous manifest readable with every bucket
+    it references, and the next refresh() recovers the exact result."""
+    import os
+
+    base, mv = _grown_view(spark, tmp_path, monkeypatch)
+    base.insert(spark.createDataFrame([(1, 1), (2, 2)], "k INT, v INT"))
+    mv.refresh()
+    old = _manifest(tmp_path / "state")
+    before = sorted(tuple(r) for r in mv.read().collect())
+    base.insert(spark.createDataFrame(
+        [(k, k) for k in range(3, 12)], "k INT, v INT"))
+    backend = mv.state.backend
+    real = backend.publish_manifest
+
+    def failing(*args, **kwargs):
+        if when == "after":
+            real(*args, **kwargs)
+        raise RuntimeError(f"injected failure {when} publish")
+
+    monkeypatch.setattr(backend, "publish_manifest", failing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        mv.refresh()
+    monkeypatch.setattr(backend, "publish_manifest", real)
+    agg = os.path.join(str(tmp_path / "state"), "agg")
+    for b, v in old["buckets"].items():
+        assert os.path.isdir(os.path.join(agg, f"b-{b}", v))
+    with open(os.path.join(agg, f"manifest-{old['version']}.json")) as fh:
+        assert json.load(fh)["buckets"] == old["buckets"]
+    if when == "before":
+        assert _manifest(tmp_path / "state")["version"] == old["version"]
+        assert sorted(tuple(r) for r in mv.read().collect()) == before
+    else:
+        assert _manifest(tmp_path / "state")["num_buckets"] > 1
+    mv.refresh()
+    assert _manifest(tmp_path / "state")["num_buckets"] == 4
+    assert sorted(tuple(r) for r in mv.read().collect()) == \
+        _recomputed(spark, base)
+
+
+def test_agg_state_refuses_a_range_layout_manifest(spark, tmp_path):
+    """The range bucket layout is gone: a state whose manifest pins one
+    fails loudly on open instead of being mis-bucketed by hash."""
+    from incresql_spark.materialize import AggState
+
+    st = AggState(spark, str(tmp_path / "agg"), num_buckets=2)
+    st.write_buckets(spark.createDataFrame([(1, 1)], "k INT, __cnt BIGINT"),
+                     ["k"], [0, 1], extra={"range_width": 100})
+    with pytest.raises(ValueError, match="range bucket layout"):
+        AggState(spark, str(tmp_path / "agg")).read()
+
+
+@pytest.mark.parametrize("tables", [
+    "c JOIN o ON c.ck = o.ck",
+    "c AS a JOIN o AS b ON a.ck = b.ck",
+])
+def test_join_mv_ddl_resolves_table_names_and_aliases(engine, tables):
+    """Join view DDL aliases each side by its alias or table name, so
+    qualified columns resolve, and a qualified key without AS is named by
+    its bare column; the view equals its SELECT after INSERT and DELETE
+    on both sides."""
+    x = engine.execute_statement
+    x("CREATE TABLE c (ck INT, name TEXT)")
+    x("CREATE TABLE o (ck INT, amt INT)")
+    x("INSERT INTO c VALUES (1, 'x'), (2, 'y'), (3, 'z')")
+    x("INSERT INTO o VALUES (1, 10), (1, 11), (2, 20)")
+    a, b = ("a", "b") if " AS " in tables else ("c", "o")
+    sel = (f"SELECT {a}.ck, count(*) AS n, sum({b}.amt) AS s "
+           f"FROM {tables} GROUP BY {a}.ck")
+    x(f"CREATE MATERIALIZED VIEW m AS {sel}")
+    assert engine.execute_statement("SELECT * FROM m").columns[0] == "ck"
+    assert rows(engine, "SELECT * FROM m") == rows(engine, sel)
+    x("INSERT INTO c VALUES (4, 'w')")
+    x("INSERT INTO o VALUES (3, 30), (4, 40), (2, 21)")
+    x("DELETE FROM o WHERE amt = 10")
+    x("DELETE FROM c WHERE ck = 2")
+    x("REFRESH MATERIALIZED VIEW m")
+    assert rows(engine, "SELECT * FROM m") == rows(engine, sel)
+    assert rows(engine, sel) == [(1, 1, 11), (3, 1, 30), (4, 1, 40)]

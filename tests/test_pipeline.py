@@ -240,3 +240,28 @@ def test_real_codec_path_gated_on_availability():
     arr = multimodal.decode_image(buf.getvalue(), "image/png")
     assert arr.shape == (3, 4, 3)
     assert (arr == np.array([10, 20, 30], dtype=np.uint8)).all()
+
+
+def test_dedup_pair_operators_own_no_cache(spark):
+    """``dedup_minhash_lsh`` and ``dedup_ngram_jaccard`` hand back their
+    result pinned in the bounded registry and unpersist their private
+    shingle caches: after a Python and a JVM GC, every RDD the two calls
+    left persisted is a registry pin."""
+    import gc
+
+    from incresql_spark.plans import layout
+
+    def persisted():
+        return {int(k) for k in spark.sparkContext._jsc
+                .getPersistentRDDs().keySet().toArray()}
+
+    before = persisted()
+    for op in (dedup.dedup_minhash_lsh, dedup.dedup_ngram_jaccard):
+        assert op(spark, SF_SMALL).collect()
+    gc.collect()
+    spark._jvm.System.gc()
+    grown = persisted() - before
+    pins = {p._jdf.queryExecution().analyzed().rdd().id()
+            for p in getattr(spark, layout.AUTO_PINS_ATTR, ())}
+    assert len(grown) <= layout.AUTO_PIN_CAPACITY
+    assert grown <= pins, grown - pins

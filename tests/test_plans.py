@@ -840,3 +840,43 @@ def test_sketch_merge_plan_shapes(spark, tmp_path, monkeypatch, name,
     ingest(maintainer, 1)
     assert len(plans) == 2
     assert plans[1].count("Exchange") == exchanges, plans[1]
+
+
+def test_aggregate_mv_merge_and_bucket_write_share_one_exchange(
+        spark, tmp_path, monkeypatch):
+    """An aggregate view's merge (touched state buckets ∪ the delta,
+    re-aggregated per group) and its bucket write run over ONE exchange:
+    the frame handed to ``write_buckets`` is hash-partitioned on
+    ``__bkt`` already, so the write adds none, and the per-group
+    aggregate above that partitioning needs none."""
+    from pyspark.sql import types as T
+
+    from incresql_spark import materialize
+    from incresql_spark.frequency import FreqTable
+
+    # four groups of 28-byte state rows at 50 bytes per bucket: 4 buckets
+    monkeypatch.setattr(materialize, "BUCKET_BYTES", 50)
+    plans = []
+    write = materialize.AggState.write_buckets
+
+    def capture(self, merged, *args, **kwargs):
+        assert "__bkt" in merged.columns
+        plans.append(merged._jdf.queryExecution().executedPlan().toString())
+        return write(self, merged, *args, **kwargs)
+
+    monkeypatch.setattr(materialize.AggState, "write_buckets", capture)
+    base = FreqTable(spark, str(tmp_path / "base"))
+    base.create(T.StructType([T.StructField("k", T.IntegerType()),
+                              T.StructField("v", T.IntegerType())]))
+    mv = materialize.MaterializedView(
+        spark, "one_exchange", base, "k, count(*) AS n, sum(v) AS s", None,
+        "k", str(tmp_path / "state"))
+    for rows in ([(1, 1), (2, 2), (3, 3), (4, 4)], [(1, 5), (4, 6)]):
+        base.insert(spark.createDataFrame(rows, "k INT, v INT"))
+        mv.refresh()
+    assert mv.state.num_buckets == 4 and len(plans) == 2
+    # the delta's own aggregation ran in prepare; its cached plan prints
+    # below the InMemoryRelation
+    merge = plans[1].split("InMemoryRelation")[0]
+    assert merge.count("Exchange") == 1, plans[1]
+    assert "hashpartitioning(__bkt" in merge, plans[1]

@@ -347,8 +347,8 @@ def test_cascade_refresh_jobs_carry_the_statement_job_group(spark, tmp_path):
     its changelog → view over that one) writes each level's changelog on
     a worker thread: every job the statement launches is listed under the
     session's job group (so KILL reaches them), none runs untagged, and
-    the statement launches 29 jobs, as the serial root-first loop did
-    before the prepare/commit split."""
+    the statement launches 26 jobs: one shuffle serves each level's merge
+    and bucket write (29 while the write shuffled again)."""
     e = Engine(spark, str(tmp_path / "wh"))
     x = e.execute_statement
     x("CREATE TABLE t (g TEXT, v INT)")
@@ -367,7 +367,7 @@ def test_cascade_refresh_jobs_carry_the_statement_job_group(spark, tmp_path):
     assert res.rows == [(3,)]
     jobs = tracker.getJobIdsForGroup("incresql-session-jobgroup-cascade")
     assert not set(tracker.getJobIdsForGroup(None)) - untagged
-    assert len(jobs) == 29
+    assert len(jobs) == 26
     assert sorted(x("SELECT * FROM l3").rows) == [(2, 18)]
 
 
@@ -395,3 +395,56 @@ def test_minhash_driver_releases_pins_when_a_wave_fails(spark, monkeypatch):
         dedup_minhash_incremental(spark, SF_SMALL)
     assert calls["n"] == 3
     assert _persisted(spark) - before == set()
+
+
+def test_pipeline_commit_resize_while_next_window_prepares(
+        spark, tmp_path, monkeypatch):
+    """Commit i resizes the root's state while prepare i+1 already hashed
+    its delta with the old bucket count: commit i+1 re-buckets, and every
+    level ends equal to serial ``refresh(until)`` calls."""
+    from incresql_spark import materialize
+
+    # 28-byte root state rows, 4 per bucket: 3 groups fit one bucket, the
+    # second wave's 9 need four; the third wave also updates group 1, which
+    # a commit merging into the wrong bucket would duplicate
+    monkeypatch.setattr(materialize, "BUCKET_BYTES", 4 * 28)
+    waves = [[("insert", "a", [(k, k) for k in range(lo, hi)])]
+             for lo, hi in [(0, 3), (3, 9), (9, 12)]]
+    waves[2][0][2].append((1, 100))
+
+    tables, chain = _build(spark, tmp_path / "ser", "single", 2)
+    model = {"a": Counter(), "b": Counter()}
+    for ops in waves:
+        _apply(spark, tables, model, ops)
+        for view in chain:
+            view.refresh()
+    want = _reads(chain)
+    assert want == _recompute("single", model, 2)
+
+    tables, chain = _build(spark, tmp_path / "pipe", "single", 2)
+    root = chain[0]
+    prepared, hashed, merges = threading.Event(), [], Counter()
+    real_prepare, real_merge = root.prepare, root._merge_agg
+
+    def prepare(until=None):
+        handle = real_prepare(until)
+        hashed.append(handle.get("buckets"))
+        if len(hashed) == 3:
+            prepared.set()
+        return handle
+
+    def merge(handle, cursor):
+        merges["n"] += 1
+        if merges["n"] == 2:
+            prepared.wait(60)  # commit 2 resizes once prepare 3 hashed
+        return real_merge(handle, cursor)
+
+    root.prepare, root._merge_agg = prepare, merge
+    model = {"a": Counter(), "b": Counter()}
+    with RefreshPipeline(chain) as pipe:
+        for ops in waves:
+            _apply(spark, tables, model, ops)
+            pipe.submit()
+    assert hashed == [1, 1, 1]
+    assert root.state._load_manifest()["num_buckets"] == 4
+    assert _reads(chain) == want

@@ -296,27 +296,19 @@ def _tiny_changelog_mv(spark, tmp_path):
 def test_changelog_emits_only_changed_groups(spark, tmp_path):
     """An unchanged group sharing a state bucket with a changed one must
     CANCEL out of the changelog (new +1 meets prior -1) — downstream
-    views see O(changed groups), not O(touched buckets)."""
-    from incresql_spark.materialize import STATE_BUCKETS_CONF
-
-    prior = spark.conf.get(STATE_BUCKETS_CONF, None)
-    spark.conf.set(STATE_BUCKETS_CONF, "1")  # force a shared bucket
-    try:
-        base, mv = _tiny_changelog_mv(spark, tmp_path)
-        base.insert(spark.createDataFrame([("a", 1), ("b", 2)], ["g", "v"]))
-        mv.refresh()
-        seq1 = mv.changelog.last_seq()
-        base.insert(spark.createDataFrame([("a", 10)], ["g", "v"]))
-        mv.refresh()
-        rows = {(r.g, r.n, r.s): r["__freq"]
-                for r in mv.changelog.delta(seq1, None).collect()}
-        # group b: untouched -> cancelled; group a: old out, new in
-        assert rows == {("a", 1, 1): -1, ("a", 2, 11): 1}
-    finally:
-        if prior is None:
-            spark.conf.unset(STATE_BUCKETS_CONF)
-        else:
-            spark.conf.set(STATE_BUCKETS_CONF, prior)
+    views see O(changed groups), not O(touched buckets).  Two groups
+    size the state to one bucket, so they share it."""
+    base, mv = _tiny_changelog_mv(spark, tmp_path)
+    base.insert(spark.createDataFrame([("a", 1), ("b", 2)], ["g", "v"]))
+    mv.refresh()
+    assert mv.state.num_buckets == 1
+    seq1 = mv.changelog.last_seq()
+    base.insert(spark.createDataFrame([("a", 10)], ["g", "v"]))
+    mv.refresh()
+    rows = {(r.g, r.n, r.s): r["__freq"]
+            for r in mv.changelog.delta(seq1, None).collect()}
+    # group b: untouched -> cancelled; group a: old out, new in
+    assert rows == {("a", 1, 1): -1, ("a", 2, 11): 1}
 
 
 def test_changelog_group_death_emits_bare_retraction(spark, tmp_path):
