@@ -7,7 +7,7 @@ multiset dataflow where every tuple carries a signed i64 frequency
 Spark-first:
 
 - ``session``    — tuned SparkSession bootstrap (AQE, Arrow, shuffle sizing)
-- ``catalog``    — parquet table registration / schema normalisation
+- ``catalog``    — parquet table loading (TESTDATA names)
 - ``tpch``       — the reference's benchmark queries (Q1/Q3/Q5/Q6/Q10)
 - ``frequency``  — the ``__freq`` multiset layer (insert/delete/merge)
 - ``engine``     — SQL statement router with the reference's dialect
@@ -15,7 +15,9 @@ Spark-first:
 - ``operators``  — relational + training-data-pipeline operators (dedup,
   similarity search, text analysis, multimodal plumbing)
 - ``sources``    — ``FROM DIRECTORY`` CSV ingestion (file_scan.rs parity)
-- ``streaming``  — incremental materialized-view refresh (delta propagation)
+- ``materialize`` — incremental materialized views (delta propagation)
+- ``streaming``  — incremental sketch / near-dup index maintainers over
+  appended batches, and sessionization
 
 Everything is expressed through the DataFrame API / Spark SQL so Catalyst and
 Tungsten choose the physical strategy; Python UDFs appear only where built-in

@@ -1,13 +1,11 @@
-"""Table registration over the driver-provided parquet test data.
+"""Table loading over the driver-provided parquet test data.
 
 The reference bootstraps a catalog of system tables and resolves user tables
 through it (catalog/src/lib.rs:48-50, bootstrap.rs:22-66).  On Spark the
-metastore plays that role; this module is the thin shim that (a) loads the
-TESTDATA parquet tables as temp views with canonical names and (b) exposes the
-``incresql``-style system views (``databases``, ``tables``) that SHOW
-DATABASES / SHOW TABLES compile to (runtime/src/connection.rs:50-57).
+metastore plays that role; this module is the thin shim that loads a
+TESTDATA parquet table under its canonical name.
 
-Scale note: registration is metadata-only — ``spark.read.parquet`` builds a
+Scale note: loading is metadata-only — ``spark.read.parquet`` builds a
 lazy scan; filters/projections push into the parquet reader (verified in
 tests with .explain → PushedFilters/ReadSchema).
 """
@@ -17,18 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import disable_generate_filter_inference
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-)
-EXTRA_TABLES = ("events", "documents", "embeddings")
-ALL_TABLES = TPCH_TABLES + EXTRA_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,32 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ALL_TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view and return the DataFrames.
-
-    Temp-view registration keeps everything declarative: `spark.sql` queries
-    over these names still get full pushdown and pruning because the view is
-    just a named logical plan.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
-class Tables:
-    """Attribute-style access to the registered tables (``t.lineitem`` …)."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ALL_TABLES):
-        self._dfs = register_tables(spark, sf_dir, names)
-        for name, df in self._dfs.items():
-            setattr(self, name, df)
-
-    def __getitem__(self, name: str) -> DataFrame:
-        return self._dfs[name]

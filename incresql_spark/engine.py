@@ -91,24 +91,21 @@ class QueryKilled(RuntimeError):
     (runtime/src/lib.rs:90-131)."""
 
 
-#: Embedded-path driver-OOM guard (round-13 verdict task 6).  The wire
-#: server always streams; the EMBEDDED execute_statement() default stays
-#: collected (goldens and catalog consumers read .rows), but the collect
-#: now runs under a LIMIT fence: results larger than this row count raise
-#: EmbeddedResultTooLarge instead of materializing on the driver — the
-#: caller either streams (stream=True) or raises/disables the cap
-#: explicitly.  The fence costs nothing extra: it is the same single
-#: execution with a CollectLimit on top, and the overflow is detected
-#: without collecting past the cap.
-EMBEDDED_MAX_COLLECT_CONF = "incresql.embedded.maxCollectRows"
-EMBEDDED_MAX_COLLECT_DEFAULT = 1_000_000
+#: Embedded-path driver-OOM guard.  The wire server always streams; the
+#: EMBEDDED execute_statement() default stays collected (goldens and
+#: catalog consumers read .rows), but the collect runs under a LIMIT
+#: fence: results larger than this row count raise EmbeddedResultTooLarge
+#: instead of materializing on the driver; such a caller streams
+#: (stream=True).  The fence costs nothing extra: it is the same
+#: single execution with a CollectLimit on top, and the overflow is
+#: detected without collecting past the cap.
+EMBEDDED_MAX_COLLECT_ROWS = 1_000_000
 
 
 class EmbeddedResultTooLarge(RuntimeError):
-    """A non-streamed SELECT exceeded incresql.embedded.maxCollectRows.
-    Re-run with execute_statement(..., stream=True) (O(partition) driver
-    memory), or raise/disable the cap (0 = unlimited) for a consumer that
-    really wants a full driver-side materialization."""
+    """A non-streamed SELECT exceeded EMBEDDED_MAX_COLLECT_ROWS.  Re-run
+    with execute_statement(..., stream=True) (O(partition) driver
+    memory)."""
 
 
 @dataclass
@@ -1106,24 +1103,11 @@ class Engine:
         df = self._run_select(s)
         if stream:
             return EngineResult(list(df.columns), [], df, streaming=True)
-        raw_cap = self.spark.conf.get(
-            EMBEDDED_MAX_COLLECT_CONF, str(EMBEDDED_MAX_COLLECT_DEFAULT)
-        )
-        try:
-            max_rows = int(raw_cap)
-        except ValueError:
-            raise ValueError(
-                f"{EMBEDDED_MAX_COLLECT_CONF} must be an integer row cap "
-                f"(0 disables the fence), got {raw_cap!r}"
-            ) from None
-        if max_rows > 0:
-            rows = [tuple(r) for r in df.limit(max_rows + 1).collect()]
-            if len(rows) > max_rows:
-                raise EmbeddedResultTooLarge(
-                    f"embedded SELECT returned more than {max_rows} rows "
-                    f"({EMBEDDED_MAX_COLLECT_CONF}); use "
-                    "execute_statement(..., stream=True) or raise the cap"
-                )
-        else:
-            rows = [tuple(r) for r in df.collect()]
+        max_rows = EMBEDDED_MAX_COLLECT_ROWS
+        rows = [tuple(r) for r in df.limit(max_rows + 1).collect()]
+        if len(rows) > max_rows:
+            raise EmbeddedResultTooLarge(
+                f"embedded SELECT returned more than {max_rows} rows; use "
+                "execute_statement(..., stream=True)"
+            )
         return EngineResult(list(df.columns), rows, df)

@@ -51,13 +51,6 @@ def hash60_spark_sql(expr: str, seed: int | None = None) -> str:
     return f"CAST(conv(substr(md5({inner}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def py_hash60(s: str, seed: int | None = None) -> int:
-    """Python twin (for plan-time constants, e.g. LSH hyperplanes)."""
-    if seed is not None:
-        s = f"{seed}|{s}"
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 # --- Kirsch-Mitzenmacher double-hash family --------------------------------
 # One md5 yields two independent 48-bit values h1, h2; the family
 # h_i = h1 + i*h2 (i < 16 → values < 2^53, no overflow) behaves like

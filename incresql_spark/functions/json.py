@@ -9,7 +9,9 @@ The reference's JSON trio (SURVEY §2.3):
 - ``->>``                    — json_unquote(json_extract(x, p))
   (json_extract_unquote.rs:10-23), the TPC-H CSV-load workhorse.
 
-Spark mapping (all JVM-side, no Python UDFs):
+Spark mapping, as SQL fragments for the dialect rewriter (``arrow_sql`` /
+``double_arrow_sql``; the SQL-callable ``json_extract`` / ``json_unquote``
+are registry.py functions).  All JVM-side, no Python UDFs:
 - ``->``  = ``to_json(variant_get(parse_json(x), path))`` — verified to give
   quoted strings, ``null`` for json-null, NULL for missing: exact parity.
   Variant stores JSON numbers as DECIMAL (exact to 38 digits) exactly like
@@ -35,9 +37,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 _DOT_NUM = re.compile(r"\.(\d+)")
 _DOT_STAR = re.compile(r"\.\*")
 
@@ -47,31 +46,6 @@ def translate_path(path: str) -> str:
     out = _DOT_NUM.sub(r"[\1]", path)
     out = _DOT_STAR.sub("[*]", out)
     return out
-
-
-def json_extract(col: Column | str, path: str) -> Column:
-    """``->``: JSON-typed extraction (strings stay quoted).
-
-    Wildcard paths can't go through the variant reader (no ``[*]`` support);
-    ``get_json_object`` array-wraps multi-matches with element quoting
-    preserved — the reference's wildcard behaviour (json_extract.rs:11-47).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    p = translate_path(path)
-    if "*" in p:
-        return F.get_json_object(c, p)
-    return F.to_json(F.try_variant_get(F.parse_json(c), p, "variant"))
-
-
-def json_unquote(col: Column | str) -> Column:
-    """``json_unquote``: strip quotes from a JSON string value, pass others
-    through; SQL NULL → SQL NULL (typed TEXT)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(
-        c.rlike('^".*"$'),
-        # decode escapes by round-tripping through the JSON parser
-        F.try_variant_get(F.parse_json(c), "$", "string"),
-    ).otherwise(c)
 
 
 # SQL fragments for the dialect rewriter (engine.execute path).

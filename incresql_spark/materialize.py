@@ -110,8 +110,7 @@ class AggState:
     buckets the delta's groups hash into, re-aggregates those, and writes
     NEW versions of only those buckets — untouched buckets are neither read
     nor rewritten (this is the bucketed merge the reference's changelog
-    design implies, storage/src/storage.rs:26-65, and what
-    plans.layout.write_bucketed does for query-side tables).
+    design implies, storage/src/storage.rs:26-65).
 
     Bucket count: an explicit ``num_buckets`` is pinned for the life of
     the state (the sketch maintainers pass one).  Without one the state
@@ -1113,9 +1112,9 @@ class AggregateJoinMaterializedView(MaterializedView):
     no per-key match-count state table (which would itself cost a merged,
     i.e. shuffled, scan per refresh; the snapshot anti-join reads
     strictly less).  On a cluster the state FreqTables would be bucketed
-    on their join keys so every term's probe is co-located — the layout
-    ``plans.layout.write_bucketed`` provides; at 100 TB that turns each
-    refresh into delta-sized work plus bucket-local lookups.
+    on their join keys so every term's probe is co-located (Spark's
+    ``bucketBy`` layout); at 100 TB that turns each refresh into
+    delta-sized work plus bucket-local lookups.
     """
 
     def __init__(

@@ -705,32 +705,6 @@ ORDER BY vec_a, vec_b
 DEDUP_EMBEDDING_SQL = _embed_sql()
 
 
-def dedup_embedding_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs exact cosine — the O(n²) oracle helper used in pytest to
-    measure the banded operator's recall.  NOT registered as a driver query
-    (a cross join does not survive 100 TB); kept as the ground truth."""
-    e = load_table(spark, sf_dir, "embeddings")
-    withnorm = e.select("vec_id", "embedding", F.expr(_NORM_SPARK).alias("norm"))
-    a = withnorm.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = withnorm.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("norm_b"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", F.expr(_DOT_SPARK) / (F.col("norm_a") * F.col("norm_b")))
-        .filter(F.col("cosine") >= COSINE_THRESHOLD)
-        .select("vec_a", "vec_b", "cosine")
-        .orderBy("vec_a", "vec_b")
-    )
-
-
 LABEL_PROP_ITERS = 3
 
 

@@ -1038,8 +1038,8 @@ ORDER BY stage
 def op_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation over the events stream via ``F.window`` —
     Spark's native TimeWindow operator, the exact shape a Structured
-    Streaming job uses (swap ``load_table`` for ``readStream`` and add a
-    watermark; ``streaming/incremental.windowed_counts`` is that variant).
+    Streaming job uses (swap ``load_table`` for a stream source and add a
+    watermark).
 
     Scale: window assignment is a narrow projection (epoch arithmetic, no
     explode for tumbling windows); the aggregation is the standard
@@ -1752,23 +1752,6 @@ _QSK_KEY_SPARK = ("concat(CAST(l_orderkey AS STRING), '|', "
                   "CAST(l_linenumber AS STRING))")
 _QSK_KEY_DUCK = ("CAST(l_orderkey AS VARCHAR) || '|' || "
                  "CAST(l_linenumber AS VARCHAR)")
-
-
-def quantile_sample(df: DataFrame, value: str, key_expr: str,
-                    k: int = QSK_K) -> DataFrame:
-    """The mergeable sketch state: the k rows of ``df`` with the smallest
-    60-bit hash of ``key_expr`` (columns (v, h)).  States merge by taking
-    the k smallest of a union — union then re-apply; idempotent and
-    order-independent, so incremental maintenance is exact."""
-    return (
-        df.select(
-            F.col(value).alias("v"),
-            F.expr(hash60_spark_sql(key_expr)).alias("h"),
-        )
-        .filter(F.col("v").isNotNull())
-        .orderBy("h", "v")
-        .limit(k)
-    )
 
 
 def quantile_base(li: DataFrame) -> DataFrame:

@@ -1,43 +1,19 @@
-"""Data layout: bucketing and partition sizing.
+"""Materialized intermediates: compute a reused frame once, pin it, and
+release it when its consumers are done.
 
-Bucketing pre-shuffles a table by key at WRITE time so every future join or
-aggregation on that key is shuffle-free — the Spark-native analog of the
-reference's "primary key = sort order" RocksDB layout (storage/src/
-table.rs:18-24).  At 100 TB, bucketing the fact tables on their join keys
-(lineitem.l_orderkey ⋈ orders.o_orderkey) turns the biggest shuffle in the
-TPC-H suite into a local zip of co-located buckets.
+``materialize`` is the single seam every operator that pins goes through
+(local checkpoint by default, a reliable checkpoint directory on a
+cluster); ``materialize_bounded`` caps a session's outstanding returned
+pins; ``release`` frees a pin's blocks.
 """
 
 from __future__ import annotations
 
-import math
 from collections import deque
 
 from pyspark.sql import DataFrame
 
 from ..session import overlap
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: str | list[str],
-    num_buckets: int,
-    path: str | None = None,
-    sort_cols: str | list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (optionally sorted) managed table.  Joins
-    between two tables bucketed identically on the join key skip the
-    exchange entirely (verify with .explain: no Exchange under SortMergeJoin)."""
-    cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    writer = df.write.mode("overwrite").format("parquet")
-    if path:
-        writer = writer.option("path", path)
-    writer = writer.bucketBy(num_buckets, *cols)
-    if sort_cols:
-        sc = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        writer = writer.sortBy(*sc)
-    writer.saveAsTable(table_name)
 
 
 CHECKPOINT_DIR_CONF = "incresql.checkpoint.dir"
@@ -148,30 +124,3 @@ def release(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: str | list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet sink (``path/col=value/...``).
-
-    The write-side half of partition pruning: a reader filtering on a
-    partition column touches only the matching directories — the scan's
-    ``PartitionFilters`` prune before any file is opened, so a one-day query
-    over a year of 100 TB events reads ~1/365th of the bytes.  Choose
-    partition columns with bounded cardinality (date, region — never a
-    high-cardinality key: millions of tiny directories kill the file
-    listing and the write amplification)."""
-    cols = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    df.write.mode(mode).partitionBy(*cols).parquet(path)
-
-
-def partitions_for_bytes(
-    total_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Partition count that lands ~128 MB per partition (the sweet spot for
-    parquet scans and shuffle spills alike)."""
-    return max(1, math.ceil(total_bytes / target_partition_bytes))

@@ -45,14 +45,3 @@ def salted_join(
     )
     out = salted_big.join(salted_small, keys + ["__salt"], how)
     return out.drop("__salt")
-
-
-def top_key_share(df: DataFrame, key: str, sample_fraction: float = 0.01) -> float:
-    """Estimate the hottest key's share of rows (sampled) — the signal for
-    choosing salted_join over a plain join."""
-    sampled = df.sample(sample_fraction, seed=42) if sample_fraction < 1.0 else df
-    counts = sampled.groupBy(key).count()
-    row = counts.agg(
-        (F.max("count").cast("double") / F.sum("count").cast("double")).alias("share")
-    ).collect()[0]
-    return float(row.share or 0.0)

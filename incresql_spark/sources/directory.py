@@ -7,9 +7,7 @@ quoting, no header; every line becomes ONE row with a single TEXT column
 Spark mapping: ``spark.read.csv`` with ``recursiveFileLookup`` (distributed,
 splittable, pushdown-capable scan) + ``to_json(array(...))`` to rebuild the
 single-column shape.  The TPC-H load path then peels fields back out with
-``->>`` + CAST (incresql_runner.rs:188-205) — Catalyst collapses the
-to_json/get_json_object round-trip per-field into a plain column read only
-when given the chance; for real pipelines prefer ``read_directory_columns``.
+``->>`` + CAST (incresql_runner.rs:188-205).
 
 Scale: a directory of CSVs is read as ordinary partitioned file splits —
 1000 executors each take byte ranges; nothing here is single-node.
@@ -39,18 +37,3 @@ def read_directory(
     return raw.select(
         F.to_json(F.array_compact(F.array(*[F.col(c) for c in raw.columns]))).alias("data")
     )
-
-
-def read_directory_columns(
-    spark: SparkSession, path: str, delimiter: str = ","
-) -> DataFrame:
-    """Columnar variant (c0, c1, ...) — the shape a Spark-first pipeline
-    actually wants; skips the JSON round-trip entirely."""
-    raw = (
-        spark.read.option("delimiter", delimiter)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("recursiveFileLookup", "true")
-        .csv(path)
-    )
-    return raw.select(*[F.col(c).alias(f"c{i}") for i, c in enumerate(raw.columns)])

@@ -1,14 +1,15 @@
-"""Streaming / continuous surface (reference SURVEY §2.5).
+"""Continuous surface (reference SURVEY §2.5).
 
 The reference built scaffolding for continuous queries (freq model,
 retractable aggregates, MVCC log sections) but never shipped the
-incremental planner.  Here the intent is realized two ways:
+incremental planner.  Here the intent is realized as delta consumption,
+not as Spark streaming state: a maintainer keeps materialized state and
+folds in each newly appended batch (the reference's "operators keep
+track of where they're up to", storage/src/storage.rs:26-65).
 
-- ``incremental.py`` — micro-batch Structured Streaming: ``readStream`` →
-  ``foreachBatch`` → FreqTable/MV merge (the Spark-native equivalent of the
-  reference's planned log-section consumption), plus watermarked windowed
-  aggregation in update mode.
-- ``sessionize.py`` — gap-based sessionization over the events stream, both
-  as a batch window-function query (oracle-checkable) and as a streaming
-  ``applyInPandasWithState`` custom stateful operator.
+- ``*_incremental.py`` — the sketch maintainers (HLL, Count-Min, Bloom,
+  bottom-k quantile) and the near-dup index maintainers (MinHash,
+  passages, embeddings), each with a batch twin in ``operators``.
+- ``sessionize.py`` — gap-based sessionization as a batch window-function
+  query (oracle-checkable).
 """

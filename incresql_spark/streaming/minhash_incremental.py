@@ -5,9 +5,8 @@ applied to the flagship pipeline operator.
 Batch ``dedup_minhash_lsh`` recomputes signatures for the WHOLE corpus on
 every run; at 100 TB that is the expensive path when only a sliver of new
 documents arrived.  This maintainer keeps the LSH band table and the
-shingle table as materialized multiset state (FreqTable segments, exactly
-how ``stream_curate_ingest`` keeps the content-hash history for exact
-dedup) and, per delta batch:
+shingle table as materialized multiset state (FreqTable segments) and,
+per delta batch:
 
 1. computes shingles + signatures + band keys for the DELTA only
    (``minhash_bands_long`` — the same code path as the batch operator, so

@@ -1,26 +1,16 @@
 """Gap-based sessionization over the events stream — a training-data /
 clickstream operator the reference lacks entirely.
 
-Batch form (``sessionize``): pure window functions — a session starts when
-the gap to the previous event of the same user exceeds the threshold; the
-session id is a running count of session starts.  One shuffle (partition by
-user), fully Catalyst-planned, oracle-checkable in DuckDB with identical
-SQL semantics.
+``sessionize`` is pure window functions: a session starts when the gap to
+the previous event of the same user exceeds the threshold; the session id
+is a running count of session starts.  One shuffle (partition by user),
+fully Catalyst-planned, oracle-checkable in DuckDB with identical SQL
+semantics.
 
-Streaming form (``sessionize_stream``): the same semantics as a custom
-stateful operator via ``applyInPandasWithState`` — per-user session state
-(start, last-seen, count, value sum) kept in the state store, sessions
-emitted when the gap timeout fires.  This is the pattern for operators
-Spark's built-ins can't express incrementally.
-
-Scale: both forms shard by user_id; state size is O(active users).
+Scale: shards by user_id.
 """
 
 from __future__ import annotations
-
-from typing import Any, Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -103,80 +93,6 @@ FROM sessions
 GROUP BY user_id, session_id
 ORDER BY user_id, session_id
 """
-
-
-_STATE_SCHEMA = (
-    "session_start BIGINT, last_event BIGINT, n_events BIGINT, sum_value DOUBLE, "
-    "last_ts_us BIGINT"
-)
-_OUTPUT_SCHEMA = (
-    "user_id BIGINT, first_event BIGINT, last_event BIGINT, n_events BIGINT, "
-    "sum_value DOUBLE"
-)
-
-
-def _session_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState UDF: emit a session when the gap exceeds the
-    threshold; keep the open session in the state store."""
-    # Microsecond gaps so batch and streaming share exact session-boundary
-    # semantics (whole-second truncation would classify sub-second gaps
-    # differently from the batch form's interval comparison).
-    gap_us = GAP_MINUTES * 60 * 1_000_000
-    (user_id,) = key
-    if state.exists:
-        start, last_ev, n, sval, last_us = state.get
-    else:
-        start = last_ev = None
-        n, sval, last_us = 0, 0.0, None
-    out = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("event_id")
-        for ev, ts_us, val in zip(
-            pdf["event_id"], pdf["ts_us"], pdf["value"]
-        ):
-            if last_us is not None and ts_us - last_us > gap_us:
-                out.append((user_id, start, last_ev, n, sval))
-                start, n, sval = None, 0, 0.0
-            if start is None:
-                start = int(ev)
-            last_ev, last_us = int(ev), int(ts_us)
-            n += 1
-            sval += float(val)
-    if state.hasTimedOut:
-        if start is not None:
-            out.append((user_id, start, last_ev, n, sval))
-        state.remove()
-    else:
-        state.update((start, last_ev, n, sval, last_us))
-        state.setTimeoutDuration(gap_us // 1000)
-    if out:
-        yield pd.DataFrame(
-            out, columns=["user_id", "first_event", "last_event", "n_events", "sum_value"]
-        )
-
-
-def sessionize_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming sessionization via applyInPandasWithState (expects columns
-    user_id, event_id, ts, value on a *streaming* DataFrame)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # unix_micros over cast-to-TIMESTAMP is NTZ-safe and microsecond-exact —
-    # identical gap semantics to the batch form's interval comparison.
-    prepared = events_stream.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "value",
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 QUERIES = {"events_sessionize": sessionize}

@@ -1,11 +1,20 @@
-"""Shared pytest helper: compare a Spark query against DuckDB oracle SQL the
+"""Shared pytest helpers: compare a Spark query against DuckDB oracle SQL the
 same way the driver's correctness gate does (row count + column names +
-order-insensitive value hash)."""
+order-insensitive value hash), and the ground-truth twins the tests measure
+the package's operators against."""
 
 from __future__ import annotations
 
 import datetime
+import hashlib
 import math
+
+from pyspark.sql import functions as F
+
+from incresql_spark.catalog import load_table
+from incresql_spark.functions.hashing import hash60_spark_sql
+from incresql_spark.operators.dedup import _DOT_SPARK, _NORM_SPARK, COSINE_THRESHOLD
+from incresql_spark.operators.relational import QSK_K
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -55,3 +64,50 @@ def assert_matches_oracle(spark, duck, query_fn, sql: str, sf_dir: str) -> None:
     assert len(a) == len(b), f"row count {len(a)} != {len(b)}"
     for i, (x, y) in enumerate(zip(a, b)):
         assert x == y, f"row {i}:\n  spark: {x}\n  duck : {y}"
+
+
+def py_hash60(s: str, seed: int | None = None) -> int:
+    """Python twin of ``functions.hashing.hash60_spark_sql``."""
+    if seed is not None:
+        s = f"{seed}|{s}"
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def quantile_sample(df, value: str, key_expr: str, k: int = QSK_K):
+    """The bottom-k sketch state of ``op_quantile_sketch``, built directly:
+    the k rows of ``df`` with the smallest 60-bit hash of ``key_expr``
+    (columns (v, h)).  States merge by taking the k smallest of a union."""
+    return (
+        df.select(
+            F.col(value).alias("v"),
+            F.expr(hash60_spark_sql(key_expr)).alias("h"),
+        )
+        .filter(F.col("v").isNotNull())
+        .orderBy("h", "v")
+        .limit(k)
+    )
+
+
+def dedup_embedding_bruteforce(spark, sf_dir: str):
+    """All-pairs exact cosine — the O(n²) ground truth the banded
+    ``dedup_embedding`` operator's recall is measured against."""
+    e = load_table(spark, sf_dir, "embeddings")
+    withnorm = e.select("vec_id", "embedding", F.expr(_NORM_SPARK).alias("norm"))
+    a = withnorm.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("ea"),
+        F.col("norm").alias("norm_a"),
+    )
+    b = withnorm.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("eb"),
+        F.col("norm").alias("norm_b"),
+    )
+    return (
+        a.crossJoin(b)
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .withColumn("cosine", F.expr(_DOT_SPARK) / (F.col("norm_a") * F.col("norm_b")))
+        .filter(F.col("cosine") >= COSINE_THRESHOLD)
+        .select("vec_a", "vec_b", "cosine")
+        .orderBy("vec_a", "vec_b")
+    )

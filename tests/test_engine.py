@@ -190,39 +190,28 @@ def test_statement_clears_job_group(spark, tmp_path):
     assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
-# Round-14 (VERDICT r13 task 6): embedded collect fence
-def test_embedded_collect_fence(engine, spark):
+def test_embedded_collect_fence(engine, monkeypatch):
     """The embedded (non-streamed) path collects under a LIMIT fence:
-    results past incresql.embedded.maxCollectRows raise
-    EmbeddedResultTooLarge instead of materializing on the driver;
-    stream=True and cap=0 both bypass; default cap leaves goldens
-    untouched."""
-    from incresql_spark.engine import (
-        EMBEDDED_MAX_COLLECT_CONF,
-        EmbeddedResultTooLarge,
-    )
+    results past EMBEDDED_MAX_COLLECT_ROWS raise EmbeddedResultTooLarge
+    instead of materializing on the driver; stream=True bypasses; results
+    at the cap are untouched."""
+    from incresql_spark import engine as engine_mod
+    from incresql_spark.engine import EmbeddedResultTooLarge
 
     engine.execute_statement("CREATE TABLE fence_t (a INT)")
     engine.execute_statement(
         "INSERT INTO fence_t VALUES " + ",".join(f"({i})" for i in range(10))
     )
-    spark.conf.set(EMBEDDED_MAX_COLLECT_CONF, "5")
-    try:
-        with pytest.raises(EmbeddedResultTooLarge):
-            engine.execute_statement("SELECT * FROM fence_t")
-        # streaming is the documented escape hatch — O(partition) driver
-        res = engine.execute_statement("SELECT * FROM fence_t", stream=True)
-        assert sorted(v for (v,) in res.iter_rows()) == list(range(10))
-        # 0 disables the fence for consumers that want full materialization
-        spark.conf.set(EMBEDDED_MAX_COLLECT_CONF, "0")
-        res = engine.execute_statement("SELECT * FROM fence_t")
-        assert sorted(v for (v,) in res.rows) == list(range(10))
-        # results at or under the cap are unaffected
-        spark.conf.set(EMBEDDED_MAX_COLLECT_CONF, "10")
-        res = engine.execute_statement("SELECT * FROM fence_t ORDER BY a")
-        assert [v for (v,) in res.rows] == list(range(10))
-    finally:
-        spark.conf.unset(EMBEDDED_MAX_COLLECT_CONF)
+    monkeypatch.setattr(engine_mod, "EMBEDDED_MAX_COLLECT_ROWS", 5)
+    with pytest.raises(EmbeddedResultTooLarge):
+        engine.execute_statement("SELECT * FROM fence_t")
+    # streaming is the documented escape hatch — O(partition) driver
+    res = engine.execute_statement("SELECT * FROM fence_t", stream=True)
+    assert sorted(v for (v,) in res.iter_rows()) == list(range(10))
+    # results at or under the cap are unaffected
+    monkeypatch.setattr(engine_mod, "EMBEDDED_MAX_COLLECT_ROWS", 10)
+    res = engine.execute_statement("SELECT * FROM fence_t ORDER BY a")
+    assert [v for (v,) in res.rows] == list(range(10))
 
 
 # ---- registration cache: only relations whose on-disk identity moved are

@@ -211,65 +211,6 @@ def test_compact_refreshes_dependent_join_mvs(engine):
     assert got == [("a", 3, 17), ("b", 1, 7)], got
 
 
-def test_stream_to_join_mv_chain(spark, tmp_path):
-    """File streams → two FreqTables → one aggregate-over-join MV: each
-    drained micro-batch becomes segments, and a single refresh propagates
-    the combined deltas O(delta) — the end-to-end continuous shape the
-    reference aimed at (storage/src/storage.rs:26-65), now over a JOIN."""
-    from pyspark.sql import types as T
-
-    from incresql_spark.materialize import AggregateJoinMaterializedView
-    from incresql_spark.streaming.incremental import stream_into_table
-
-    o_schema = T.StructType(
-        [T.StructField("ok", T.IntegerType()), T.StructField("cust", T.StringType())]
-    )
-    l_schema = T.StructType(
-        [T.StructField("lk", T.IntegerType()), T.StructField("qty", T.IntegerType())]
-    )
-    o_src, l_src = tmp_path / "o-in", tmp_path / "l-in"
-    o_src.mkdir(); l_src.mkdir()
-    o_tbl = FreqTable(spark, str(tmp_path / "o_tbl")); o_tbl.create(o_schema)
-    l_tbl = FreqTable(spark, str(tmp_path / "l_tbl")); l_tbl.create(l_schema)
-
-    spark.createDataFrame([(1, "a"), (2, "b")], o_schema).coalesce(1).write.parquet(
-        str(o_src / "b0.parquet")
-    )
-    spark.createDataFrame(
-        [(1, 10), (1, 5), (2, 7)], l_schema
-    ).coalesce(1).write.parquet(str(l_src / "b0.parquet"))
-
-    for src, schema, tbl, ck in (
-        (o_src, o_schema, o_tbl, "o-ck"),
-        (l_src, l_schema, l_tbl, "l-ck"),
-    ):
-        q = stream_into_table(
-            spark, str(src) + "/*", schema, tbl, str(tmp_path / ck)
-        )
-        q.awaitTermination(120)
-
-    mv = AggregateJoinMaterializedView(
-        spark, "smv", [o_tbl, l_tbl], ["ok = lk"],
-        "cust, count(*) AS n, sum(qty) AS total", None, "cust",
-        str(tmp_path / "smv"),
-    )
-    mv.refresh()
-    got = sorted(tuple(r) for r in mv.read().collect())
-    assert got == [("a", 2, 15), ("b", 1, 7)]
-
-    # second wave of files on ONE side only → drain → one more refresh
-    spark.createDataFrame([(2, 1), (1, 3)], l_schema).coalesce(1).write.parquet(
-        str(l_src / "b1.parquet")
-    )
-    q = stream_into_table(
-        spark, str(l_src) + "/*", l_schema, l_tbl, str(tmp_path / "l-ck")
-    )
-    q.awaitTermination(120)
-    mv.refresh()
-    got = sorted(tuple(r) for r in mv.read().collect())
-    assert got == [("a", 3, 18), ("b", 2, 8)]
-
-
 def test_join_mv_random_histories_match_recompute(spark, tmp_path):
     """Randomized differential check for the aggregate-over-join MV:
     seeded random histories of inserts and predicate deletes on BOTH base
@@ -979,60 +920,6 @@ def test_inner_join_keyword_in_mv_ddl(engine):
     engine.execute_statement("INSERT INTO ik2 VALUES (2, 9)")
     engine.execute_statement("REFRESH MATERIALIZED VIEW mv_ik")
     assert rows(engine, "SELECT * FROM mv_ik") == [("a", 1), ("b", 1)]
-
-
-def test_stream_to_left_outer_mv_chain(spark, tmp_path):
-    """Structured-Streaming micro-batches → FreqTables → LEFT OUTER
-    aggregate MV: the continuous shape composed with the pad-flip delta —
-    a second wave of right-side files retracts the pads its matches
-    flip."""
-    from pyspark.sql import types as T
-
-    from incresql_spark.materialize import AggregateJoinMaterializedView
-    from incresql_spark.streaming.incremental import stream_into_table
-
-    c_schema = T.StructType(
-        [T.StructField("ck", T.IntegerType()), T.StructField("nm", T.StringType())]
-    )
-    o_schema = T.StructType(
-        [T.StructField("ok", T.IntegerType()), T.StructField("amt", T.IntegerType())]
-    )
-    c_src, o_src = tmp_path / "c-in", tmp_path / "o-in"
-    c_src.mkdir(); o_src.mkdir()
-    c_tbl = FreqTable(spark, str(tmp_path / "c_tbl")); c_tbl.create(c_schema)
-    o_tbl = FreqTable(spark, str(tmp_path / "o_tbl")); o_tbl.create(o_schema)
-
-    spark.createDataFrame([(1, "a"), (2, "b")], c_schema).coalesce(1).write.parquet(
-        str(c_src / "b0.parquet")
-    )
-    spark.createDataFrame([(1, 10)], o_schema).coalesce(1).write.parquet(
-        str(o_src / "b0.parquet")
-    )
-    for src, schema, tbl, ck in (
-        (c_src, c_schema, c_tbl, "c-ck"),
-        (o_src, o_schema, o_tbl, "o-ck"),
-    ):
-        q = stream_into_table(spark, str(src) + "/*", schema, tbl, str(tmp_path / ck))
-        q.awaitTermination(120)
-
-    mv = AggregateJoinMaterializedView(
-        spark, "slomv", [c_tbl, o_tbl], ["ck = ok"],
-        "nm, count(amt) AS n_orders, count(*) AS n", None, "nm",
-        str(tmp_path / "slomv"), hows=["left_outer"],
-    )
-    mv.refresh()
-    got = sorted(tuple(r) for r in mv.read().collect())
-    assert got == [("a", 1, 1), ("b", 0, 1)]  # b NULL-padded
-
-    # second wave: b's first order arrives by stream → pad flips on refresh
-    spark.createDataFrame([(2, 7)], o_schema).coalesce(1).write.parquet(
-        str(o_src / "b1.parquet")
-    )
-    q = stream_into_table(spark, str(o_src) + "/*", o_schema, o_tbl, str(tmp_path / "o-ck"))
-    q.awaitTermination(120)
-    mv.refresh()
-    got = sorted(tuple(r) for r in mv.read().collect())
-    assert got == [("a", 1, 1), ("b", 1, 1)]
 
 
 def test_left_outer_mv_non_equi_condition(spark, tmp_path):

@@ -26,11 +26,9 @@ def test_pipeline_matches_oracle(spark, duck, name):
 
 def test_hash60_parity(spark, duck):
     """functions/hashing: Spark conv(md5) == DuckDB 0x-cast(md5), ±seeds."""
-    from incresql_spark.functions.hashing import (
-        hash60_spark_sql,
-        hash60_sql,
-        py_hash60,
-    )
+    from incresql_spark.functions.hashing import hash60_spark_sql, hash60_sql
+
+    from .oracle import py_hash60
 
     for seed in (None, 0, 7):
         s = spark.sql(f"SELECT {hash60_spark_sql(chr(39) + 'probe' + chr(39), seed)} AS h").collect()[0].h

@@ -1,4 +1,4 @@
-"""Scale-engineering utilities: salted joins, bucketing, function registry,
+"""Scale-engineering utilities: salted joins, function registry,
 and plan-shape assertions (the 100 TB design checks)."""
 
 from __future__ import annotations
@@ -29,67 +29,6 @@ def test_salted_join_matches_plain_join(spark):
     plain_lo = big.join(customer, "c_custkey", "left").count()
     salted_lo = skew.salted_join(big, customer, "c_custkey", salts=8, how="left").count()
     assert plain_lo == salted_lo
-
-
-def test_top_key_share(spark):
-    e = load_table(spark, SF_SMALL, "events")
-    share = skew.top_key_share(e, "event_type", sample_fraction=1.0)
-    assert 0.15 < share < 0.35  # 5 roughly-uniform event types
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key must join without a shuffle."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, SF_SMALL, "orders")
-        lineitem = load_table(spark, SF_SMALL, "lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        layout.write_bucketed(
-            orders, "b_orders", "o_orderkey", 8, path=str(tmp_path / "bo")
-        )
-        layout.write_bucketed(
-            lineitem, "b_lineitem", "l_orderkey", 8, path=str(tmp_path / "bl")
-        )
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:800]
-        assert joined.count() == lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_partitioned_sink_prunes_partitions(spark, tmp_path):
-    """A filter on the partition column must prune at the directory level
-    (PartitionFilters in the scan), not via row-level parquet filters."""
-    e = load_table(spark, SF_SMALL, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    out = str(tmp_path / "events_by_date")
-    layout.write_partitioned(e, out, "event_date")
-
-    back = spark.read.parquet(out)
-    one_day = back.filter(F.col("event_date") == F.lit("2024-01-05").cast("date"))
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # The date predicate must appear among the partition filters (pruned at
-    # listing time), and NOT as a pushed parquet row-group filter.
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "event_date" in pf, plan[:800]
-    assert one_day.count() == e.filter(
-        F.col("event_date") == F.lit("2024-01-05").cast("date")
-    ).count()
-
-
-def test_partition_sizing():
-    assert layout.partitions_for_bytes(1) == 1
-    assert layout.partitions_for_bytes(128 * 1024 * 1024) == 1
-    assert layout.partitions_for_bytes(100 * 1024**3) == 800
 
 
 def test_function_registry(spark):
@@ -266,10 +205,9 @@ def test_dedup_embedding_recall_vs_bruteforce(spark):
     """Banded candidate-gen recall against the all-pairs ground truth; the
     S-curve at threshold 0.30 on the synthetic corpus gives ~46%, assert a
     floor so parameter regressions show up."""
-    from incresql_spark.operators.dedup import (
-        dedup_embedding,
-        dedup_embedding_bruteforce,
-    )
+    from incresql_spark.operators.dedup import dedup_embedding
+
+    from .oracle import dedup_embedding_bruteforce
 
     got = {(r.vec_a, r.vec_b) for r in dedup_embedding(spark, SF_SMALL).collect()}
     truth = {

@@ -19,10 +19,10 @@ from incresql_spark.operators.relational import (
     _QSK_KEY_SPARK,
     load_table,
     op_quantile_sketch,
-    quantile_sample,
 )
 
 from .conftest import SF_SMALL
+from .oracle import py_hash60, quantile_sample
 
 
 def test_quantile_estimates_sit_near_their_target_ranks(spark):
@@ -294,7 +294,5 @@ def test_quantile_sample_hash_matches_key_definition(spark):
         F.expr(hash60_spark_sql(_QSK_KEY_SPARK)).alias("h"),
         F.expr(_QSK_KEY_SPARK).alias("k"),
     ).collect()
-    from incresql_spark.functions.hashing import py_hash60
-
     for r in got:
         assert r.h == py_hash60(r.k)

@@ -1,15 +1,11 @@
-"""Streaming surface: file-stream → FreqTable → incremental MV chain,
-watermarked window aggregation, stateful sessionization, and the batch
-sessionize oracle check."""
+"""The batch sessionize gate row against its DuckDB oracle, and the
+multimodal plumbing's determinism."""
 
 from __future__ import annotations
 
-import time
-
 import pytest
 
-from incresql_spark.frequency import FreqTable
-from incresql_spark.streaming import incremental, sessionize
+from incresql_spark.streaming import sessionize
 
 from .conftest import SF_SMALL
 from .oracle import assert_matches_oracle
@@ -19,138 +15,6 @@ def test_sessionize_matches_oracle(spark, duck):
     assert_matches_oracle(
         spark, duck, sessionize.sessionize, sessionize.SESSIONIZE_SQL, SF_SMALL
     )
-
-
-def test_stream_into_table_and_mv(spark, tmp_path):
-    """End-to-end: files appear → stream drains them into a FreqTable →
-    MV refresh consumes the new segments as deltas."""
-    from pyspark.sql import types as T
-
-    from incresql_spark.materialize import MaterializedView
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("v", T.IntegerType())]
-    )
-    table = FreqTable(spark, str(tmp_path / "tbl"))
-    table.create(schema)
-    mv = MaterializedView(
-        spark, "mv", table, "k, count(*) AS cnt, sum(v) AS sv", None, "k",
-        str(tmp_path / "mv"),
-    )
-
-    spark.createDataFrame([("a", 1), ("b", 2)], schema).write.parquet(
-        str(src / "batch1.parquet")
-    )
-    q = incremental.stream_into_table(
-        spark, str(src) + "/*", schema, table, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(60)
-    mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [("a", 1, 1), ("b", 1, 2)]
-
-    # second file lands; the stream (availableNow) is re-run to drain it
-    spark.createDataFrame([("a", 5)], schema).write.parquet(str(src / "batch2.parquet"))
-    q2 = incremental.stream_into_table(
-        spark, str(src) + "/*", schema, table, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(60)
-    mv.refresh()
-    assert sorted(tuple(r) for r in mv.read().collect()) == [("a", 2, 6), ("b", 1, 2)]
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Duplicate event_ids across micro-batch files must surface once; the
-    state store holds only keys inside the watermark horizon."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    src = tmp_path / "dedup-in"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        (1, t0),
-        (2, t0 + datetime.timedelta(minutes=1)),
-        (1, t0 + datetime.timedelta(minutes=2)),  # dup of 1
-        (3, t0 + datetime.timedelta(minutes=3)),
-        (2, t0 + datetime.timedelta(minutes=4)),  # dup of 2
-    ]
-    spark.createDataFrame(rows, schema).repartition(1).write.parquet(
-        str(src / "b1.parquet")
-    )
-    stream = spark.readStream.schema(schema).format("parquet").load(str(src) + "/*")
-    q = (
-        incremental.stream_dedup(stream, ["event_id"])
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = sorted(r.event_id for r in spark.sql("SELECT * FROM dedup_out").collect())
-    assert got == [1, 2, 3]
-
-
-def test_windowed_counts_batch_semantics(spark):
-    """The windowed-agg plan works on batch input (same declarative plan
-    streams with a state store)."""
-    from incresql_spark.catalog import load_table
-
-    events = load_table(spark, SF_SMALL, "events")
-    out = incremental.windowed_counts(events).collect()
-    assert len(out) > 10
-    total = sum(r.n_events for r in out)
-    assert total == events.count()
-
-
-def test_sessionize_stream_stateful(spark, tmp_path):
-    """applyInPandasWithState emits closed sessions; compare against the
-    batch sessionizer on the same slice of events."""
-    from incresql_spark.catalog import load_table
-    from pyspark.sql import functions as F
-
-    events = load_table(spark, SF_SMALL, "events").filter(F.col("user_id") <= 3)
-    src = tmp_path / "stream_src"
-    events.select("user_id", "event_id", "ts", "value").write.parquet(str(src / "all.parquet"))
-
-    stream = (
-        spark.readStream.schema("user_id bigint, event_id bigint, ts timestamp, value double")
-        .parquet(str(src) + "/*")
-    )
-    sessions = sessionize.sessionize_stream(stream)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.first_event): (r.last_event, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    batch = {
-        (r.user_id, r.first_event): (r.last_event, r.n_events)
-        for r in sessionize.sessionize(spark, SF_SMALL).collect()
-        if r.user_id <= 3
-    }
-    # The stream emits only CLOSED sessions (the final open session per user
-    # stays in state until timeout) — every emitted session must match the
-    # batch result exactly.
-    assert got, "stream should emit at least one closed session"
-    for key, val in got.items():
-        assert batch.get(key) == val, (key, val, batch.get(key))
 
 
 def test_multimodal_plumbing(spark):
@@ -167,393 +31,3 @@ def test_multimodal_plumbing(spark):
     # real decode path is an explicit stub
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"xx", "png")
-
-
-def test_stream_interval_join(spark, tmp_path):
-    """Stream-stream interval join in append mode must emit exactly the
-    batch join's pairs (inner join, bounded state via watermark + range)."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("view_id", T.LongType()),
-        ]
-    )
-    cschema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("click_id", T.LongType()),
-        ]
-    )
-    t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-    m = datetime.timedelta(minutes=1)
-    views = [
-        (1, t0, 100),
-        (1, t0 + 8 * m, 101),       # within 10 min of click at t0+9
-        (2, t0, 200),               # 15 min before user 2's click: too old
-        (3, t0 + 2 * m, 300),
-    ]
-    clicks = [
-        (1, t0 + 9 * m, 900),       # matches views 100 and 101
-        (2, t0 + 15 * m, 901),      # no view within 10 min
-        (3, t0 + 1 * m, 902),       # view 300 is AFTER the click: no match
-    ]
-    vdir, cdir = tmp_path / "views", tmp_path / "clicks"
-    vdir.mkdir(); cdir.mkdir()
-    spark.createDataFrame(views, schema).repartition(1).write.parquet(
-        str(vdir / "b1.parquet")
-    )
-    spark.createDataFrame(clicks, cschema).repartition(1).write.parquet(
-        str(cdir / "b1.parquet")
-    )
-
-    vs = spark.readStream.schema(schema).format("parquet").load(str(vdir) + "/*")
-    cs = spark.readStream.schema(cschema).format("parquet").load(str(cdir) + "/*")
-    q = (
-        incremental.stream_interval_join(vs, cs)
-        .writeStream.format("memory")
-        .queryName("ij_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.click_id, r.view_id)
-        for r in spark.sql("SELECT * FROM ij_out").collect()
-    )
-    assert got == [(900, 100), (900, 101)]
-
-    # Same declarative plan on batch inputs gives the same pairs.
-    batch = incremental.stream_interval_join(
-        spark.createDataFrame(views, schema), spark.createDataFrame(clicks, cschema)
-    )
-    assert sorted((r.click_id, r.view_id) for r in batch.collect()) == got
-
-
-def test_stream_curate_ingest_dedupes_against_history(spark, tmp_path):
-    """Batch 2's duplicate of a batch-1 doc must not be re-ingested; short
-    docs must be quality-filtered; in-batch dup keeps the min doc_id."""
-    src = tmp_path / "docs-in"
-    src.mkdir()
-    schema_ddl = "doc_id long, text string, lang string, source string, n_chars long"
-    long_text = " ".join(f"tok{i}" for i in range(30))
-    other_text = " ".join(f"w{i}" for i in range(30))
-
-    table = FreqTable(spark, str(tmp_path / "curated"))
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema_ddl).repartition(1).write.parquet(
-            str(src / name)
-        )
-
-    write_batch(
-        "b1.parquet",
-        [
-            (1, long_text, "en", "s", len(long_text)),
-            (2, long_text, "en", "s", len(long_text)),   # in-batch dup of 1
-            (3, "too short", "en", "s", 9),               # quality-filtered
-        ],
-    )
-    q = incremental.stream_curate_ingest(
-        spark, str(src) + "/*", spark.createDataFrame([], schema_ddl).schema,
-        table, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    assert sorted(r.doc_id for r in table.scan().collect()) == [1]
-
-    write_batch(
-        "b2.parquet",
-        [
-            (4, long_text, "en", "s", len(long_text)),    # dup vs history
-            (5, other_text, "en", "s", len(other_text)),  # genuinely new
-        ],
-    )
-    q2 = incremental.stream_curate_ingest(
-        spark, str(src) + "/*", spark.createDataFrame([], schema_ddl).schema,
-        table, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(120)
-    assert sorted(r.doc_id for r in table.scan().collect()) == [1, 5]
-
-
-def test_sessionize_stream_multibatch_equivalence(spark, tmp_path):
-    """VERDICT r4 task 7: batch↔streaming sessionize equivalence across
-    MICRO-BATCH boundaries.  Events are split into three consecutive
-    time slices delivered one file per trigger, so open sessions must be
-    carried through the state store between micro-batches; the emitted
-    closed sessions must equal the batch operator's sessions minus each
-    user's final (still-open) session."""
-    from incresql_spark.catalog import load_table
-    from pyspark.sql import functions as F
-
-    events = load_table(spark, SF_SMALL, "events").filter(F.col("user_id") <= 5)
-    src = tmp_path / "mb_src"
-    slices = [
-        events.filter(F.col("ts") <= F.lit("2024-01-10")),
-        events.filter(
-            (F.col("ts") > F.lit("2024-01-10")) & (F.col("ts") <= F.lit("2024-01-20"))
-        ),
-        events.filter(F.col("ts") > F.lit("2024-01-20")),
-    ]
-    for i, sl in enumerate(slices):
-        sl.select("user_id", "event_id", "ts", "value").coalesce(1).write.parquet(
-            str(src / f"slice-{i}")
-        )
-        time.sleep(1.1)  # strictly increasing mtimes → deterministic file order
-
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, event_id bigint, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    # Fewer state-store partitions → fewer Python-worker launches per
-    # micro-batch (the partition count is captured at checkpoint creation).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            sessionize.sessionize_stream(stream)
-            .writeStream.format("memory")
-            .queryName("sessions_mb")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt_mb"))
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    assert len(q.recentProgress) >= 3, "expected one micro-batch per file"
-
-    got = {
-        (r.user_id, r.first_event): (r.last_event, r.n_events)
-        for r in spark.sql("SELECT * FROM sessions_mb").collect()
-    }
-    batch_rows = [
-        r for r in sessionize.sessionize(spark, SF_SMALL).collect() if r.user_id <= 5
-    ]
-    last_open = {}
-    for r in batch_rows:
-        if r.user_id not in last_open or r.first_event > last_open[r.user_id]:
-            last_open[r.user_id] = r.first_event
-    expected = {
-        (r.user_id, r.first_event): (r.last_event, r.n_events)
-        for r in batch_rows
-        if last_open[r.user_id] != r.first_event
-    }
-    # Exact set equality: every closed session, none missing, none invented,
-    # including the sessions whose events straddled a micro-batch boundary.
-    assert got == expected
-    assert any(
-        u in last_open for (u, _fe) in got
-    ), "fixture should produce multiple sessions per user"
-
-
-def test_stream_neardup_ingest_drops_history_neardups(spark, tmp_path):
-    """Near-dup (not just exact) ingestion dedup: the kept corpus after a
-    3-micro-batch stream must equal replaying the keep-first policy over
-    the batch operator's pair list — including a batch-2 doc dropped for
-    near-duplicating (not equalling) a batch-1 doc, and chains collapsing
-    to their first member because dropped docs stay in signature state."""
-    from incresql_spark.catalog import load_table
-    from incresql_spark.operators.dedup import dedup_minhash_lsh
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    schema = docs.schema
-    src = tmp_path / "nd-in"
-    src.mkdir()
-    table = FreqTable(spark, str(tmp_path / "nd-corpus"))
-
-    slices = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    batch_of = {}
-    for i, sl in enumerate(slices):
-        sl.repartition(1).write.parquet(str(src / f"b{i}.parquet"))
-        for r in sl.select("doc_id").collect():
-            batch_of[r.doc_id] = i
-        time.sleep(1.1)
-
-    q = incremental.stream_neardup_ingest(
-        spark,
-        str(src) + "/*",
-        schema,
-        table,
-        str(tmp_path / "nd-state"),
-        str(tmp_path / "nd-ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(600)
-    assert len(q.recentProgress) >= 3, "expected one micro-batch per file"
-    got = sorted(r.doc_id for r in table.scan().collect())
-
-    # Replay the policy from the BATCH operator's pairs (the incremental
-    # pair stream is byte-identical to it — test_minhash_incremental):
-    # scan docs in (batch, doc_id) order; drop a doc iff it pairs with any
-    # doc seen before it (kept OR dropped).
-    pairs = [(r.doc_a, r.doc_b) for r in dedup_minhash_lsh(spark, SF_SMALL).collect()]
-    partners = {}
-    for a, b in pairs:
-        partners.setdefault(a, set()).add(b)
-        partners.setdefault(b, set()).add(a)
-    seen, expected = set(), []
-    for doc_id in sorted(batch_of, key=lambda d: (batch_of[d], d)):
-        if partners.get(doc_id, set()) & seen:
-            pass  # near-dups something already seen: dropped
-        else:
-            expected.append(doc_id)
-        seen.add(doc_id)
-
-    assert got == sorted(expected)
-    # the fixture must actually exercise a cross-batch drop
-    dropped = set(batch_of) - set(expected)
-    assert any(
-        batch_of[d] > min(batch_of[p] for p in partners[d]) for d in dropped
-    ), "fixture should drop at least one doc for a PRIOR-batch near-dup"
-
-
-def test_neardup_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering an already-applied
-    batch_id must be a no-op (no duplicate corpus rows, no duplicate
-    signature state), while the NEXT batch_id still applies."""
-    from incresql_spark.catalog import load_table
-    from incresql_spark.streaming.incremental import _apply_neardup_batch
-    from incresql_spark.streaming.minhash_incremental import IncrementalMinHashDedup
-
-    docs = load_table(spark, SF_SMALL, "documents").limit(50).localCheckpoint()
-    table = FreqTable(spark, str(tmp_path / "corpus"))
-    state = str(tmp_path / "state")
-    dedup = IncrementalMinHashDedup(spark, state)
-
-    _apply_neardup_batch(table, dedup, state, docs, 0)
-    rows = table.scan().count()
-    bands = dedup.bands.scan(expand=False).count()
-
-    # replay of batch 0: everything unchanged
-    _apply_neardup_batch(table, dedup, state, docs, 0)
-    assert table.scan().count() == rows
-    assert dedup.bands.scan(expand=False).count() == bands
-
-    # the next batch still applies
-    more = load_table(spark, SF_SMALL, "documents").filter(
-        "doc_id > 1000000"
-    )  # empty delta is fine — only the marker must advance
-    _apply_neardup_batch(table, dedup, state, more, 1)
-    import json as _json
-
-    with open(f"{state}/_applied_batch.json") as fh:
-        assert _json.load(fh)["batch_id"] == 1
-
-
-def test_neardup_marker_torn_write_and_run_id(spark, tmp_path):
-    """Marker robustness: (a) a truncated marker must not brick ingestion —
-    it is treated as absent and the doc_id anti-join keeps the corpus
-    exact on the resulting replay; (b) a marker from an OLD checkpoint run
-    (different run_id) must not suppress the new run's restarted batch
-    numbering; (c) a same-run replay stays a no-op."""
-    from incresql_spark.catalog import load_table
-    from incresql_spark.streaming.incremental import _apply_neardup_batch
-    from incresql_spark.streaming.minhash_incremental import IncrementalMinHashDedup
-
-    all_docs = load_table(spark, SF_SMALL, "documents")
-    docs = all_docs.limit(40).localCheckpoint()
-    table = FreqTable(spark, str(tmp_path / "corpus"))
-    state = str(tmp_path / "state")
-    dedup = IncrementalMinHashDedup(spark, state)
-    marker = f"{state}/_applied_batch.json"
-
-    _apply_neardup_batch(table, dedup, state, docs, 0, run_id="run1")
-    rows = table.scan().count()
-    assert rows > 0
-
-    # same-run replay: suppressed by the marker
-    _apply_neardup_batch(table, dedup, state, docs, 0, run_id="run1")
-    assert table.scan().count() == rows
-
-    # torn marker (crash mid-write of a legacy non-atomic writer): the
-    # replay must RUN (no json.load crash) and must not duplicate corpus
-    # rows — the doc_id anti-join absorbs it.
-    with open(marker, "w") as fh:
-        fh.write('{"batch_id":')
-    _apply_neardup_batch(table, dedup, state, docs, 0, run_id="run1")
-    assert table.scan().count() == rows
-    import json as _json
-
-    with open(marker) as fh:  # marker healed, atomically rewritten
-        m = _json.load(fh)
-    assert m == {"run_id": "run1", "batch_id": 0}
-
-    # new checkpoint run: batch ids restart at 0; the old run's high-water
-    # mark must not swallow the new run's first batch.
-    fresh = (
-        all_docs.orderBy("doc_id", ascending=False).limit(10).localCheckpoint()
-    )
-    _apply_neardup_batch(table, dedup, state, fresh, 0, run_id="run2")
-    assert table.scan().count() > rows
-    with open(marker) as fh:
-        assert _json.load(fh)["run_id"] == "run2"
-
-
-def test_stream_embedding_ingest_drops_semantic_neardups(spark, tmp_path):
-    """Vector-ingestion twin of the near-dup stream: the kept embedding
-    corpus after a 3-micro-batch stream must equal replaying the
-    keep-first policy over the batch operator's verified-cosine pair list
-    (the incremental pair stream is byte-identical to batch —
-    test_embedding_incremental), including cross-batch semantic dups."""
-    from incresql_spark.catalog import load_table
-    from incresql_spark.operators.dedup import _embed_band_bits, dedup_embedding
-    from pyspark.sql import functions as F
-
-    vecs = load_table(spark, SF_SMALL, "embeddings")
-    band_bits = _embed_band_bits(vecs.count())
-    schema = vecs.schema
-    src = tmp_path / "ev-in"
-    src.mkdir()
-    table = FreqTable(spark, str(tmp_path / "ev-corpus"))
-
-    slices = [vecs.filter(F.col("vec_id") % 3 == i) for i in range(3)]
-    batch_of = {}
-    for i, sl in enumerate(slices):
-        sl.repartition(1).write.parquet(str(src / f"b{i}.parquet"))
-        for r in sl.select("vec_id").collect():
-            batch_of[r.vec_id] = i
-        time.sleep(1.1)
-
-    q = incremental.stream_embedding_ingest(
-        spark,
-        str(src) + "/*",
-        schema,
-        table,
-        str(tmp_path / "ev-state"),
-        str(tmp_path / "ev-ckpt"),
-        band_bits=band_bits,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(600)
-    assert len(q.recentProgress) >= 3, "expected one micro-batch per file"
-    got = sorted(r.vec_id for r in table.scan().collect())
-
-    pairs = [(r.vec_a, r.vec_b) for r in dedup_embedding(spark, SF_SMALL).collect()]
-    partners = {}
-    for a, b in pairs:
-        partners.setdefault(a, set()).add(b)
-        partners.setdefault(b, set()).add(a)
-    seen, expected = set(), []
-    for vid in sorted(batch_of, key=lambda v: (batch_of[v], v)):
-        if not (partners.get(vid, set()) & seen):
-            expected.append(vid)
-        seen.add(vid)
-
-    assert got == sorted(expected)
-    # the fixture must exercise a cross-batch semantic drop
-    dropped = set(batch_of) - set(expected)
-    assert any(
-        batch_of[v] > min(batch_of[p] for p in partners[v]) for v in dropped
-    ), "fixture should drop at least one vector for a PRIOR-batch near-dup"
