@@ -91,21 +91,50 @@ class QueryKilled(RuntimeError):
     (runtime/src/lib.rs:90-131)."""
 
 
-#: Embedded-path driver-OOM guard.  The wire server always streams; the
-#: EMBEDDED execute_statement() default stays collected (goldens and
-#: catalog consumers read .rows), but the collect runs under a LIMIT
-#: fence: results larger than this row count raise EmbeddedResultTooLarge
+#: Row caps of the one bounded collect (``_fenced_collect``) that serves a
+#: SELECT.  The embedded execute_statement() default returns ``.rows``,
+#: so past EMBEDDED_MAX_COLLECT_ROWS it raises EmbeddedResultTooLarge
 #: instead of materializing on the driver; such a caller streams
-#: (stream=True).  The fence costs nothing extra: it is the same
-#: single execution with a CollectLimit on top, and the overflow is
-#: detected without collecting past the cap.
+#: (stream=True).  A streamed SELECT is collected under the smaller
+#: WIRE_COLLECT_ROWS fence and streamed only past it.
+#:
+#: The fences count rows, not bytes: 20,000 rows of ~200 B hold ~4 MB
+#: on the driver, of 2 KB (a 64-float embedding, a 2,000-char string)
+#: ~40 MB.  Past the wire fence the collect is wasted — the stream runs
+#: the query again — so the fence is sized where that waste matches the
+#: saving below it (measured over the wire at 4 cores: a 1,000-row
+#: SELECT saves 130-150 ms; a 25,000-row one loses 110-230 ms; with the
+#: fence at 100,000 rows, a 120,000-150,000-row one lost 260-660 ms).
+#: The widest wire benchmark read, ~12,000 rows, fits under it.
 EMBEDDED_MAX_COLLECT_ROWS = 1_000_000
+WIRE_COLLECT_ROWS = 20_000
+
+
+def _fenced_collect(df: DataFrame, cap: int) -> list[tuple] | None:
+    """``df``'s rows from one collect under a LIMIT fence of ``cap`` rows,
+    or None when the result has more.  The fence is the same execution
+    with a limit on top, and an ORDER BY under it plans as a single
+    TakeOrderedAndProject job.  Collected as planned, that top-K would
+    send the driver up to ``cap + 1`` rows from EVERY input partition;
+    coalesced to one partition it merges on an executor, in the same
+    job, so the driver receives at most ``cap + 1`` rows in all."""
+    fenced = df.limit(cap + 1)
+    plan = fenced._jdf.queryExecution().sparkPlan()
+    if plan.nodeName() == "TakeOrderedAndProject":
+        fenced = fenced.coalesce(1)
+    rows = fenced.collect()
+    if len(rows) > cap:
+        return None
+    for i, r in enumerate(rows):  # in place: never a second full list
+        rows[i] = tuple(r)
+    return rows
 
 
 class EmbeddedResultTooLarge(RuntimeError):
     """A non-streamed SELECT exceeded EMBEDDED_MAX_COLLECT_ROWS.  Re-run
-    with execute_statement(..., stream=True) (O(partition) driver
-    memory)."""
+    with execute_statement(..., stream=True): that result is collected
+    under a fence of WIRE_COLLECT_ROWS rows and streamed past it, one
+    partition at a time."""
 
 
 @dataclass
@@ -113,11 +142,14 @@ class EngineResult:
     """(fields, rows) in the reference's result shape, plus the DataFrame.
 
     ``streaming=True`` results carry NO materialized ``rows``: consumers
-    iterate :meth:`iter_rows`, which pulls partitions from the cluster one
-    at a time — driver memory stays O(partition), not O(result), matching
-    the reference's incremental (tuple, freq) wire writes
-    (server/src/mysql/mod.rs:103-111).  Embedded/golden consumers keep the
-    default collected mode (their results are aggregates or LIMITed)."""
+    iterate :meth:`iter_rows`, which runs the query only then.  A result
+    of at most WIRE_COLLECT_ROWS rows is collected under that fence in
+    one Spark action; a larger one is streamed past it, one partition at
+    a time, so driver memory stays O(min(result, fence)) plus one
+    partition, never O(result) — the reference likewise writes
+    (tuple, freq) rows incrementally (server/src/mysql/mod.rs:103-111).
+    Embedded/golden consumers keep the default collected mode (their
+    results are aggregates or LIMITed)."""
 
     columns: list[str] = field(default_factory=list)
     rows: list[tuple] = field(default_factory=list)
@@ -126,25 +158,30 @@ class EngineResult:
     #: (group_id, description) — a streamed SELECT's Spark jobs run
     #: LAZILY during iteration, after execute_statement already cleared
     #: the session's job group; iter_rows re-arms it so KILL <session>
-    #: cancelJobGroup aborts an in-flight partition job.
+    #: cancelJobGroup aborts the fenced collect or an in-flight partition
+    #: job.
     job_group: tuple[str, str] | None = None
     #: Per-statement kill flag, set by ``Engine.cancel``.  cancelJobGroup
     #: alone is NOT enough for a streamed SELECT (round-13 review): the
-    #: stream spends most of its wall time between partition jobs —
-    #: blocked on the client socket — where a one-shot group cancel has
-    #: nothing to abort and is silently lost.  iter_rows checks this flag
-    #: every row AND before each blocking iterator fetch, so a KILL lands
-    #: at the next row boundary regardless of whether a Spark job happens
-    #: to be in flight — worst case one partition-fetch job when the KILL
-    #: arrives while next() is already blocked (round-13 advice).
+    #: stream spends most of its wall time between Spark jobs — blocked
+    #: on the client socket — where a one-shot group cancel has nothing
+    #: to abort and is silently lost.  iter_rows checks this flag before
+    #: the fenced collect, every row AND before each blocking iterator
+    #: fetch, so a KILL lands at the next row boundary regardless of
+    #: whether a Spark job happens to be in flight — worst case one
+    #: partition-fetch job when the KILL arrives while next() is already
+    #: blocked (round-13 advice).
     kill_event: "threading.Event | None" = None
     #: callback run when iteration finishes (deregisters the kill flag)
     on_finish: "Callable[[], None] | None" = None
 
     def iter_rows(self):
-        """Rows one at a time: from ``toLocalIterator()`` when streaming
-        (each Spark partition is fetched only when iteration reaches it),
-        else from the materialized list.  Raises :class:`QueryKilled` at
+        """Rows one at a time.  When streaming: from one collect under a
+        fence of WIRE_COLLECT_ROWS rows, or, for a result past it, from
+        ``toLocalIterator()`` (which re-executes the query and fetches
+        each partition only when iteration reaches it); else from the
+        materialized list.  Both ways yield the rows in the order the
+        embedded collect returns them.  Raises :class:`QueryKilled` at
         the next row boundary after ``Engine.cancel`` targets the owning
         session."""
         if not (self.streaming and self.df is not None):
@@ -155,7 +192,9 @@ class EngineResult:
             sc.setJobGroup(self.job_group[0], self.job_group[1],
                            interruptOnCancel=True)
         try:
-            it = iter(self.df.toLocalIterator())
+            self._check_killed()
+            rows = _fenced_collect(self.df, WIRE_COLLECT_ROWS)
+            it = iter(rows if rows is not None else self.df.toLocalIterator())
             while True:
                 # checked BEFORE blocking on the iterator as well as after:
                 # a KILL that lands between partition jobs (no job in
@@ -164,10 +203,7 @@ class EngineResult:
                 # partition-fetch job before the flag is seen.  A KILL
                 # arriving WHILE next() is already blocked still pays that
                 # one in-flight fetch (worst case: one partition job).
-                if self.kill_event is not None and self.kill_event.is_set():
-                    raise QueryKilled(
-                        "query killed while streaming its resultset"
-                    )
+                self._check_killed()
                 try:
                     r = next(it)
                 except StopIteration:
@@ -180,6 +216,10 @@ class EngineResult:
                 for key in ("spark.jobGroup.id", "spark.job.description",
                             "spark.job.interruptOnCancel"):
                     sc.setLocalProperty(key, None)
+
+    def _check_killed(self) -> None:
+        if self.kill_event is not None and self.kill_event.is_set():
+            raise QueryKilled("query killed while streaming its resultset")
 
     def pipes(self) -> list[str]:
         """Reference golden format: one ``|v1|v2|`` line per row
@@ -733,10 +773,11 @@ class Engine:
         stream: bool = False,
     ) -> EngineResult:
         """``stream=True`` defers SELECT materialization: the result's
-        ``iter_rows()`` pulls from the cluster partition-by-partition
-        instead of collecting the full result on the driver — the wire
-        server uses this so a ``SELECT *`` over a big table cannot OOM
-        the driver (round-12 verdict task 2).  Statement kinds other than
+        ``iter_rows()`` runs the query, collected under a fence of
+        WIRE_COLLECT_ROWS rows and streamed past it one partition at a
+        time, instead of collecting the full result on the driver — the
+        wire server uses this so a ``SELECT *`` over a big table cannot
+        OOM the driver (round-12 verdict task 2).  Statement kinds other than
         the SELECT/VALUES passthrough always materialize (their results
         are tiny catalogs/acks)."""
         s = sql.strip().rstrip(";").strip()
@@ -1094,18 +1135,19 @@ class Engine:
             )
 
         # SELECT / VALUES passthrough.  The wire server asks for
-        # stream=True: rows then leave the cluster partition-by-partition
-        # through iter_rows() — driver memory O(partition), matching the
+        # stream=True: iter_rows() then runs the query outside the server
+        # lock, collected under a fence of WIRE_COLLECT_ROWS rows and
+        # streamed past it, one partition at a time — matching the
         # reference's incremental row writes (server/src/mysql/mod.rs:
-        # 103-111) — instead of this full collect, which at 100 TB is a
-        # guaranteed driver OOM for a plain SELECT * (measured: 90 GB RSS
-        # at sf10, SCALING.md).
+        # 103-111).  An unfenced full collect is, at 100 TB, a guaranteed
+        # driver OOM for a plain SELECT * (measured: 90 GB RSS at sf10,
+        # SCALING.md).
         df = self._run_select(s)
         if stream:
             return EngineResult(list(df.columns), [], df, streaming=True)
         max_rows = EMBEDDED_MAX_COLLECT_ROWS
-        rows = [tuple(r) for r in df.limit(max_rows + 1).collect()]
-        if len(rows) > max_rows:
+        rows = _fenced_collect(df, max_rows)
+        if rows is None:
             raise EmbeddedResultTooLarge(
                 f"embedded SELECT returned more than {max_rows} rows; use "
                 "execute_statement(..., stream=True)"

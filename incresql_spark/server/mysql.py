@@ -251,8 +251,9 @@ class MySqlServer:
             return EngineResult()
         with self._lock:
             # stream=True: SELECT results are NOT collected here — the
-            # row loop in _query pulls them partition-by-partition AFTER
-            # this lock is released (a slow client must not block other
+            # row loop in _query runs the query AFTER this lock is
+            # released, collected under a fence of WIRE_COLLECT_ROWS rows
+            # and streamed past it (a slow client must not block other
             # connections' statements; the reference likewise streams
             # per-connection, server/src/mysql/mod.rs:103-111).  The plan
             # is resolved under the lock, so concurrent DDL after release
@@ -318,11 +319,13 @@ class MySqlServer:
         if not res.columns:
             write_packet(sock, 1, ok_packet(caps, affected=len(res.rows)))
             return
-        # iter_rows streams partition-by-partition for SELECTs (driver
-        # memory O(partition), not O(result)).  The FIRST row is pulled
+        # iter_rows serves a SELECT from one collect under a fence of
+        # WIRE_COLLECT_ROWS rows and streams only a result past it, one
+        # partition at a time (driver memory O(min(result, fence)) plus
+        # a partition, not O(result)).  The FIRST row is pulled
         # BEFORE the resultset header goes out: execution errors that
         # surface up front (unknown column at bind time, a KILL landing
-        # during the first job — the common cases) become a clean
+        # during the fenced collect — the common cases) become a clean
         # top-level ERR packet every client understands.  An error after
         # rows have flowed becomes an in-resultset ERR packet, which the
         # protocol permits, so the connection stays framed either way.

@@ -25,6 +25,30 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _local_heap() -> str:
+    """The local-mode driver heap: 48g, or half the memory this process
+    may use when that is less — the machine's physical memory, or its
+    cgroup's limit when one is set (v2 ``memory.max``, v1
+    ``memory.limit_in_bytes``).
+
+    48g because local[32] runs driver + all 32 executor threads in one
+    JVM, and a 24g heap put the bench into sustained full-GC stretches
+    (measured: individual TPC-H queries spiking 4-6x, a different victim
+    each run; 48g removes every spike and cuts the sf0.1 TPC-H total
+    ~2x).  The cap because G1 grows a heap the machine cannot back until
+    the kernel kills the JVM instead of collecting (seen on a 15 GB box:
+    java killed at 15 GB anon RSS in a full test run)."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):  # no such file, or "max"
+            pass
+    return f"{min(48 * 1024, limit // 2**21)}m"
+
+
 def get_spark(app_name: str = "incresql_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -55,17 +79,13 @@ def get_spark(app_name: str = "incresql_spark", cpus: int | None = None) -> Spar
     if SparkSession.getActiveSession() is None:
         # Only force a master when nothing is running — when the driver hands
         # us a session (cluster mode) we must not override it.
-        # 48g heap: local[32] runs driver + all 32 executor threads in one
-        # JVM, and a 24g heap put the bench into sustained full-GC stretches
-        # (measured: individual TPC-H queries spiking 4-6x, a different
-        # victim each run; 48g removes every spike and cuts the sf0.1 TPC-H
-        # total ~2x).  On a real cluster this setting is ignored — executor
-        # memory is sized per-node by the deployer.
+        # On a real cluster the driver heap is ignored — executor memory is
+        # sized per-node by the deployer.
         builder = (
             builder.master(f"local[{cpus}]")
             .config(
                 "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _local_heap(),
             )
             .config(
                 "spark.driver.extraJavaOptions",

@@ -17,8 +17,8 @@ from .test_refresh_pipeline import _persisted
 
 #: Driver heap of the sweep's own session.  The sweep runs in a child
 #: process so its garbage never grows the shared test session's heap,
-#: whose default ceiling (48 GB, session.get_spark) can exceed the test
-#: host's memory.
+#: whose default ceiling is at most half the host's memory
+#: (session.get_spark).
 SWEEP_DRIVER_MEM = "4g"
 
 

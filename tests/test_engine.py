@@ -193,8 +193,9 @@ def test_statement_clears_job_group(spark, tmp_path):
 def test_embedded_collect_fence(engine, monkeypatch):
     """The embedded (non-streamed) path collects under a LIMIT fence:
     results past EMBEDDED_MAX_COLLECT_ROWS raise EmbeddedResultTooLarge
-    instead of materializing on the driver; stream=True bypasses; results
-    at the cap are untouched."""
+    instead of materializing on the driver; stream=True bypasses it
+    (collected under the WIRE_COLLECT_ROWS fence, streamed past it);
+    results at the cap are untouched."""
     from incresql_spark import engine as engine_mod
     from incresql_spark.engine import EmbeddedResultTooLarge
 
@@ -205,13 +206,53 @@ def test_embedded_collect_fence(engine, monkeypatch):
     monkeypatch.setattr(engine_mod, "EMBEDDED_MAX_COLLECT_ROWS", 5)
     with pytest.raises(EmbeddedResultTooLarge):
         engine.execute_statement("SELECT * FROM fence_t")
-    # streaming is the documented escape hatch — O(partition) driver
+    # streaming is the documented escape hatch — bounded driver memory
     res = engine.execute_statement("SELECT * FROM fence_t", stream=True)
     assert sorted(v for (v,) in res.iter_rows()) == list(range(10))
     # results at or under the cap are unaffected
     monkeypatch.setattr(engine_mod, "EMBEDDED_MAX_COLLECT_ROWS", 10)
     res = engine.execute_statement("SELECT * FROM fence_t ORDER BY a")
     assert [v for (v,) in res.rows] == list(range(10))
+
+
+@pytest.mark.parametrize("wire_cap", [None, 1])
+def test_streamed_rows_equal_embedded_rows(engine, spark, monkeypatch,
+                                           wire_cap):
+    """A streamed SELECT yields exactly the embedded path's rows, order
+    included, for the wire benchmark's TPC-H queries and view reads —
+    served from the fenced collect (default cap) and from the streaming
+    fallback past it (cap 1)."""
+    import os
+
+    from incresql_spark import engine as engine_mod
+    from incresql_spark.frequency import FreqTable
+    from incresql_spark.tpch import ORACLE
+    from wirebench import workloads as wl
+
+    from .conftest import SF_SMALL
+
+    for t in ("region", "nation", "supplier", "customer", "orders",
+              "lineitem"):
+        df = spark.read.parquet(os.path.join(SF_SMALL, f"{t}.parquet"))
+        table = FreqTable(spark, os.path.join(engine.warehouse, "default", t))
+        table.create(df.schema)
+        table.insert(df, assume_distinct=True)
+    for sql in (
+        f"CREATE MATERIALIZED VIEW mv_q3 AS {wl.MV_Q3}",
+        f"CREATE MATERIALIZED VIEW mv_supp AS {wl.MV_SUPP}",
+        "CREATE MATERIALIZED VIEW mv_flag AS "
+        + wl.MV_FLAG_OVER.format(src="mv_supp"),
+    ):
+        engine.execute_statement(sql)
+    if wire_cap is not None:
+        monkeypatch.setattr(engine_mod, "WIRE_COLLECT_ROWS", wire_cap)
+    queries = [" ".join(ORACLE[n].split()) for n in wl.TPCH_QUERIES]
+    queries += [s.sql for s in wl.MV_READS]
+    for sql in queries:
+        embedded = engine.execute_statement(sql).rows
+        assert embedded, sql
+        streamed = list(engine.execute_statement(sql, stream=True).iter_rows())
+        assert streamed == embedded, sql
 
 
 # ---- registration cache: only relations whose on-disk identity moved are

@@ -31,9 +31,16 @@ _B = T.StructType([T.StructField("bk", T.IntegerType()),
 def _persisted(spark) -> set[int]:
     """Ids of the RDDs persisted now.  Tests compare id sets, not counts:
     RDDs cached by earlier tests may be unpersisted while a test runs
-    (their Python frames are collected), which shrinks a count."""
-    return {int(k) for k in
-            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+    (their Python frames are collected), which shrinks a count.
+
+    The ids are read from SparkContext's own weak-valued registry, not
+    from ``getPersistentRDDs()``: that returns a map of the RDDs
+    themselves, which py4j keeps bound until its finalizer thread gets to
+    it (seen: 25 s).  Polled every second, each call's map keeps every
+    persisted RDD reachable, so the ContextCleaner never frees a dropped
+    one."""
+    registry = spark.sparkContext._jsc.sc().persistentRdds().underlying()
+    return {int(k) for k in registry.keySet().toArray()}
 
 
 def _build(spark, root, kind, levels):

@@ -338,6 +338,222 @@ def test_kill_reaches_streamed_select_between_jobs(server):
     b.close()
 
 
+def _statement_jobs(server, client, sql: str):
+    """(rows, Spark job ids) of one statement over the wire; the jobs are
+    those that ran in the connection's job group."""
+    sc = server.engine.spark.sparkContext
+    group = server.engine._group(client.thread_id)
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    _, rows = client.query(sql)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, set(sc.statusTracker().getJobIdsForGroup(group)) - before
+
+
+def test_sorted_view_read_runs_one_spark_job(server):
+    """A view read with ORDER BY and no LIMIT is served by one fenced
+    collect, under which the sort plans as TakeOrderedAndProject: one
+    Spark job, where a global sort streamed through toLocalIterator runs
+    three (the range sample, the sort exchange and the result)."""
+    c = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    c.query("CREATE TABLE jt (k INT, v INT)")
+    for s in range(3):
+        c.query("INSERT INTO jt VALUES "
+                + ",".join(f"({k}, {s})" for k in range(20)))
+    c.query("CREATE MATERIALIZED VIEW jmv AS "
+            "SELECT k, count(*) AS n, sum(v) AS s FROM jt GROUP BY k")
+    sql = "SELECT * FROM jmv ORDER BY k"
+    c.query(sql)  # re-registers the catalog the DDL left dirty
+    rows, jobs = _statement_jobs(server, c, sql)
+    assert rows == [(str(k), "3", "3") for k in range(20)]
+    assert len(jobs) == 1, sorted(jobs)
+    c.close()
+
+
+def test_unsorted_select_runs_fewer_jobs_than_partitions(server):
+    """An unsorted SELECT is one fenced collect, not one
+    toLocalIterator job per partition.  Over a generated range the fence
+    is dropped (the range has fewer rows than the cap) and the collect is
+    one job for all 32 partitions.  Over a table scanned in several
+    partitions Spark's take reads one partition, then up to four times
+    as many per job: at most 3 jobs for up to 25 partitions."""
+    c = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    rows, jobs = _statement_jobs(
+        server, c, "SELECT id FROM range(0, 1000, 1, 32)")
+    assert [int(r[0]) for r in rows] == list(range(1000))
+    assert len(jobs) == 1, sorted(jobs)
+
+    c.query("CREATE TABLE pt (k BIGINT, v BIGINT)")
+    # one INSERT: one segment, so the scan needs no merge exchange
+    c.query("INSERT INTO pt SELECT id, id % 7 FROM range(0, 8000, 1, 8)")
+    sql = "SELECT k, v FROM pt"
+    c.query(sql)  # re-registers the catalog the DDL left dirty
+    parts = server.engine._run_select(sql).rdd.getNumPartitions()
+    assert 4 <= parts <= 25, parts
+    rows, jobs = _statement_jobs(server, c, sql)
+    assert sorted(int(r[0]) for r in rows) == list(range(8000))
+    assert len(jobs) <= 3, (parts, sorted(jobs))
+    c.close()
+
+
+def _spy_streams(server, monkeypatch, hold=None):
+    """Count the DataFrame streams (toLocalIterator calls) the server
+    starts; ``hold(i)`` runs before each streamed row i is handed on."""
+    df_class = type(server.engine.spark.range(1))
+    orig = df_class.toLocalIterator
+    streams = []
+
+    def spy(self, *args, **kwargs):
+        streams.append(self)
+        for i, row in enumerate(orig(self, *args, **kwargs)):
+            if hold is not None:
+                hold(i)
+            yield row
+
+    monkeypatch.setattr(df_class, "toLocalIterator", spy)
+    return streams
+
+
+def test_select_past_the_wire_cap_streams_all_rows_in_order(
+        server, monkeypatch):
+    """A result over the fence is not cut: the collect is dropped and the
+    rows stream, all of them, in the query's order."""
+    from incresql_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "WIRE_COLLECT_ROWS", 5)
+    streams = _spy_streams(server, monkeypatch)
+    c = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    c.query("CREATE TABLE ot (a INT)")
+    c.query("INSERT INTO ot VALUES "
+            + ",".join(f"({i})" for i in (4, 9, 0, 7, 2, 5, 8, 1, 6, 3)))
+    _, rows = c.query("SELECT a FROM ot ORDER BY a DESC")
+    assert rows == [(str(i),) for i in range(9, -1, -1)]
+    assert len(streams) == 1
+    # at the cap the collect serves the rows: nothing streams
+    _, rows = c.query("SELECT a FROM ot ORDER BY a LIMIT 5")
+    assert rows == [(str(i),) for i in range(5)]
+    assert len(streams) == 1
+    c.close()
+
+
+def test_kill_reaches_select_streamed_past_the_wire_cap(server, monkeypatch):
+    """KILL lands on a result streamed past the fence: the stream is held
+    mid-resultset with no Spark job in flight, and the victim's
+    resultset still ends in an ERR packet."""
+    import threading
+
+    from incresql_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "WIRE_COLLECT_ROWS", 5)
+    reached, resume = threading.Event(), threading.Event()
+
+    def hold(i):
+        if i == 2:
+            reached.set()
+            resume.wait(60)
+
+    streams = _spy_streams(server, monkeypatch, hold)
+    a = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    b = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    a.query("CREATE TABLE kt (a INT)")
+    a.query("INSERT INTO kt VALUES " + ",".join(f"({i})" for i in range(10)))
+    try:
+        write_packet(a.sock, 0, b"\x03SELECT a FROM kt ORDER BY a")
+        _, first = read_packet(a.sock)
+        assert first[0] not in (0x00, 0xFF), first
+        assert reached.wait(60), "the stream never reached its third row"
+        assert b.query(f"KILL {a.thread_id}") == 0
+    finally:
+        resume.set()
+    assert len(streams) == 1
+    ncols, _ = a._lenenc(first, 0)
+    for _ in range(ncols):
+        read_packet(a.sock)
+    saw_err, n_rows = False, 0
+    while True:
+        _, pkt = read_packet(a.sock)
+        if pkt[0] == 0xFF:
+            saw_err = True
+            assert b"killed" in pkt or b"cancel" in pkt, pkt[:160]
+            break
+        if pkt[0] == 0xFE and len(pkt) < 9:
+            break  # natural end — the kill was lost
+        n_rows += 1
+    assert saw_err, f"no ERR packet after {n_rows} rows"
+    assert n_rows < 10
+    _, rows = a.query("SELECT 41 + 1")
+    assert rows == [("42",)]
+    a.close()
+    b.close()
+
+
+def _driver_result_bytes(sc, job_id: int) -> int:
+    """Bytes of task results the driver JVM received for one Spark job."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for stage in sc.statusTracker().getJobInfo(job_id).stageIds:
+        tasks = store.taskList(stage, 0, 1_000_000)
+        for i in range(tasks.size()):
+            metrics = tasks.apply(i).taskMetrics()
+            if metrics.isDefined():
+                total += metrics.get().resultSize()
+    return total
+
+
+def test_sorted_select_past_the_wire_cap_sends_the_driver_one_fence(
+        server, monkeypatch):
+    """A global sort past the fence: its fenced collect sends the driver
+    JVM at most the fence's rows in all, not the fence's rows from every
+    input partition (a top-K collected as planned), and the rows then
+    stream, all of them, in order."""
+    from incresql_spark import engine as engine_mod
+
+    cap = 1000
+    monkeypatch.setattr(engine_mod, "WIRE_COLLECT_ROWS", cap)
+    sc = server.engine.spark.sparkContext
+    c = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    # 8 partitions of 5000 rows; a row serializes to ~160 B
+    sql = ("SELECT id, sha2(CAST(id AS STRING), 512) AS h "
+           "FROM range(0, 40000, 1, 8) ORDER BY id DESC")
+    rows, jobs = _statement_jobs(server, c, sql)
+    assert [int(r[0]) for r in rows] == list(range(39999, -1, -1))
+    fence_job = min(jobs)
+    # per partition, 8 x 1001 rows would be ~1.3 MB
+    assert _driver_result_bytes(sc, fence_job) < 2 * (cap + 1) * 160
+    c.close()
+
+
+def test_wide_rows_past_the_wire_cap_keep_driver_memory_bounded(server):
+    """Wide rows under the real fence: 100k rows of ~2 KB each (~200 MB)
+    stream with a driver RSS delta under the same 200 MB bound as the
+    narrow-row test — the fence holds WIRE_COLLECT_ROWS such rows, not
+    the result."""
+    import resource
+
+    c = MiniClient(server.port, CLIENT_PROTOCOL_41 | CLIENT_DEPRECATE_EOF)
+    sql = "SELECT id, repeat('x', 2000) AS payload FROM range(100000)"
+    before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss  # KiB
+    write_packet(c.sock, 0, b"\x03" + sql.encode())
+    _, first = read_packet(c.sock)
+    assert first[0] not in (0x00, 0xFF), first
+    ncols, _ = c._lenenc(first, 0)
+    for _ in range(ncols):
+        read_packet(c.sock)
+    n = 0
+    while True:
+        _, pkt = read_packet(c.sock)
+        if pkt[0] == 0xFE and len(pkt) < 9:
+            break
+        assert pkt[0] != 0xFF, pkt[9:120]
+        n += 1
+    after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    assert n == 100_000
+    delta_mb = (after - before) / 1024
+    assert delta_mb < 200, f"driver RSS grew {delta_mb:.0f} MB"
+    c.close()
+
+
 def test_sketch_table_function_over_the_wire(server):
     """Round-15 wire surface: the sketch family is SQL-callable, so the
     MySQL front-end can serve estimates end-to-end — hll_distinct and

@@ -10,10 +10,14 @@ and an order-insensitive value hash.  Usage::
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
+
+#: the checkout this file sits in: its engine is the one checked
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -95,7 +99,7 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 
 def lint_main(sf_dir: str) -> int:
     """Lint every oracle's output types without starting Spark (fast)."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
 
     con = duckdb.connect()
@@ -195,7 +199,7 @@ def main() -> int:
         return lint_main(sf_dir)
     fingerprint = "--fingerprint" in sys.argv
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
     from incresql_spark.session import get_spark
 
